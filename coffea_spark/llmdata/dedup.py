@@ -36,32 +36,6 @@ _HOT_BROADCAST_CAP = 1_000_000
 #: spelling and stays on PPJoin (loudly)
 _DENSE_MAX_VOCAB = 16_000_000
 
-#: PPJoin document-frequency spelling: window count over the shingle key
-#: (one token-table exchange) vs groupBy + join-back (two). Module-level
-#: so the r13 A/B could toggle it in-process; the shipped value is the
-#: measured winner. Only reached when the broadcast-df probe below does
-#: not fire (or is disabled).
-_PPJOIN_DF_VIA_WINDOW = True
-
-#: adaptive BROADCAST spelling for the PPJoin document frequency: when
-#: the distinct (block, shingle) vocabulary measures at or below this
-#: many rows, the df table is broadcast-joined back onto the token
-#: table instead of window-counted — removing BOTH full token-table
-#: exchanges from the prefix build (the window's shingle-keyed exchange,
-#: and — whenever the input is already hash-partitioned on the id, as
-#: every floored fact-table read is — the doc-keyed groupBy exchange,
-#: which then reuses the input partitioning). DISABLED by default: the
-#: r13 session-5 interleaved A/B (BENCH_DFBC_AB.json, sf0.1, rows
-#: identical every rep) measured the spelling a consistent LOSS in
-#: local mode — jaccard_dupes wall min 6.89->7.39 s / JVM CPU med
-#: 116.6->131.9 s, jaccard_collapsed 13.73->15.94 / 197.8->209.1 —
-#: because the vocab hash-aggregate probe plus per-token broadcast
-#: hash lookups cost more CPU than the two process-local exchanges
-#: save. On a real cluster those exchanges cross a network; the
-#: spelling is kept reproducible behind this flag for a cluster-scale
-#: A/B in optimization round 2 (set e.g. 2_000_000 to re-enable).
-_PPJOIN_DF_BROADCAST_MAX: int | None = None
-
 
 # ---------------------------------------------------------------------------
 # exact
@@ -403,8 +377,8 @@ def _dense_block_route(
     # PHASE 1 — mass trigger only (two cheap aggs over cached tables +
     # one bounded count). The vocabulary stat is the expensive one (a
     # distinct-shingle shuffle), so it is NOT computed on the inert
-    # path: measured +3.7 s on the sf0.1 jaccard_dupes gate when it ran
-    # unconditionally, pure overhead on corpora that can never fire.
+    # path, where it is pure overhead on corpora that can never fire
+    # (BENCH_SKEW.md, two-phase trigger re-check).
     fired_mass = nstats.join(pmass, gcols).filter(fire).persist()
     if fired_mass.limit(1).count() == 0:
         fired_mass.unpersist()
@@ -605,9 +579,6 @@ def jaccard_join(
     exchange of the token table for the document frequency, the
     doc-keyed prefix groupBy exchange, then the prefix self-join and
     two verify joins. No step is quadratic in document frequency.
-    (An adaptive broadcast-df spelling that removes both token-table
-    exchanges exists behind ``_PPJOIN_DF_BROADCAST_MAX`` — measured a
-    consistent CPU loss in local mode, see the flag's comment.)
 
     DENSE-BLOCK GUARD (the Zipf-host skew dimension, BENCH_SKEW.md r11
     attribution): prefix filtering is powerless on a LOW-ENTROPY block —
@@ -655,10 +626,11 @@ def jaccard_join(
     four consumers (df count, prefix ranking, both verify sides) would
     otherwise each re-run the n-gram extraction, the single most
     expensive per-row step. When the dense guard fires, the fired-keys
-    routing frame is persisted too (and on the non-default broadcast-df
-    path, the tiny df table). Call ``spark.catalog.clearCache()``
+    routing frame is persisted too. Call ``spark.catalog.clearCache()``
     (or unpersist) when done with the result.
     """
+    from pyspark.sql.window import Window
+
     if not 0.0 < threshold <= 1.0:
         raise ValueError("threshold must be in (0, 1]")
     block_cols = block_cols or []
@@ -668,9 +640,9 @@ def jaccard_join(
         df.select(
             *bcols,
             F.col(id_col),
-            # char_ngrams already returns DISTINCT shingles — a second
-            # array_distinct re-hashed every ~L-element array per doc
-            # for nothing (removed in r13, value-identical)
+            # char_ngrams already returns DISTINCT shingles, so no
+            # outer array_distinct (pinned by
+            # test_jaccard_sets_already_distinct)
             char_ngrams(F.col(text_col), n).alias("_sh"),
         )
         .withColumn("_sz", F.size("_sh"))
@@ -678,65 +650,14 @@ def jaccard_join(
     )
 
     tok = sets.select(*block_cols, id_col, "_sz", F.explode("_sh").alias("shingle"))
-    key_cols = [*block_cols, "shingle"]
-    tok_df = None
-    declined_dfreq = None
-    if _PPJOIN_DF_BROADCAST_MAX is not None:
-        # adaptive broadcast-df: measure the vocabulary (one map-side
-        # combinable agg over the cached sets — this job also warms the
-        # sets cache), and when it fits the bound, broadcast the df
-        # table back onto tok. The token table is then NEVER exchanged
-        # before the prefix groupBy, which in turn reuses the input's
-        # hash(doc_id) partitioning when present (floored fact reads).
-        # Null-safe key equality keeps the intermediate prefix table
-        # row-identical to the window spelling for corpora with NULL
-        # block values (the final PAIR set is unaffected either way:
-        # the prefix self-join's plain block equality never pairs
-        # NULL-block docs — the operator contract, pinned by
-        # test_jaccard_df_broadcast_parity).
-        dfreq = (
-            tok.groupBy(*key_cols)
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .persist()
-        )
-        if dfreq.count() <= _PPJOIN_DF_BROADCAST_MAX:
-            d = dfreq.select(
-                *[F.col(c).alias(f"_k{i}") for i, c in enumerate(key_cols)],
-                "_df",
-            )
-            cond = tok[key_cols[0]].eqNullSafe(d["_k0"])
-            for i, c in enumerate(key_cols[1:], start=1):
-                cond = cond & tok[c].eqNullSafe(d[f"_k{i}"])
-            tok_df = tok.join(F.broadcast(d), cond).drop(
-                *[f"_k{i}" for i in range(len(key_cols))]
-            )
-        elif _PPJOIN_DF_VIA_WINDOW:
-            dfreq.unpersist()
-        else:
-            # declined probe + join-back spelling: the identical groupBy
-            # aggregation is already computed and persisted — reuse it
-            # instead of unpersisting and rebuilding from scratch (the
-            # cache is released with the rest via clearCache, per the
-            # docstring's ownership contract)
-            declined_dfreq = dfreq
-    if tok_df is None and _PPJOIN_DF_VIA_WINDOW:
-        from pyspark.sql.window import Window
-
-        # document frequency as an unordered window count over the
-        # shingle key: ONE exchange of the token table (partitionBy)
-        # instead of the groupBy-then-join-back spelling's two (the df
-        # aggregation shuffle plus the join shuffle of the same rows)
-        tok_df = tok.withColumn(
-            "_df",
-            F.count(F.lit(1)).over(Window.partitionBy(*block_cols, "shingle")),
-        )
-    elif tok_df is None:
-        dfreq = declined_dfreq
-        if dfreq is None:
-            dfreq = tok.groupBy(*block_cols, "shingle").agg(
-                F.count(F.lit(1)).alias("_df")
-            )
-        tok_df = tok.join(dfreq, [*block_cols, "shingle"])
+    # document frequency as an unordered window count over the shingle
+    # key: ONE exchange of the token table (partitionBy) instead of a
+    # groupBy-then-join-back spelling's two (the df aggregation shuffle
+    # plus the join shuffle of the same rows)
+    tok_df = tok.withColumn(
+        "_df",
+        F.count(F.lit(1)).over(Window.partitionBy(*block_cols, "shingle")),
+    )
     # re-assemble each doc's shingles sorted by (df, shingle) and keep
     # the prefix of length |s| - ceil(t*|s|) + 1, with each prefix
     # token's 1-based POSITION in the doc's full sorted order (feeds the
@@ -772,19 +693,17 @@ def jaccard_join(
     # consume these subtrees from multiple branches, several of them
     # broadcast builds that Spark launches CONCURRENTLY — against a cold
     # cache each build re-runs the whole explode -> df-count -> rank
-    # pipeline (verified in the physical plan / run timings: 2-4x the
-    # work, 30 s vs 12 s at sf0.1). The caches must be warm before the
-    # main query runs; WHICH job warms them depends on the guard:
+    # pipeline. The caches must be warm before the main query runs;
+    # WHICH job warms them depends on the guard:
     #
     # - guard on (default): the dense route's trigger-stat job reads
     #   nstats from ``sets`` and pmass from ``prefix``, and because both
     #   stats are full aggregations their map stages consume every
     #   cached partition before the first output row — the route job IS
-    #   the eager materialization. Two extra count() jobs ahead of it
-    #   were pure overhead (measured ~0.9 s of the sf0.1 gate wall,
-    #   r13 A/B: prefix+route 3.2-3.5 s eager vs 2.4-2.5 s lazy).
-    # - guard off (dense_min_mass=None): no route job runs, so the two
-    #   tiny count() jobs fill the caches as before.
+    #   the eager materialization, and extra count() jobs ahead of it
+    #   would be pure overhead (OPTIMIZATION_r13.md §2).
+    # - guard off (dense_min_mass=None): no route job runs, so two tiny
+    #   count() jobs fill the caches.
     dense_keys = dense_pairs = None
     if dense_min_mass is not None:
         dense_keys, dense_pairs = _dense_block_route(

@@ -468,19 +468,20 @@ def test_minhash_portable_positional_fp_parity(spark):
     assert 2 not in got  # shorter than n: no shingles, no signature row
 
 
-def test_jaccard_df_broadcast_parity(spark):
-    """The flag-gated adaptive broadcast-df spelling
-    (`_PPJOIN_DF_BROADCAST_MAX`, default None — measured a local-mode
-    CPU loss in BENCH_DFBC_AB.json, kept for a cluster-scale A/B in
-    optimization round 2) must return EXACTLY the shipped window
-    spelling's pairs. The corpus exercises the equivalence argument's
-    edges: NULL block values (the broadcast join uses null-safe key
-    equality so the intermediate prefix TABLE matches the window
-    spelling's row-for-row; the operator's CONTRACT — pinned here on
-    both spellings — is that NULL-block docs never PAIR, because the
-    prefix self-join's block equality is SQL equi-join semantics),
-    string ids, a short-text doc, and exact duplicates. Also pins
-    cache hygiene: the off-path leaves no extra persist."""
+def _persisted_ids(spark):
+    """Ids of the session's persistent RDDs. Earlier tests can leave
+    RDDs (e.g. from localCheckpoint) that clearCache() does not drop,
+    so cache-hygiene tests compare against a snapshot, not zero."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_jaccard_join_null_blocks_and_cache_release(spark):
+    """Operator contract on NULL block values: NULL-block docs never
+    PAIR, because the prefix self-join's block equality is SQL equi-join
+    semantics, while the non-NULL blocks produce the expected near-dup
+    pairs. The corpus also carries string ids, a short-text doc and
+    exact duplicates. Also pins cache hygiene: clearCache() releases
+    everything the call persisted."""
     rows = [
         ("a0", "en", "s0", "the quick brown fox jumps over the lazy dog"),
         ("a1", "en", "s0", "the quick brown fox jumps over the lazy cat"),
@@ -496,42 +497,18 @@ def test_jaccard_df_broadcast_parity(spark):
         rows, "doc_id string, lang string, source string, text string"
     )
 
-    def pairs():
-        return {
-            (r.id_a, r.id_b): r.jaccard
-            for r in dedup.jaccard_join(
-                df, 0.5, block_cols=["lang", "source"]
-            ).collect()
-        }
-
     spark.catalog.clearCache()
-    old = dedup._PPJOIN_DF_BROADCAST_MAX
-    try:
-        dedup._PPJOIN_DF_BROADCAST_MAX = None
-        base = pairs()
-        spark.catalog.clearCache()
-        assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
-        dedup._PPJOIN_DF_BROADCAST_MAX = 2_000_000
-        bc = pairs()
-        spark.catalog.clearCache()
-    finally:
-        dedup._PPJOIN_DF_BROADCAST_MAX = old
-    # operator contract: NULL-block docs never pair (equi-join
-    # semantics in the prefix self-join) — on EVERY spelling — while
-    # the non-NULL blocks produce the expected near-dup pairs
-    assert ("a0", "a3") in base and ("a0", "a1") in base
-    assert not any(k[0].startswith("b") for k in base)
-    assert bc == base
-    # vocab above the bound: probe runs, broadcast declines, window path
+    before = _persisted_ids(spark)
+    pairs = {
+        (r.id_a, r.id_b)
+        for r in dedup.jaccard_join(
+            df, 0.5, block_cols=["lang", "source"]
+        ).collect()
+    }
     spark.catalog.clearCache()
-    try:
-        dedup._PPJOIN_DF_BROADCAST_MAX = 3  # vocabulary far exceeds 3
-        declined = pairs()
-        spark.catalog.clearCache()
-    finally:
-        dedup._PPJOIN_DF_BROADCAST_MAX = old
-    assert declined == base
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+    assert _persisted_ids(spark) == before
+    assert ("a0", "a3") in pairs and ("a0", "a1") in pairs
+    assert not any(k[0].startswith("b") for k in pairs)
 
 
 def test_jaccard_sets_already_distinct(spark):
@@ -1123,11 +1100,11 @@ def test_collapse_jaccard_join_cache_release(spark):
     `reps` materializes. Contract: after the consumers finish, the only
     live persists are `reps` (the returned owner handle) plus
     jaccard_join's documented internals, and reps.unpersist() +
-    clearCache() leaves ZERO persistent RDDs."""
+    clearCache() leaves the persistent RDDs the test started with."""
     from coffea_spark.llmdata.dedup import collapse_jaccard_join
 
     spark.catalog.clearCache()
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+    before = _persisted_ids(spark)
 
     rows = [(i, "subscribe to our newsletter today friends", "en", "web") for i in range(6)]
     rows += [(10, "the quick brown fox jumps over the dog", "en", "web")]
@@ -1140,10 +1117,11 @@ def test_collapse_jaccard_join_cache_release(spark):
     # tagged + hot were released inside the function: what survives is
     # reps (ours to release) and jaccard_join's two documented internal
     # persists (sets/prefix over the rep table)
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 3
+    live = _persisted_ids(spark)
+    assert before <= live and len(live - before) == 3
     reps.unpersist()
     spark.catalog.clearCache()
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+    assert _persisted_ids(spark) == before
 
 
 def test_collapse_jaccard_join_broadcast_cap(spark, monkeypatch):
@@ -1854,6 +1832,29 @@ def test_bpe_apply_merges_matches_encoders(spark):
         F.sum(F.length(F.regexp_replace("text", r"\s+", ""))).alias("n")
     ).head().n
     assert n_chars == want
+
+
+def test_bpe_shared_words_table_matches_default(spark):
+    """A (freq, syms) table built once and passed as ``words=`` to both
+    train_bpe and encode_corpus_counts gives the same merges and the
+    same (token, cnt) rows as each building its own table."""
+    from coffea_spark.llmdata.bpe import (
+        encode_corpus_counts,
+        train_bpe,
+        word_syms_table,
+    )
+
+    df = spark.createDataFrame(
+        [("low lower lowest",), ("newer newest new",), ("wider low new",)],
+        "text string",
+    )
+    words = word_syms_table(df, "text").localCheckpoint(eager=True)
+    merges = train_bpe(df, "text", num_merges=6)
+    assert train_bpe(df, "text", num_merges=6, words=words) == merges
+    rows = sorted(encode_corpus_counts(df, merges, "text").collect())
+    assert sorted(
+        encode_corpus_counts(df, merges, "text", words=words).collect()
+    ) == rows
 
 
 def test_repetition_signals_hand_values(spark):
