@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from coffea_spark.queries import REGISTRY  # noqa: E402
+from coffea_spark.testing import FixtureMissing  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -31,4 +32,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: q.oracle for name, q in REGISTRY.items() if q.oracle is not None}
+    """Oracle SQL per gate; rows-only gates and gates whose oracle is
+    built from an absent reference fixture are omitted."""
+    out = {}
+    for name, q in REGISTRY.items():
+        try:
+            sql = q.sql
+        except FixtureMissing:
+            continue
+        if sql is not None:
+            out[name] = sql
+    return out

@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from coffea_spark.queries import REGISTRY  # noqa: E402
 from coffea_spark.session import get_spark  # noqa: E402
+from coffea_spark.testing import FixtureMissing  # noqa: E402
 
 
 def main() -> None:
@@ -58,6 +59,12 @@ def main() -> None:
             time.sleep(10.0)
             idle_waited += 10.0
             load_at_start = round(os.getloadavg()[0], 2)
+        if load_at_start > idle_gate:
+            print(
+                f"BENCH WARN: load {load_at_start} still above the idle gate "
+                f"{idle_gate} after {idle_waited:.0f} s; timings may be contended",
+                file=sys.stderr,
+            )
     spark = get_spark(app_name="coffea-spark-bench", cpus=cpus)
 
     # warm the JVM/codegen path once (tiny scan, not timed)
@@ -66,6 +73,7 @@ def main() -> None:
     times: dict[str, float] = {}
     spreads: dict[str, float] = {}
     errors: dict[str, str] = {}
+    skipped: dict[str, str] = {}
     for i, (name, q) in enumerate(REGISTRY.items()):
         samples: list[float] = []
         for _ in range(reps):
@@ -73,6 +81,10 @@ def main() -> None:
             try:
                 q.fn(spark, sf_dir).collect()
                 samples.append(time.perf_counter() - t0)
+            except FixtureMissing as exc:
+                skipped[name] = str(exc)
+                print(f"BENCH SKIP {name}: {exc}", file=sys.stderr)
+                break
             except Exception as exc:
                 # one broken query must not void the whole bench run
                 errors[name] = f"{type(exc).__name__}: {exc}"[:300]
@@ -127,6 +139,7 @@ def main() -> None:
         "reps": reps,
         "n_queries": len(times),
         "n_errors": len(errors),
+        "n_skipped": len(skipped),
         "load_at_launch": load_at_launch,
         "load_at_start": load_at_start,
         "idle_wait_sec": idle_waited,
@@ -137,6 +150,8 @@ def main() -> None:
     full["spread"] = spreads
     if errors:
         full["errors"] = {k: v[:80] for k, v in errors.items()}
+    if skipped:
+        full["skipped"] = skipped
     try:
         out_path = os.path.join(
             os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL_LATEST.json"

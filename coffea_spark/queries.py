@@ -33,6 +33,7 @@ from coffea_spark.hist import bucket, hist1d, hist1d_edges, hist2d
 from coffea_spark.joins import combinations
 from coffea_spark.schema import pad_none
 from coffea_spark.selection import PackedSelection
+from coffea_spark.testing import sample
 from coffea_spark.weights import Weights
 
 
@@ -130,12 +131,19 @@ def _parallelism_floor(
     return df
 
 
+def _prepare(spark: SparkSession) -> None:
+    """The driver runs the gates in ITS session: pin the confs results
+    depend on (all runtime-settable) and ship the package to Python
+    workers. Idempotent."""
+    from coffea_spark.session import ensure_worker_imports
+
+    ensure_worker_imports(spark)
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
 def _t(
     spark: SparkSession, sf_dir: str, name: str, floor: bool = True
 ) -> DataFrame:
-    # The driver runs these in ITS session; pin the confs results depend
-    # on (all runtime-settable) and ship the package to Python workers.
-    #
     # ``floor=False`` is the per-query opt-out from the parallelism
     # floor: a query whose FIRST operation over the fact table is itself
     # an exchange (groupBy/join/window) with only cheap scalar column
@@ -150,10 +158,7 @@ def _t(
     # save 0.15-1.2 s at sf0.1 while heavy-map gates (shingle
     # extraction, HOF physics math, Arrow matmuls) keep the floor —
     # removing it fleet-wide would LOSE a net 66 s.
-    from coffea_spark.session import ensure_worker_imports
-
-    ensure_worker_imports(spark)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _prepare(spark)
     if name == "events":
         return _read_events(spark, sf_dir, floor=floor)
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -195,16 +200,46 @@ def _normalize_event_ts(df: DataFrame) -> DataFrame:
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
+def _raw_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch read of events.parquet as stored. ``ts`` may be
+    TIMESTAMP(NANOS), which Spark reads only as long (nanosAsLong, a
+    no-op for other files); ``_normalize_event_ts`` converts it."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+
+
 def _read_events(
     spark: SparkSession, sf_dir: str, floor: bool = True
 ) -> DataFrame:
-    # nanosAsLong only affects TIMESTAMP(NANOS) files; harmless otherwise.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = os.path.join(sf_dir, "events.parquet")
-    df = _normalize_event_ts(spark.read.parquet(path))
+    df = _normalize_event_ts(_raw_events(spark, sf_dir))
     if not floor:
         return df
+    path = os.path.join(sf_dir, "events.parquet")
     return _parallelism_floor(spark, df, path, key=_FACT_KEYS["events"])
+
+
+def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events as a file stream with normalized ``ts``. readStream needs
+    its schema up front (the batch read's), and FileStreamSource wants
+    a glob, not a bare file path."""
+    _prepare(spark)
+    sch = _raw_events(spark, sf_dir).schema
+    raw = spark.readStream.schema(sch).parquet(os.path.join(sf_dir, "events.*"))
+    return _normalize_event_ts(raw)
+
+
+def _drain(df: DataFrame, name: str, mode: str) -> DataFrame:
+    """Run streaming ``df`` over every file present at start
+    (availableNow) into the memory sink ``name``, under the
+    state-partition cap, and return the sink's table."""
+    spark = df.sparkSession
+    with _stream_state_partitions(spark):
+        q = (
+            df.writeStream.format("memory").queryName(name)
+            .outputMode(mode).trigger(availableNow=True).start()
+        )
+        q.awaitTermination()
+    return spark.table(name)
 
 
 def _order_items(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1600,9 +1635,6 @@ FROM lineitem
 """
 
 
-_CLIB_PATH = "/root/reference/tests/samples/testSF2d.corr.json.gz"
-
-
 def q_correctionlib_sf(spark, sf_dir):
     """correctionlib gate (correctionlib_io): the reference's JSON-POG
     SF2d payload (multibinning, flow=clamp) evaluated over lineitem-derived
@@ -1611,7 +1643,7 @@ def q_correctionlib_sf(spark, sf_dir):
     a true value oracle, not a golden constant."""
     from coffea_spark.correctionlib_io import CorrectionSet
 
-    sf = CorrectionSet.from_file(_CLIB_PATH)["scalefactors_Tight_Electron"]
+    sf = CorrectionSet.from_file(sample("testSF2d.corr.json.gz"))["scalefactors_Tight_Electron"]
     li = _t(spark, sf_dir, "lineitem")
     eta = (F.col("l_tax") * 75.0) - 3.0        # spans past both eta edges
     pt = F.col("l_extendedprice") / 100.0      # spans past the top pt edge
@@ -1627,7 +1659,7 @@ def _sql_correctionlib_sf() -> str:
     import gzip as _gzip
     import json as _json
 
-    doc = _json.load(_gzip.open(_CLIB_PATH, "rt"))
+    doc = _json.load(_gzip.open(sample("testSF2d.corr.json.gz"), "rt"))
     node = doc["corrections"][0]["data"]
     e0 = ", ".join(repr(float(v)) for v in node["edges"][0])
     e1 = ", ".join(repr(float(v)) for v in node["edges"][1])
@@ -1670,12 +1702,11 @@ def q_root_scan(spark, sf_dir):
     from coffea_spark.schema import zip_collections
     from coffea_spark.vector import invariant_mass
 
-    samples = "/root/reference/tests/samples"
     cols = ["run", "nMuon", "Muon_pt", "Muon_eta", "Muon_phi", "Muon_mass", "Muon_charge"]
     rows = []
     for fmt, path, use_cols in (
-        ("ttree", f"{samples}/nano_dimuon.root", cols),
-        ("rntuple", f"{samples}/nano_dimuon_rntuple.root", cols[2:]),
+        ("ttree", sample("nano_dimuon.root"), cols),
+        ("rntuple", sample("nano_dimuon_rntuple.root"), cols[2:]),
     ):
         ev = zip_collections(read_root(spark, [path], columns=use_cols))
         pairs = combinations(F.col("Muon"), 2)
@@ -1721,7 +1752,7 @@ def q_root_source_scan(spark, sf_dir):
     ev = zip_collections(
         spark.read.format("root")
         .option("columns", cols)
-        .load("/root/reference/tests/samples/nano_dimuon.root")
+        .load(sample("nano_dimuon.root"))
     )
     pairs = combinations(F.col("Muon"), 2)
     masses = F.filter(
@@ -4668,12 +4699,7 @@ def q_stream_enrich(spark, sf_dir):
     every micro-batch task — no stream-side shuffle for the join — then
     aggregates event-time hourly windows per segment with a watermark.
     The oracle is the identical batch join+window in DuckDB."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, "events.parquet")
-    sch = spark.read.parquet(path).schema
-    raw = spark.readStream.schema(sch).parquet(os.path.join(sf_dir, "events.*"))
-    stream = _normalize_event_ts(raw)
+    stream = _event_stream(spark, sf_dir)
     dim = (
         _t(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") <= 150)
@@ -4688,17 +4714,7 @@ def q_stream_enrich(spark, sf_dir):
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
     )
-    qname = "stream_enrich_gate"
-    with _stream_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(qname).select(
+    return _drain(agg, "stream_enrich_gate", "complete").select(
         F.col("window.start").cast("long").alias("wstart"),
         "c_mktsegment", "n", "sum_value",
     )
@@ -4721,31 +4737,13 @@ def q_stream_windowed_hist(spark, sf_dir):
     batch oracle, so the driver can hash-compare a STREAMING result."""
     from coffea_spark.streaming import windowed_hist
 
-    # schema must be declared up front for readStream; reuse the batch
-    # reader's (events.parquet stores ns timestamps -> read as long)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, "events.parquet")
-    sch = spark.read.parquet(path).schema
-    # FileStreamSource wants a directory/glob, not a bare file path
-    raw = spark.readStream.schema(sch).parquet(os.path.join(sf_dir, "events.*"))
-    stream = _normalize_event_ts(raw)
     agg = windowed_hist(
-        stream, F.col("value"), nbins=25, lo=0.0, hi=500.0,
+        _event_stream(spark, sf_dir), F.col("value"),
+        nbins=25, lo=0.0, hi=500.0,
         ts_col="ts", window="1 hour", watermark="2 hours",
         weight=F.col("value"),
     )
-    qname = "stream_hist_gate"
-    with _stream_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(qname).select(
+    return _drain(agg, "stream_hist_gate", "complete").select(
         F.col("window.start").cast("long").alias("wstart"),
         "bin",
         "n",
@@ -5043,7 +5041,7 @@ def q_physlite_real_links(spark, sf_dir):
     ``sf_dir`` is unused (the input is the binary fixture)."""
     from coffea_spark.root_reader import read_root
 
-    path = "/root/reference/tests/samples/PHYSLITE_example.root"
+    path = sample("PHYSLITE_example.root")
     links_col = "PrimaryVerticesAuxDyn.trackParticleLinks"
     qop_col = "InDetTrackParticlesAuxDyn.qOverP"
     ev = read_root(spark, [path], columns=[qop_col, links_col])
@@ -5112,7 +5110,7 @@ def q_physlite_triple_nested(spark, sf_dir):
     vector). ``sf_dir`` is unused (the input is the binary fixture)."""
     from coffea_spark.root_reader import read_root
 
-    path = "/root/reference/tests/samples/PHYSLITE_example.root"
+    path = sample("PHYSLITE_example.root")
     idx_col = "METAssoc_AnalysisMETAux.overlapIndices"
     typ_col = "METAssoc_AnalysisMETAux.overlapTypes"
     ev = read_root(spark, [path], columns=[idx_col, typ_col])
@@ -5159,7 +5157,7 @@ def q_physlite_map_strings(spark, sf_dir):
     the same framing. ``sf_dir`` unused (binary fixture input)."""
     from coffea_spark.root_reader import read_root
 
-    path = "/root/reference/tests/samples/PHYSLITE_example.root"
+    path = sample("PHYSLITE_example.root")
     kcol, vcol = (
         "EventInfoAuxDyn.detDescrTags.first",
         "EventInfoAuxDyn.detDescrTags.second",
@@ -5200,7 +5198,7 @@ def q_edm4hep_real_links(spark, sf_dir):
     ``sf_dir`` is unused (the input is the binary fixture)."""
     from coffea_spark.root_reader import read_root
 
-    path = "/root/reference/tests/samples/p8_ee_WW_ecm240_edm4hep.root"
+    path = sample("p8_ee_WW_ecm240_edm4hep.root")
     cols = [
         "Particle.parents_begin", "Particle.parents_end",
         "_Particle_parents.index", "Particle.PDG",
@@ -5263,7 +5261,7 @@ def q_treemaker_real_nesting(spark, sf_dir):
     from coffea_spark.root_reader import read_root
     from coffea_spark.schemas_variants import nest_by_counts
 
-    path = "/root/reference/tests/samples/treemaker.root"
+    path = sample("treemaker.root")
     ev = read_root(
         spark, [path],
         columns=["JetsAK8_subjetsCounts", "JetsAK8_subjets.fCoordinates.fPt"],
@@ -5315,7 +5313,7 @@ def q_scouting_real_scan(spark, sf_dir):
 
     from coffea_spark.root_reader import read_root
 
-    path = "/root/reference/tests/samples/scouting_nano.root"
+    path = sample("scouting_nano.root")
     ev = read_root(
         spark, [path],
         columns=["event", "nScoutingJet", "ScoutingJet_pt",
@@ -5358,7 +5356,7 @@ def q_pfnano_real_xref(spark, sf_dir):
     from coffea_spark.joins import gather_local
     from coffea_spark.root_reader import read_root
 
-    path = "/root/reference/tests/samples/pfnano.root"
+    path = sample("pfnano.root")
     ev = read_root(
         spark, [path], tree="Events",
         columns=["JetPFCands_jetIdx", "JetPFCands_pFCandsIdx",
@@ -5425,7 +5423,7 @@ def q_pfnano_objects(spark, sf_dir):
     from coffea_spark.root_reader import read_nanoevents
     from coffea_spark.schema import PFNanoAODSchema
 
-    path = "/root/reference/tests/samples/pfnano.root"
+    path = sample("pfnano.root")
     ev = read_nanoevents(
         spark, [path], tree="Events",
         columns=["JetPFCands_jetIdx", "JetPFCands_pFCandsIdx",
@@ -5482,7 +5480,7 @@ def q_scouting_objects(spark, sf_dir):
     from coffea_spark.root_reader import read_nanoevents
     from coffea_spark.schema import ScoutingNanoAODSchema
 
-    path = "/root/reference/tests/samples/scouting_nano.root"
+    path = sample("scouting_nano.root")
     ev = read_nanoevents(spark, [path], spec=ScoutingNanoAODSchema)
     jets = F.col("ScoutingJet")
     lead_pt = F.element_at(jets, 1)["pt"].cast("double")
@@ -6348,26 +6346,14 @@ def q_stream_dedup(spark, sf_dir):
     (no watermark eviction) so the kept set equals batch DISTINCT."""
     from coffea_spark.streaming import stream_dedup
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, "events.parquet")
-    sch = spark.read.parquet(path).schema
-    raw = spark.readStream.schema(sch).parquet(os.path.join(sf_dir, "events.*"))
-    stream = _normalize_event_ts(raw).withColumn(
+    stream = _event_stream(spark, sf_dir).withColumn(
         "dup_key", F.col("event_id") % 211
     )
     out = stream_dedup(
         stream, ["dup_key"], ts_col="ts", within_watermark=False
     )
-    qname = "stream_dedup_gate"
-    with _stream_state_partitions(spark):
-        q = (
-            out.select("dup_key")
-            .writeStream.format("memory").queryName(qname)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    per_key = spark.table(qname).groupBy("dup_key").agg(
+    kept = _drain(out.select("dup_key"), "stream_dedup_gate", "append")
+    per_key = kept.groupBy("dup_key").agg(
         F.count(F.lit(1)).alias("_c")
     )
     return per_key.agg(
@@ -6391,25 +6377,12 @@ def q_stream_cutflow(spark, sf_dir):
     complete-mode memory sink — oracle-checked like the batch form."""
     from coffea_spark.streaming import windowed_cutflow
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, "events.parquet")
-    sch = spark.read.parquet(path).schema
-    raw = spark.readStream.schema(sch).parquet(os.path.join(sf_dir, "events.*"))
-    stream = _normalize_event_ts(raw)
     agg = windowed_cutflow(
-        stream,
+        _event_stream(spark, sf_dir),
         {"mid": F.col("value") > 50.0, "high": F.col("value") > 200.0},
         ts_col="ts", window="6 hours", watermark="12 hours",
     )
-    qname = "stream_cutflow_gate"
-    with _stream_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory").queryName(qname)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(qname).select(
+    return _drain(agg, "stream_cutflow_gate", "complete").select(
         F.col("window.start").cast("long").alias("wstart"),
         "initial", "onecut_mid", "cutflow_mid", "onecut_high", "cutflow_high",
     )
@@ -6436,22 +6409,9 @@ def q_stream_sessions(spark, sf_dir):
     closes only when the next event is > gap after the last."""
     from coffea_spark.streaming import sessionized
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, "events.parquet")
-    sch = spark.read.parquet(path).schema
-    raw = spark.readStream.schema(sch).parquet(os.path.join(sf_dir, "events.*"))
-    stream = _normalize_event_ts(raw)
-    agg = sessionized(stream, key="user_id", ts_col="ts", gap="30 minutes",
-                      watermark="1 hour")
-    qname = "stream_sessions_gate"
-    with _stream_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory").queryName(qname)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(qname).select(
+    agg = sessionized(_event_stream(spark, sf_dir), key="user_id", ts_col="ts",
+                      gap="30 minutes", watermark="1 hour")
+    return _drain(agg, "stream_sessions_gate", "complete").select(
         "user_id",
         F.col("session_window.start").cast("long").alias("sstart"),
         "n_events",
@@ -6489,26 +6449,12 @@ def q_stream_interval_join(spark, sf_dir):
     predicate (the left row matches itself — included on both sides)."""
     from coffea_spark.streaming import stream_interval_join
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, "events.parquet")
-    sch = spark.read.parquet(path).schema
-    raw_l = spark.readStream.schema(sch).parquet(os.path.join(sf_dir, "events.*"))
-    raw_r = spark.readStream.schema(sch).parquet(os.path.join(sf_dir, "events.*"))
-    left = _normalize_event_ts(raw_l).filter(F.col("value") > 300.0)
-    right = _normalize_event_ts(raw_r)
+    left = _event_stream(spark, sf_dir).filter(F.col("value") > 300.0)
     joined = stream_interval_join(
-        left, right, key="user_id", ts_col="ts",
+        left, _event_stream(spark, sf_dir), key="user_id", ts_col="ts",
         lower="10 minutes", upper="10 minutes", watermark="30 minutes",
     )
-    qname = "stream_ij_gate"
-    with _stream_state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory").queryName(qname)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    return spark.table(qname).groupBy(
+    return _drain(joined, "stream_ij_gate", "append").groupBy(
         (F.col("user_id") % 7).alias("grp")
     ).agg(
         F.count(F.lit(1)).alias("n_matches"),
@@ -6906,10 +6852,6 @@ FROM v GROUP BY l_returnflag
 """
 
 
-_EA_PATH = "/root/reference/tests/samples/photon_id.ea.txt"
-_L5_PATH = "/root/reference/tests/samples/Winter14_V8_MC_L5Flavor_AK5Calo.txt"
-
-
 def q_effarea_l5flavor(spark, sf_dir):
     """EGM effective areas (.ea.txt -> one 1-D dense lookup per value
     column; reference txt_converters.py:442-534 + the extractor 'ea'
@@ -6923,8 +6865,8 @@ def q_effarea_l5flavor(spark, sf_dir):
     TFormula, generated from the SAME parsed tables."""
     from coffea_spark.lookup import extractor
 
-    ea = extractor(_EA_PATH)
-    l5 = extractor(_L5_PATH)
+    ea = extractor(sample("photon_id.ea.txt"))
+    l5 = extractor(sample("Winter14_V8_MC_L5Flavor_AK5Calo.txt"))
     gj = l5["Winter14_V8_MC_L5Flavor_AK5Calo_gJ"]
     bj = l5["Winter14_V8_MC_L5Flavor_AK5Calo_bJ"]
     li = _t(spark, sf_dir, "lineitem")
@@ -6956,7 +6898,7 @@ def _sql_effarea_l5flavor() -> str:
     eta bin with pt clamped to the row's validity range."""
     from coffea_spark.correction_files import read_ea_txt, read_jec_txt_sections
 
-    ea = read_ea_txt(_EA_PATH)
+    ea = read_ea_txt(sample("photon_id.ea.txt"))
 
     def ea_case(name: str, var: str) -> str:
         lk = ea[name]
@@ -6970,7 +6912,7 @@ def _sql_effarea_l5flavor() -> str:
             + f" ELSE {float(vals[-1])!r} END AS DOUBLE)"
         )
 
-    secs = read_jec_txt_sections(_L5_PATH)
+    secs = read_jec_txt_sections(sample("Winter14_V8_MC_L5Flavor_AK5Calo.txt"))
 
     def l5_case(comp: str) -> str:
         t = secs[f"Winter14_V8_MC_L5Flavor_AK5Calo_{comp}"]
@@ -8687,12 +8629,13 @@ def q_root_stream_scan(spark, sf_dir):
 
     from coffea_spark.datasource import register_root_source
 
+    inputs = [sample(n) for n in ("nano_dimuon.root", "nano_dy.root")]
     register_root_source(spark)
     work = tempfile.mkdtemp(prefix="root_stream_gate_")
     src = os.path.join(work, "in")
     os.makedirs(src)
-    for n in ("nano_dimuon.root", "nano_dy.root"):
-        shutil.copy(f"/root/reference/tests/samples/{n}", os.path.join(src, n))
+    for path in inputs:
+        shutil.copy(path, src)
     qname = "root_stream_gate"
     with _stream_state_partitions(spark):
         q = (
@@ -9640,23 +9583,11 @@ def q_stream_ewma(spark, sf_dir):
     reproduces: ewma_n = (1-a)^(n-1) v_1 + sum_{j=2..n} a (1-a)^(n-j) v_j."""
     from coffea_spark.streaming import stateful_ewma
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, "events.parquet")
-    sch = spark.read.parquet(path).schema
-    raw = spark.readStream.schema(sch).parquet(os.path.join(sf_dir, "events.*"))
-    stream = _normalize_event_ts(raw).filter(F.col("user_id") % 97 == 0)
+    stream = _event_stream(spark, sf_dir).filter(F.col("user_id") % 97 == 0)
     agg = stateful_ewma(stream, "user_id", alpha=0.25, watermark="1 hour",
                         tiebreak_cols=["event_id"])
-    qname = "stream_ewma_gate"
-    with _stream_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory").queryName(qname)
-            .outputMode("update").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
     # update mode appends one row per key per batch: keep each key's last
-    latest = spark.table(qname).groupBy("user_id").agg(
+    latest = _drain(agg, "stream_ewma_gate", "update").groupBy("user_id").agg(
         F.max_by(F.struct("n_events", "ewma"), "n_events").alias("s")
     )
     return latest.select(
@@ -9711,7 +9642,15 @@ SELECT (SELECT count(*) FROM hits) AS n_contaminated,
 @dataclass
 class Query:
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # ANSI SQL for DuckDB; None -> rows-only check
+    # ANSI SQL for DuckDB, or a builder of it when the SQL embeds a
+    # fixture file's contents; None -> rows-only check
+    oracle: str | Callable[[], str] | None
+
+    @property
+    def sql(self) -> str | None:
+        """The oracle SQL, built here when ``oracle`` is a builder (it
+        raises ``FixtureMissing`` when its fixture is absent)."""
+        return self.oracle() if callable(self.oracle) else self.oracle
 
 
 # Registry order is SEMANTIC within each rotation group: queries gate
@@ -9781,12 +9720,12 @@ REGISTRY: dict[str, Query] = {
     "boost_cosstar": Query(q_boost_cosstar, SQL_BOOST_COSSTAR),
     "c4_gopher_filters": Query(q_c4_gopher_filters, SQL_C4_GOPHER),
     "categorical_counts": Query(q_categorical_counts, SQL_CATEGORICAL_COUNTS),
-    "correctionlib_sf": Query(q_correctionlib_sf, _sql_correctionlib_sf()),
+    "correctionlib_sf": Query(q_correctionlib_sf, _sql_correctionlib_sf),
     "cube_counts": Query(q_cube_counts, SQL_CUBE),
     "dense_lookup": Query(q_dense_lookup, SQL_DENSE_LOOKUP),
     "doc_chunking": Query(q_doc_chunking, SQL_DOC_CHUNKING),
     "edm4hep_real_links": Query(q_edm4hep_real_links, SQL_EDM4HEP_REAL_LINKS),
-    "effarea_l5flavor": Query(q_effarea_l5flavor, _sql_effarea_l5flavor()),
+    "effarea_l5flavor": Query(q_effarea_l5flavor, _sql_effarea_l5flavor),
     "events_hourly": Query(q_events_hourly, SQL_EVENTS_HOURLY),
     "filtered_agg": Query(q_filtered_agg, SQL_FILTERED_AGG),
     "flac_features": Query(q_flac_features, SQL_AUDIO_FEATURES),

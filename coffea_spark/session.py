@@ -9,9 +9,12 @@ memory knobs. Defaults follow the public Spark tuning guidance:
 - session timezone pinned to UTC so results compare bit-for-bit against
   DuckDB oracles (duckdb timestamps are UTC-naive)
 - nested schema pruning on, so selecting ``Muon.pt`` out of an
-  array<struct> column reads only that parquet leaf (the Spark-native
-  equivalent of the reference's virtual-buffer column pruning,
-  nanoevents/factory.py:808-835)
+  array<struct> column STORED as such reads only that parquet leaf (the
+  Spark-native equivalent of the reference's virtual-buffer column
+  pruning, nanoevents/factory.py:808-835). It does not reach a
+  collection zipped at read time from flat ``Muon_*`` branches: the
+  zip binds every branch, so touching ``Muon.pt`` reads all of them
+  (ROADMAP item 4)
 """
 
 from __future__ import annotations

@@ -4,11 +4,15 @@ Mirrors the shape of the reference's test samples (tests/samples/nano_dy.root
 and tests/dummy_distributions.py:5-27) without any ROOT dependency: a jagged
 NanoAOD-like event table generated with seeded numpy, delivered both as
 pandas (the numpy oracle side) and as a Spark DataFrame (the engine side).
+
+Also the one place that locates the reference's own binary samples
+(FIXTURES.md F-ROOT): ``SAMPLES`` and ``sample(name)``.
 """
 
 from __future__ import annotations
 
 import math
+import os
 
 import numpy as np
 import pandas as pd
@@ -17,6 +21,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 MUON_MASS = 0.10566
+
+#: coffea's own binary test samples (FIXTURES.md F-ROOT). Optional: the
+#: gates and tests that read them skip when the directory is absent.
+SAMPLES = "/root/reference/tests/samples"
+
+
+class FixtureMissing(FileNotFoundError):
+    """A reference sample under ``SAMPLES`` is absent."""
+
+
+def sample(name: str) -> str:
+    """Path of the reference sample ``name``; raises ``FixtureMissing``
+    naming the file when it is absent."""
+    path = os.path.join(SAMPLES, name)
+    if not os.path.exists(path):
+        raise FixtureMissing(f"reference fixture absent: {path}")
+    return path
 
 
 def preloaded_df(spark: SparkSession, columns: dict) -> DataFrame:

@@ -5,6 +5,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from coffea_spark import testing  # noqa: E402
 from coffea_spark.session import get_spark  # noqa: E402
 
 
@@ -24,6 +25,20 @@ def pytest_configure(config):
         "memory_pressure: shuffle-heavy gates under tight real-executor "
         "memory at sf1 (spawns a local-cluster subprocess JVM; slow)",
     )
+    config.addinivalue_line(
+        "markers",
+        "samples: reads coffea's binary test samples (testing.SAMPLES); "
+        "skipped when they are absent",
+    )
+
+
+def pytest_collection_modifyitems(config, items):
+    if os.path.isdir(testing.SAMPLES):
+        return
+    skip = pytest.mark.skip(reason=f"reference fixtures absent: {testing.SAMPLES}")
+    for item in items:
+        if "samples" in item.keywords:
+            item.add_marker(skip)
 
 
 @pytest.fixture(scope="session")

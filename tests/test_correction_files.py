@@ -9,7 +9,6 @@ against a straight numpy reimplementation sharing only the parsed table.
 
 import gzip
 import math
-import os
 
 import numpy as np
 import pyspark.sql.functions as F
@@ -22,8 +21,7 @@ from coffea_spark.correction_files import (
     read_junc_txt,
 )
 from coffea_spark.lookup import extractor
-
-SAMPLES = "/root/reference/tests/samples"
+from coffea_spark.testing import SAMPLES
 
 _NP_ENV = {
     "greatest": np.maximum,
@@ -183,12 +181,7 @@ def test_btag_ul_format_rejected(tmp_path):
 # real reference sample files (format parity; skipped when absent)
 # ---------------------------------------------------------------------------
 
-needs_samples = pytest.mark.skipif(
-    not os.path.isdir(SAMPLES), reason="reference samples not available"
-)
-
-
-@needs_samples
+@pytest.mark.samples
 def test_jec_2d_real_file(spark, points):
     table = read_jec_txt(f"{SAMPLES}/Fall17_17Nov2017_V32_MC_L2Relative_AK4PFPuppi.jec.txt")
     assert table.signature == ["JetEta", "JetPt"]
@@ -199,7 +192,7 @@ def test_jec_2d_real_file(spark, points):
     assert np.isfinite(got).all() and (got > 0).all()
 
 
-@needs_samples
+@pytest.mark.samples
 def test_junc_real_file(spark, points):
     tables = read_junc_txt(f"{SAMPLES}/Fall17_17Nov2017_V32_MC_Uncertainty_AK4PFPuppi.junc.txt")
     (table,) = tables.values()
@@ -212,7 +205,7 @@ def test_junc_real_file(spark, points):
     np.testing.assert_allclose(got_dn, want_dn, rtol=1e-9)
 
 
-@needs_samples
+@pytest.mark.samples
 def test_junc_multi_component(spark):
     tables = read_junc_txt(
         f"{SAMPLES}/Regrouped_Fall17_17Nov2017_V32_MC_UncertaintySources_AK4PFchs.junc.txt"
@@ -220,7 +213,7 @@ def test_junc_multi_component(spark):
     assert {"FlavorQCD", "RelativeBal", "Absolute"} <= set(tables)
 
 
-@needs_samples
+@pytest.mark.samples
 def test_ea_real_file(spark, points):
     """photon_id.ea.txt: one 1-D DenseLookup per value column, named
     stem_col (reference txt_converters.py:442-534 +
@@ -249,7 +242,7 @@ def test_ea_real_file(spark, points):
     np.testing.assert_allclose(got, lk.values[idx], rtol=0)
 
 
-@needs_samples
+@pytest.mark.samples
 def test_l5flavor_sections_real_file(spark, points):
     """Sectioned [flavor] JEC file -> one standard JECTable per section,
     named stem_flavor (reference convert_l5flavor_jes_txt_file,
@@ -272,7 +265,7 @@ def test_l5flavor_sections_real_file(spark, points):
         assert np.isfinite(got).all()
 
 
-@needs_samples
+@pytest.mark.samples
 def test_extractor_ea_and_sectioned_dispatch():
     assert "photon_id_EA_CHad" in extractor(f"{SAMPLES}/photon_id.ea.txt")
     assert "Winter14_V8_MC_L5Flavor_AK5Calo_gJ" in extractor(
@@ -280,14 +273,14 @@ def test_extractor_ea_and_sectioned_dispatch():
     )
 
 
-@needs_samples
+@pytest.mark.samples
 def test_jersf_real_file(spark):
     table = read_jersf_txt(f"{SAMPLES}/Autumn18_V7b_DATA_SF_AK4PF.jersf.txt")
     assert len(table.edges) == 2
     np.testing.assert_allclose(table.central, [1.0])
 
 
-@needs_samples
+@pytest.mark.samples
 def test_btag_real_file(spark):
     table = read_btag_csv(f"{SAMPLES}/DeepCSV_102XSF_V1.btag.csv.gz")
     assert table.discriminator == "DeepCSV"
@@ -411,7 +404,7 @@ def test_histo_json_demo(spark):
     assert [r.e for r in got] == [0.051, 0.040, 0.035, 0.051]
 
 
-@needs_samples
+@pytest.mark.samples
 def test_histo_json_reference_fixture(spark):
     from coffea_spark.correction_files import read_histo_json
 

@@ -13,11 +13,9 @@ from pyspark.sql import functions as F
 
 from coffea_spark.correctionlib_io import CorrectionSet
 
-SAMPLES = "/root/reference/tests/samples"
+from coffea_spark.testing import SAMPLES
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(SAMPLES), reason="reference fixtures not available"
-)
+pytestmark = pytest.mark.samples
 
 
 def test_multibinning_reference_parity(spark):

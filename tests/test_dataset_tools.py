@@ -2,8 +2,6 @@
 dataset_tools/preprocess.py:1148, splitting.py:163; Rucio/DAS catalog
 queries stay out of scope — discovery is filesystem-native)."""
 
-import os
-
 import pytest
 
 from coffea_spark.dataset_tools import (
@@ -12,9 +10,9 @@ from coffea_spark.dataset_tools import (
     preprocess,
     split_fileset,
 )
+from coffea_spark.testing import SAMPLES
 
 SF = "/root/testdata/sf0.001"
-SAMPLES = "/root/reference/tests/samples"
 
 
 def test_discover_and_preprocess_parquet(spark):
@@ -37,9 +35,7 @@ def test_discover_and_preprocess_parquet(spark):
         assert meta["uuid"]
 
 
-@pytest.mark.skipif(
-    not os.path.isdir(SAMPLES), reason="reference fixtures not available"
-)
+@pytest.mark.samples
 def test_preprocess_root_align_clusters():
     fs = discover_fileset({"dy": f"{SAMPLES}/nano_dimuon.root"})
     avail, upd = preprocess(fs, step_size=16, align_clusters=True)
@@ -91,9 +87,7 @@ def test_read_fileset_mixed_formats(spark):
     assert dfs["orders"].select("dataset").first()[0] == "orders"
 
 
-@pytest.mark.skipif(
-    not os.path.isdir(SAMPLES), reason="reference fixtures not available"
-)
+@pytest.mark.samples
 def test_read_fileset_root(spark):
     from pyspark.sql import functions as F
 
@@ -208,6 +202,7 @@ def test_data_discovery_fileset_preprocess(spark, tmp_path):
             assert finfo["steps"][0][0] == 0
 
 
+@pytest.mark.samples
 def test_preprocess_missing_tree_and_malformed_parquet():
     """The reference's bad-fileset taxonomy (test_local_executors.py:30-70):
     a treename present in one file but not another, and a malformed

@@ -34,7 +34,8 @@ import zlib
 import numpy as np
 import pytest
 
-SAMPLES = "/root/reference/tests/samples"
+from coffea_spark.testing import sample
+
 
 # every reader may legitimately surface these on corrupt input; anything
 # else (IndexError, KeyError, struct.error, OverflowError...) is a
@@ -290,7 +291,7 @@ def test_warc_gzip_member_corruption_raises(warc_blob):
 
 @pytest.fixture(scope="module")
 def root_blob():
-    blob = open(f"{SAMPLES}/treemaker.root", "rb").read()
+    blob = open(sample("treemaker.root"), "rb").read()
     return blob
 
 
@@ -305,12 +306,14 @@ def _try_read(path):
     return r.entries
 
 
+@pytest.mark.samples
 def test_root_clean_read(root_blob, tmp_path):
     p = tmp_path / "clean.root"
     p.write_bytes(root_blob)
     assert _try_read(str(p)) == 10
 
 
+@pytest.mark.samples
 def test_root_bitflips_fail_loud_or_read(root_blob, tmp_path):
     """Flips anywhere in the file: RootFileError/ValueError (framing),
     zlib/LZMA integrity errors (compressed baskets), or a successful
@@ -329,6 +332,7 @@ def test_root_bitflips_fail_loud_or_read(root_blob, tmp_path):
             p.unlink()
 
 
+@pytest.mark.samples
 def test_root_truncation_raises(root_blob, tmp_path):
     rng = np.random.default_rng(41)
     for i, cut in enumerate(rng.integers(100, len(root_blob) - 1, 30)):
@@ -339,6 +343,7 @@ def test_root_truncation_raises(root_blob, tmp_path):
         p.unlink()
 
 
+@pytest.mark.samples
 def test_root_header_magic_damage_raises(root_blob, tmp_path):
     p = tmp_path / "magic.root"
     p.write_bytes(b"xoot" + root_blob[4:])
@@ -353,7 +358,7 @@ def test_root_header_magic_damage_raises(root_blob, tmp_path):
 
 @pytest.fixture(scope="module")
 def rntuple_blob():
-    return open(f"{SAMPLES}/nano_dimuon_rntuple.root", "rb").read()
+    return open(sample("nano_dimuon_rntuple.root"), "rb").read()
 
 
 def _try_read_rntuple(path):
@@ -365,12 +370,14 @@ def _try_read_rntuple(path):
     return r.entries
 
 
+@pytest.mark.samples
 def test_rntuple_clean_read(rntuple_blob, tmp_path):
     p = tmp_path / "clean.root"
     p.write_bytes(rntuple_blob)
     assert _try_read_rntuple(str(p)) > 0
 
 
+@pytest.mark.samples
 def test_rntuple_bitflips_fail_loud_or_read(rntuple_blob, tmp_path):
     """Envelope/page corruption: RootFileError (framing), compression-
     codec integrity errors, or a clean read when the flip lands in dead
@@ -389,6 +396,7 @@ def test_rntuple_bitflips_fail_loud_or_read(rntuple_blob, tmp_path):
             p.unlink()
 
 
+@pytest.mark.samples
 def test_rntuple_truncation_raises(rntuple_blob, tmp_path):
     rng = np.random.default_rng(47)
     for i, cut in enumerate(rng.integers(100, len(rntuple_blob) - 1, 30)):

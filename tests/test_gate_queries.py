@@ -97,8 +97,27 @@ def test_new_gate_query_matches_oracle(spark, oracle_con, name):
     q = REGISTRY[name]
     sdf = q.fn(spark, SF_DIR)
     srows = [tuple(r) for r in sdf.collect()]
-    ores = oracle_con.execute(q.oracle)
+    ores = oracle_con.execute(q.sql)
     orows = ores.fetchall()
     ocols = [d[0] for d in ores.description]
     assert sorted(sdf.columns) == sorted(ocols)
     assert _canon(srows, sdf.columns) == _canon(orows, ocols)
+
+
+def test_registry_is_hermetic_without_samples(spark, tmp_path, monkeypatch):
+    """With the reference samples absent, a fixture gate raises the typed
+    FixtureMissing when run, and oracle_sql() drops only the two gates
+    whose oracle SQL embeds a sample's contents."""
+    from __spark_entry__ import oracle_sql
+    from coffea_spark import testing
+    from coffea_spark.queries import REGISTRY
+
+    monkeypatch.setattr(testing, "SAMPLES", str(tmp_path))
+    with pytest.raises(testing.FixtureMissing, match="nano_dimuon.root"):
+        testing.sample("nano_dimuon.root")
+    with pytest.raises(testing.FixtureMissing):
+        REGISTRY["root_scan"].fn(spark, SF_DIR)
+    sql = oracle_sql()
+    assert len(sql) == 156
+    with_oracle = {n for n, q in REGISTRY.items() if q.oracle is not None}
+    assert with_oracle - set(sql) == {"correctionlib_sf", "effarea_l5flavor"}

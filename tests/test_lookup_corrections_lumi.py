@@ -4,6 +4,7 @@ tests/test_jetmet_tools.py, tests/test_lumi_tools.py)."""
 
 import numpy as np
 import pyspark.sql.functions as F
+import pytest
 
 from coffea_spark.corrections import (
     BTagScaleFactor,
@@ -14,7 +15,7 @@ from coffea_spark.corrections import (
 )
 from coffea_spark.lookup import DenseLookup, FormulaLookup
 from coffea_spark.lumi import LumiData, LumiList, LumiMask
-from coffea_spark.testing import dummy_jagged_eta_pt, jagged_eta_pt_df
+from coffea_spark.testing import dummy_jagged_eta_pt, jagged_eta_pt_df, sample
 
 
 def test_dense_lookup_2d(spark):
@@ -227,6 +228,7 @@ def test_met_unclustered_variations(spark):
     assert abs(r["phi_unclust_up"] - math.atan2(4.0, 51.0)) < 1e-12
 
 
+@pytest.mark.samples
 def test_lumidata_real_csv_golden(spark):
     """LumiData over the reference's real brilcalc csv: the sum over
     the first 10 (run, ls) keys must equal the golden 1.539941814
@@ -235,7 +237,7 @@ def test_lumidata_real_csv_golden(spark):
 
     from coffea_spark.lumi import LumiData
 
-    path = "/root/reference/tests/samples/lumi_small.csv"
+    path = sample("lumi_small.csv")
     ld = LumiData.from_csv(spark, path)
     first10 = np.loadtxt(
         path, delimiter=",", usecols=(0, 1),
@@ -253,10 +255,11 @@ def test_lumidata_real_csv_golden(spark):
     assert abs(ti - total * LumiData.SECONDS_PER_LUMI_LHC) < 1e-9
 
     # the 24v2-era file parses through the same recipe
-    ld2 = LumiData.from_csv(spark, "/root/reference/tests/samples/small_lumi.csv")
+    ld2 = LumiData.from_csv(spark, sample("small_lumi.csv"))
     assert ld2.table.count() > 0
 
 
+@pytest.mark.samples
 def test_lumimask_real_golden_json(spark):
     """LumiMask from the real 2017 certification JSON: the reference's
     pinned cases — (303825, 115) accepted, (123, 123) rejected
@@ -266,8 +269,7 @@ def test_lumimask_real_golden_json(spark):
     from coffea_spark.lumi import LumiMask
 
     mask = LumiMask.from_json(
-        "/root/reference/tests/samples/"
-        "Cert_294927-306462_13TeV_EOY2017ReReco_Collisions17_JSON.txt"
+        sample("Cert_294927-306462_13TeV_EOY2017ReReco_Collisions17_JSON.txt")
     )
     assert len(mask.ranges) > 100
     ev = spark.createDataFrame(

@@ -6,6 +6,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from coffea_spark.muon_corrections import PileupWeight, RochesterCorrection
+from coffea_spark.testing import SAMPLES
 
 
 @pytest.fixture(scope="module")
@@ -82,13 +83,7 @@ def test_kspread_needs_res(spark):
         roc.k_spread_mc(F.lit(1), F.lit(10.0), F.lit(0.5), F.lit(0.1), F.lit(11.0))
 
 
-SAMPLES = "/root/reference/tests/samples"
-needs_samples = pytest.mark.skipif(
-    not __import__("os").path.isdir(SAMPLES), reason="reference fixtures absent"
-)
-
-
-@needs_samples
+@pytest.mark.samples
 def test_rochester_official_values(spark):
     """One-to-one agreement with the OFFICIAL C++-derived Rochester
     values the reference pins (tests/test_lookup_tools.py:388-449):

@@ -15,16 +15,13 @@ global-index columns do.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 import pytest
 
 from coffea_spark.nanoevents import NanoEvents
 from coffea_spark.root_reader import read_root
 from coffea_spark.schema import NanoAODSchemaSpec
-
-SAMPLES = "/root/reference/tests/samples"
+from coffea_spark.testing import sample
 
 GEN_COLS = [
     "GenPart_pt",
@@ -44,7 +41,7 @@ GEN_COLS = [
 
 @pytest.fixture(scope="module")
 def ne_dy(spark):
-    df = read_root(spark, [os.path.join(SAMPLES, "nano_dy.root")], columns=GEN_COLS)
+    df = read_root(spark, [sample("nano_dy.root")], columns=GEN_COLS)
     ev = NanoEvents.from_flat(df, schema=NanoAODSchemaSpec)
     ev.df.cache().count()
     return ev
@@ -105,10 +102,12 @@ def _genroundtrips(df, view):
     assert n_checked > 0, "fixture exercised no genealogy links"
 
 
+@pytest.mark.samples
 def test_genroundtrips_plain(ne_dy):
     _genroundtrips(ne_dy.df, ne_dy.GenPart.indexed)
 
 
+@pytest.mark.samples
 def test_genroundtrips_object_mask(ne_dy):
     """ak.mask(events.GenPart, eta > 0) analog: null-preserving object
     mask through Collection.mask, genealogy resolved via the pristine
@@ -117,6 +116,7 @@ def test_genroundtrips_object_mask(ne_dy):
     _genroundtrips(ne_dy.df, masked.indexed)
 
 
+@pytest.mark.samples
 def test_genroundtrips_object_slice(ne_dy):
     """events.GenPart[eta > 0] analog: HARD slice in index space
     (GenealogyView.where) — relations still resolve into the full
@@ -124,6 +124,7 @@ def test_genroundtrips_object_slice(ne_dy):
     _genroundtrips(ne_dy.df, ne_dy.GenPart.indexed.where(lambda p: p.eta > 0))
 
 
+@pytest.mark.samples
 def test_genroundtrips_event_filter(ne_dy):
     """events[any(Electron.pt > 50)].GenPart analog (:88/:93)."""
     ev = ne_dy.filter(F.exists("Electron", lambda e: e["pt"] > 50))
@@ -131,6 +132,7 @@ def test_genroundtrips_event_filter(ne_dy):
     _genroundtrips(ev.df, ev.GenPart.indexed)
 
 
+@pytest.mark.samples
 def test_collection_where_blocks_genealogy(ne_dy):
     """A where()-sliced Collection loses position alignment; genealogy
     must fail LOUD, pointing at the index-space slice."""
@@ -139,6 +141,7 @@ def test_collection_where_blocks_genealogy(ne_dy):
         _ = sliced.indexed
 
 
+@pytest.mark.samples
 def test_matched_gen_sanity(ne_dy):
     """Reference test_read_nanomc gen-matching sanity
     (tests/test_nanoevents.py:95-100): electron gen match is an
@@ -170,12 +173,13 @@ CROSSREF_COLS = [
 ]
 
 
+@pytest.mark.samples
 @pytest.mark.parametrize("fname", ["nano_dy.root", "nano_dimuon.root"])
 def test_crossref_real(spark, fname):
     """Reference crossref invariant (tests/test_nanoevents.py:54-63) on
     both real fixtures, pre- and post-slice:
     Jet.matched_muons.matched_jet.pt == Jet.pt."""
-    df = read_root(spark, [os.path.join(SAMPLES, fname)], columns=CROSSREF_COLS)
+    df = read_root(spark, [sample(fname)], columns=CROSSREF_COLS)
     ev = NanoEvents.from_flat(df, schema=NanoAODSchemaSpec)
 
     def crossref(frame, events):
@@ -206,6 +210,7 @@ def test_crossref_real(spark, fname):
     assert n_all >= 0
 
 
+@pytest.mark.samples
 def test_view_walks_match_arrow_kernels(ne_dy):
     """The pure-column expression walks (GenealogyView._distinct_parent_of
     / _deep_children_of — required because Spark bans Python UDFs inside
@@ -236,6 +241,7 @@ def test_view_walks_match_arrow_kernels(ne_dy):
     assert n_deep > 0
 
 
+@pytest.mark.samples
 def test_deep_children_invariants(ne_dy):
     """The reference deep-chain invariants (tests/test_nanoevents.py
     :35-47) on the real nano_dy GenPart record, through the object API:
@@ -276,6 +282,7 @@ def test_deep_children_invariants(ne_dy):
     assert n_interior > 0 and n_top > 0
 
 
+@pytest.mark.samples
 def test_empty_selection_issue409(ne_dy):
     """Reference issue-409 regression (tests/test_nanoevents.py:106):
     an EMPTY event selection must flow through the object API — empty
@@ -289,6 +296,7 @@ def test_empty_selection_issue409(ne_dy):
     assert empty.df.count() == 0
 
 
+@pytest.mark.samples
 def test_genroundtrips_detached_mask(ne_dy):
     """A DETACHED (events=None) Collection that is mask()-sliced must
     still resolve genealogy against the pristine pre-mask structs —

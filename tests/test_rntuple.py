@@ -10,11 +10,9 @@ from pyspark.sql import functions as F
 from coffea_spark.rntuple import RNTupleReader, rntuple_to_arrow
 from coffea_spark.root_reader import RootTreeReader, open_tree, read_root
 
-SAMPLES = "/root/reference/tests/samples"
+from coffea_spark.testing import SAMPLES
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(SAMPLES), reason="reference ROOT fixtures not available"
-)
+pytestmark = pytest.mark.samples
 
 zstd_available = pytest.mark.skipif(
     __import__("coffea_spark.root_reader", fromlist=["_ZSTD"])._ZSTD is None,

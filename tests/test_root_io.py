@@ -64,6 +64,7 @@ def test_read_converted_zips_collections(spark, tmp_path):
     assert rows[3] == []
 
 
+@pytest.mark.samples
 def test_three_representations_agree(spark):
     """nano_dimuon ships as TTree, plain parquet and arrow
     extension-array parquet (reference test_nanoevents.py:60-130 runs
@@ -72,8 +73,8 @@ def test_three_representations_agree(spark):
     import pyspark.sql.functions as F
 
     from coffea_spark.root_reader import read_root
+    from coffea_spark.testing import SAMPLES as S
 
-    S = "/root/reference/tests/samples"
     froot = read_root(spark, f"{S}/nano_dimuon.root", columns=["event", "Muon_pt"])
     fpq = spark.read.parquet(f"{S}/nano_dimuon.parquet")
     fext = spark.read.parquet(f"{S}/nano_dimuon.extensionarray.parquet")

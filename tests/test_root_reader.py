@@ -16,11 +16,9 @@ from coffea_spark.root_reader import (
     root_to_arrow,
 )
 
-SAMPLES = "/root/reference/tests/samples"
+from coffea_spark.testing import SAMPLES
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(SAMPLES), reason="reference ROOT fixtures not available"
-)
+pytestmark = pytest.mark.samples
 
 
 def test_dimuon_basics():
@@ -796,7 +794,7 @@ def test_map_string_sub_branches():
     )
 
     # real fixture: classification + 100 empty maps
-    r = RootTreeReader("/root/reference/tests/samples/PHYSLITE_example.root")
+    r = RootTreeReader(f"{SAMPLES}/PHYSLITE_example.root")
     for n in (
         "EventInfoAuxDyn.detDescrTags.first",
         "EventInfoAuxDyn.detDescrTags.second",

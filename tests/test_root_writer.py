@@ -144,18 +144,15 @@ def test_string_column_roundtrip(tmp_path):
         )
 
 
+@pytest.mark.samples
 def test_uproot_writeable_full_circle(spark, tmp_path):
     """ROOT -> collections -> ROOT: read the reference's dimuon fixture,
     zip into Muon collections, write back through write_events_root
     (the uproot_writeable surface), re-read, and compare values."""
-    import os
-
     from coffea_spark.root_reader import read_nanoevents
     from coffea_spark.root_writer import write_events_root
+    from coffea_spark.testing import SAMPLES
 
-    SAMPLES = "/root/reference/tests/samples"
-    if not os.path.isdir(SAMPLES):
-        pytest.skip("reference fixtures not available")
     ev = read_nanoevents(
         spark,
         [f"{SAMPLES}/nano_dimuon.root"],

@@ -555,6 +555,7 @@ def test_stream_countmin_occurrence_prereduce(spark, tmp_path):
     assert sum(acc.values()) == 500 * 3  # every occurrence counted, all depths
 
 
+@pytest.mark.samples
 def test_root_stream_source_incremental(spark, tmp_path):
     """spark.readStream.format('root'): files are the offset unit —
     batch 1 ingests the first file, a restart from the same checkpoint
@@ -563,12 +564,13 @@ def test_root_stream_source_incremental(spark, tmp_path):
     import shutil
 
     from coffea_spark.datasource import register_root_source
+    from coffea_spark.testing import sample
 
     register_root_source(spark)
     src = tmp_path / "rootstream"
     src.mkdir()
     ck = str(tmp_path / "ck")
-    shutil.copy("/root/reference/tests/samples/nano_dimuon.root", src / "a.root")
+    shutil.copy(sample("nano_dimuon.root"), src / "a.root")
 
     def drain(qname):
         q = (
@@ -590,7 +592,7 @@ def test_root_stream_source_incremental(spark, tmp_path):
     b1 = drain("root_stream_b1")
     assert (b1.n, b1.s) == (40, 84)
 
-    shutil.copy("/root/reference/tests/samples/nano_dy.root", src / "b.root")
+    shutil.copy(sample("nano_dy.root"), src / "b.root")
     b2 = drain("root_stream_b2")
     assert (b2.n, b2.s) == (80, 102)  # +40 events, +18 muons — b.root only
 

@@ -47,6 +47,7 @@ def main():
 
     from coffea_spark.queries import REGISTRY
     from coffea_spark.session import get_spark
+    from coffea_spark.testing import FixtureMissing
 
     spark = get_spark(app_name="oracle-check", cpus=8, driver_memory="8g")
     con = duckdb.connect()
@@ -63,17 +64,22 @@ def main():
         try:
             sdf = q.fn(spark, sf_dir)
             srows = [tuple(r) for r in sdf.collect()]
+            oracle = q.sql
+        except FixtureMissing as exc:
+            results[name] = {"status": "skip", "reason": str(exc)}
+            print(f"{name:24s} SKIP  {exc}")
+            continue
         except Exception as exc:  # record, keep sweeping
             failures.append(name)
             results[name] = {"status": "error", "err": f"{type(exc).__name__}: {exc}"[:500]}
             print(f"{name:24s} ERROR {type(exc).__name__}")
             continue
         scols = sdf.columns
-        if q.oracle is None:
+        if oracle is None:
             results[name] = {"status": "rows_only", "spark_rows": len(srows)}
             print(f"{name:24s} rows-only: {len(srows)} rows")
             continue
-        ores = con.execute(q.oracle)
+        ores = con.execute(oracle)
         orows = ores.fetchall()
         ocols = [d[0] for d in ores.description]
         # DuckDB types untyped integer aggregates as HUGEINT (int128);
@@ -83,7 +89,7 @@ def main():
         # 'NUMBER' same as BIGINT, so re-DESCRIBE the query for SQL types.
         otypes = {
             r[0]: r[1]
-            for r in con.execute(f"DESCRIBE {q.oracle}").fetchall()
+            for r in con.execute(f"DESCRIBE {oracle}").fetchall()
         }
         status = []
         bad_types = [
