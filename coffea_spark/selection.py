@@ -4,9 +4,12 @@ Reference: analysis_tools.py PackedSelection (add :2254-2279, require
 :2295-2334, all/any/allfalse :2336-2384, cutflow :2483-2608, nminusone
 :2386-2481). The reference bit-packs cuts into integer masks; here each
 cut is a Catalyst boolean expression, and the bitmask is an optional
-materialized column for reuse. Cutflow and N-1 reports compile to ONE
-conditional-aggregation pass over the data — "one scan, many outputs" is
-the physical property worth preserving from the reference (SURVEY.md §4).
+materialized column for reuse. Cutflow and N-1 reports are one scan: a
+projection evaluates each cut once per row into a flag column, and one
+conditional aggregation over the flags yields every count. Aggregating
+over the cut trees would repeat cut k in each cumulative / N-1 term
+(6 cuts: 27 copies) that Catalyst does not fold, so a HOF cut would run
+once per copy; the flags are the reference's evaluate-once bitmask.
 
 Null handling: a NULL cut value counts as False (the reference coerces
 option-type masks with explicit filling, analysis_tools.py:2196-2199).
@@ -23,6 +26,16 @@ from pyspark.sql import functions as F
 def _as_bool(c: Column) -> Column:
     """NULL -> False so conditional counts are well-defined."""
     return F.coalesce(c.cast("boolean"), F.lit(False))
+
+
+def _flagged(sel: "PackedSelection", df: DataFrame, names: list[str], weight=None, keep=()):
+    """``df`` as the ``keep`` columns plus one flag column ``_c_<name>`` per
+    named cut (+ ``_w``), and a PackedSelection over the flags: each cut is
+    evaluated once per row."""
+    cols = [c.alias(f"_c_{n}") for n, c in zip(names, sel._pick(names))]
+    cols += [] if weight is None else [weight.alias("_w")]
+    flags = PackedSelection("uint64").add_multiple({n: F.col(f"_c_{n}") for n in names})
+    return df.select(*keep, *cols), flags
 
 
 class PackedSelection:
@@ -94,8 +107,8 @@ class PackedSelection:
     # -- reports ----------------------------------------------------------
 
     def cutflow_aggs(self, *names: str, weight: Column | None = None):
-        """Aggregate expressions for a cutflow: one-cut and cumulative
-        counts per cut (+ weighted variants when ``weight`` given)."""
+        """Aggregate expressions for a cutflow: one-cut and cumulative counts
+        per cut (+ weighted variants when ``weight`` given), 0 if none pass."""
         names = list(names) or self.names
         aggs = [F.count(F.lit(1)).alias("initial")]
         if weight is not None:
@@ -104,34 +117,20 @@ class PackedSelection:
         for n in names:
             c = self._cuts[n]
             cumulative = cumulative & c
-            # coalesce: SUM over zero rows is NULL, but a cutflow on an
-            # empty selection must report 0 (reference returns 0 counts)
-            aggs.append(
-                F.coalesce(F.sum(F.when(c, 1).otherwise(0)), F.lit(0)).alias(f"onecut_{n}")
-            )
-            aggs.append(
-                F.coalesce(F.sum(F.when(cumulative, 1).otherwise(0)), F.lit(0)).alias(
-                    f"cutflow_{n}"
-                )
-            )
+            aggs += [F.count_if(c).alias(f"onecut_{n}"),
+                     F.count_if(cumulative).alias(f"cutflow_{n}")]
             if weight is not None:
-                aggs.append(
-                    F.coalesce(F.sum(F.when(c, weight).otherwise(0.0)), F.lit(0.0)).alias(
-                        f"onecut_w_{n}"
-                    )
-                )
-                aggs.append(
-                    F.coalesce(
-                        F.sum(F.when(cumulative, weight).otherwise(0.0)), F.lit(0.0)
-                    ).alias(f"cutflow_w_{n}")
-                )
+                aggs += [F.coalesce(F.sum(F.when(cond, weight)), F.lit(0.0)).alias(f"{kind}_w_{n}")
+                         for kind, cond in (("onecut", c), ("cutflow", cumulative))]
         return aggs
 
     def cutflow(self, df: DataFrame, *names: str, weight: Column | None = None) -> "Cutflow":
         """Single-pass cutflow over ``df`` (reference: PackedSelection.cutflow
         analysis_tools.py:2483-2608). One job, one row out."""
         names = list(names) or self.names
-        row = df.agg(*self.cutflow_aggs(*names, weight=weight)).collect()[0]
+        flags, sel = _flagged(self, df, names, weight)
+        w = None if weight is None else F.col("_w")
+        row = flags.agg(*sel.cutflow_aggs(weight=w)).collect()[0]
         return Cutflow(
             names=names,
             initial=row["initial"],
@@ -178,14 +177,9 @@ class PackedSelection:
                 for vname, (col, nbins, lo, hi) in vars.items()
             ]
         )
-        base_cols = [F.explode(entries).alias("_e")] + [
-            self._cuts[n].alias(f"_c_{n}") for n in names
-        ]
-        if weight is not None:
-            base_cols.append(weight.alias("_w"))
+        flags, _ = _flagged(self, df, names, weight, keep=[F.explode(entries).alias("_e")])
         flat = (
-            df.select(*base_cols)
-            .select(F.col("_e.var").alias("var"), F.col("_e.bin").alias("bin"), "*")
+            flags.select(F.col("_e.var").alias("var"), F.col("_e.bin").alias("bin"), "*")
             .drop("_e")
             .filter(F.col("bin").isNotNull())  # null values fill nothing
         )
@@ -204,19 +198,18 @@ class PackedSelection:
         return flat.groupBy("var", "bin").agg(*aggs)
 
     def nminusone(self, df: DataFrame, *names: str) -> "NminusOne":
-        """Counts passing all-but-one cut, per cut, plus all cuts — one
-        conditional-aggregation pass (reference: analysis_tools.py
-        :2386-2481)."""
+        """Counts passing all-but-one cut, per cut, plus all cuts, in one
+        aggregation over the cut flags; 0 on an empty frame (reference:
+        analysis_tools.py:2386-2481)."""
         names = list(names) or self.names
+        flags, sel = _flagged(self, df, names)
         aggs = [F.count(F.lit(1)).alias("initial")]
         for leave_out in names:
-            cond = F.lit(True)
-            for n in names:
-                if n != leave_out:
-                    cond = cond & self._cuts[n]
-            aggs.append(F.sum(F.when(cond, 1).otherwise(0)).alias(f"nminusone_{leave_out}"))
-        aggs.append(F.sum(F.when(self.all(*names), 1).otherwise(0)).alias("all_cuts"))
-        row = df.agg(*aggs).collect()[0]
+            others = [n for n in names if n != leave_out]
+            cond = sel.all(*others) if others else F.lit(True)
+            aggs.append(F.count_if(cond).alias(f"nminusone_{leave_out}"))
+        aggs.append(F.count_if(sel.all()).alias("all_cuts"))
+        row = flags.agg(*aggs).collect()[0]
         return NminusOne(
             names=names,
             initial=row["initial"],

@@ -15,6 +15,13 @@ memory knobs. Defaults follow the public Spark tuning guidance:
   collection zipped at read time from flat ``Muon_*`` branches: the
   zip binds every branch, so touching ``Muon.pt`` reads all of them
   (ROADMAP item 4)
+- DataFrame call-site capture off: capturing the caller's file:line
+  costs about 7 py4j round trips per ``Column`` / ``F.*`` call, half the
+  round trips of a processor pass. The cost: a runtime error's
+  ``== DataFrame ==`` section names a JVM frame, not the user's line;
+  error class and message are unchanged. Static conf, read once per
+  process: ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+  "true"}`` turns it back on
 """
 
 from __future__ import annotations
@@ -56,6 +63,7 @@ def get_spark(
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # 1g JIT code cache: a long session compiles hundreds of large
         # whole-stage-codegen classes; when the default 240m cache fills,
         # the JVM stops JIT-compiling and expression-heavy queries run

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from coffea_spark.hist import bucket
+from coffea_spark.selection import PackedSelection
 
 
 def windowed_hist(
@@ -49,19 +50,12 @@ def windowed_cutflow(
     window: str = "5 minutes",
     watermark: str = "10 minutes",
 ) -> DataFrame:
-    """Cutflow counts per event-time window — the streaming spelling of
-    PackedSelection.cutflow (one conditional-agg pass per window)."""
-    aggs = [F.count(F.lit(1)).alias("initial")]
-    cumulative = F.lit(True)
-    for name, c in cuts.items():
-        c = F.coalesce(c.cast("boolean"), F.lit(False))
-        cumulative = cumulative & c
-        aggs.append(F.sum(F.when(c, 1).otherwise(0)).alias(f"onecut_{name}"))
-        aggs.append(F.sum(F.when(cumulative, 1).otherwise(0)).alias(f"cutflow_{name}"))
+    """Cutflow counts per event-time window: PackedSelection.cutflow_aggs
+    (``initial, onecut_<cut>, cutflow_<cut>, ...``) grouped by window."""
     return (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window))
-        .agg(*aggs)
+        .agg(*PackedSelection().add_multiple(cuts).cutflow_aggs())
     )
 
 

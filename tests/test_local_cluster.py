@@ -27,6 +27,7 @@ import sys
 
 import pytest
 
+from childproc import failure_text
 from coffea_spark.testing import SAMPLES
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -103,7 +104,7 @@ def test_local_cluster_hash_parity(spark):
         cwd=REPO,
     )
     assert proc.returncode == 0, (
-        f"local-cluster subprocess failed:\n{proc.stderr[-3000:]}"
+        f"local-cluster subprocess failed:\n{failure_text(proc.stderr, 3000)}"
     )
     line = [l for l in proc.stdout.splitlines() if l.startswith("PARITY_JSON:")]
     assert line, f"no parity payload in stdout:\n{proc.stdout[-2000:]}"

@@ -26,6 +26,8 @@ import sys
 
 import pytest
 
+from childproc import failure_text
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF1_DIR = "/tmp/scale/sf1"
 
@@ -120,7 +122,7 @@ def test_memory_pressure_parity_sf1(spark):
         cwd=REPO,
     )
     assert proc.returncode == 0, (
-        f"memory-pressure subprocess failed (OOM?):\n{proc.stderr[-4000:]}"
+        f"memory-pressure subprocess failed (OOM?):\n{failure_text(proc.stderr)}"
     )
     line = [l for l in proc.stdout.splitlines() if l.startswith("MP_JSON:")]
     assert line, f"no payload:\n{proc.stdout[-2000:]}"

@@ -32,6 +32,8 @@ import sys
 
 import pytest
 
+from childproc import failure_text
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -195,7 +197,7 @@ def test_retry_determinism():
         timeout=900,
         cwd=REPO,
     )
-    assert proc.returncode == 0, f"retry subprocess failed:\n{proc.stderr[-4000:]}"
+    assert proc.returncode == 0, f"retry subprocess failed:\n{failure_text(proc.stderr)}"
     line = [l for l in proc.stdout.splitlines() if l.startswith("RETRY_JSON:")]
     assert line, f"no payload:\n{proc.stdout[-2000:]}"
     got = json.loads(line[-1][len("RETRY_JSON:") :])

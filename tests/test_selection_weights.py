@@ -68,6 +68,65 @@ def test_cutflow_and_nminusone(spark):
     assert n1.nev_all == int((nx & ny & nz).sum())
 
 
+def _parity_frame(spark):
+    rows = [
+        (0.5, [0.5, 2.0], 3, 1.0),
+        (-1.0, [], None, 0.5),
+        (2.0, [1.75], 1, 2.0),
+        (1.5, [3.0, 0.25], None, 0.75),
+        (0.1, None, 5, 1.25),
+        (-0.3, [1.5], 4, 0.125),
+        (3.0, [0.1], 6, 1.5),
+    ]
+    df = spark.createDataFrame(rows, "x double, arr array<double>, n int, w double")
+    cuts = {
+        "hof": F.exists("arr", lambda v: v > 1.25),  # interpreted HOF; NULL on a NULL array
+        "nullable": F.col("n") > 2,  # NULL where n is NULL
+        "cx": F.col("x") > 0.375,
+    }
+    return df, cuts
+
+
+def _direct(df, cond):
+    """(count, weight sum) of the rows where ``cond`` is true, by filter."""
+    hit = df.filter(cond)
+    return hit.count(), hit.agg(F.sum("w")).first()[0] or 0.0
+
+
+def test_cutflow_and_nminusone_match_filter_counts(spark):
+    """cutflow (both weightings) and nminusone equal direct filter counts
+    and weight sums, on a frame with a HOF cut and NULL cut values, and
+    on the empty frame."""
+    full, cuts = _parity_frame(spark)
+    sel = PackedSelection().add_multiple(cuts)
+    names = list(cuts)
+
+    def all_of(ns):
+        out = F.lit(True)
+        for n in ns:
+            out = out & cuts[n]
+        return out
+
+    for df in (full, full.limit(0)):
+        cf = sel.cutflow(df)
+        cfw = sel.cutflow(df, weight=F.col("w"))
+        n1 = sel.nminusone(df)
+        initial = df.count()
+        assert cf.initial == cfw.initial == n1.initial == initial
+        assert cf.wevonecut is None and cf.initial_w is None
+        assert cfw.initial_w == df.agg(F.sum("w")).first()[0]
+        for i, n in enumerate(names):
+            one_n, one_w = _direct(df, cuts[n])
+            cum_n, cum_w = _direct(df, all_of(names[: i + 1]))
+            assert cf.nevonecut[i] == cfw.nevonecut[i] == one_n
+            assert cf.nevcutflow[i] == cfw.nevcutflow[i] == cum_n
+            assert abs(cfw.wevonecut[i] - one_w) <= 1e-12
+            assert abs(cfw.wevcutflow[i] - cum_w) <= 1e-12
+            assert n1.nev[i] == _direct(df, all_of([m for m in names if m != n]))[0]
+        assert n1.nev_all == _direct(df, all_of(names))[0]
+    assert cf.nevcutflow == [0, 0, 0] and n1.nev == [0, 0, 0] and n1.nev_all == 0
+
+
 def test_weights_variations(spark):
     df, x, y, z, w = _df(spark)
     weights = Weights()
