@@ -114,118 +114,7 @@ def jaccard_pairs(
     )
 
 
-def _dense_block_pairs(
-    dense_sets: DataFrame,
-    threshold: float,
-    id_col: str,
-    block_cols: list[str],
-    group_cols: list[str] | None = None,
-    batch_cells: int = 16_777_216,
-) -> DataFrame:
-    """Exhaustive within-block threshold Jaccard for LOW-ENTROPY blocks
-    (the dense escape hatch of :func:`jaccard_join`): one task per
-    block builds the block's (n_docs x vocab) 0/1 float32 matrix from
-    its shingle sets and scores every pair with a blocked BLAS matmul —
-    |A∩B| is exact (sums of ones stay < 2^24, enforced by the caller's
-    vocab budget), jaccard is the same one-IEEE-divide expression the
-    PPJoin verify computes, so the emitted pair set is bit-identical to
-    the inverted-index path. Only jaccard >= threshold pairs leave the
-    task; the B x n score intermediates live batch-scoped with B
-    clamped so B*n <= ``batch_cells`` (~400 MB of float64 at the
-    default) — a fixed batch row count would scale the intermediates
-    linearly with block size and blow task memory exactly on the
-    biggest blocks the budget admits (a 1.28M-doc low-vocab block under
-    the default cell budget would otherwise allocate ~30 GB per batch).
-    Block size itself is budget-capped by the caller before the shuffle
-    ever happens.
-
-    BOUNDED: intermediates. NOT bounded: the OUTPUT pair set — all
-    qualifying pairs of the block accumulate in one pandas frame before
-    the task returns (applyInPandas has no per-group streaming emit), so
-    a LOW threshold on exactly the low-entropy blocks that fire can
-    qualify a near-quadratic set (11k docs -> up to ~65M rows, ~5 GB)
-    in one task where PPJoin would have streamed the same rows
-    distributed. At thresholds in the gate range (>= 0.5) true pairs
-    are sparse; for exploratory low-threshold scans either lower
-    ``dense_budget_cells`` (smaller blocks per task / tiled fan-out) or
-    disable the guard (``dense_min_mass=None``)."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    in_schema = dense_sets.schema
-    fields = [T.StructField(c, in_schema[c].dataType) for c in block_cols]
-    fields += [
-        T.StructField("id_a", in_schema[id_col].dataType),
-        T.StructField("id_b", in_schema[id_col].dataType),
-        T.StructField("inter", T.IntegerType()),
-        T.StructField("size_a", T.IntegerType()),
-        T.StructField("size_b", T.IntegerType()),
-        T.StructField("jaccard", T.DoubleType()),
-    ]
-    out_schema = T.StructType(fields)
-    t = float(threshold)
-
-    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        nloc = len(pdf)
-        ids = pdf[id_col].to_numpy()
-        vocab: dict = {}
-        idx_rows = []
-        for sh in pdf["_sh"]:
-            arr = np.empty(len(sh), dtype=np.int64)
-            for k, sgl in enumerate(sh):
-                v = vocab.get(sgl)
-                if v is None:
-                    v = vocab[sgl] = len(vocab)
-                arr[k] = v
-            idx_rows.append(arr)
-        V = max(len(vocab), 1)
-        M = np.zeros((nloc, V), dtype=np.float32)
-        for i, arr in enumerate(idx_rows):
-            M[i, arr] = 1.0
-        sz = pdf["_sz"].to_numpy().astype(np.int64)
-        step = max(16, min(4096, batch_cells // max(nloc, 1)))
-        chunks = []
-        for s0 in range(0, nloc, step):
-            s1 = min(s0 + step, nloc)
-            inter = np.rint(M[s0:s1] @ M.T).astype(np.int64)
-            union = sz[s0:s1, None] + sz[None, :] - inter
-            with np.errstate(invalid="ignore", divide="ignore"):
-                jac = inter / union  # 0/0 (both empty) -> nan -> masked
-            mask = (jac >= t) & (ids[s0:s1][:, None] < ids[None, :])
-            ii, jj = np.nonzero(mask)
-            if len(ii) == 0:
-                continue
-            chunks.append(
-                pd.DataFrame(
-                    {
-                        **{c: pdf[c].iloc[0] for c in block_cols},
-                        "id_a": ids[s0 + ii],
-                        "id_b": ids[jj],
-                        "inter": inter[ii, jj].astype("int32"),
-                        "size_a": sz[s0 + ii].astype("int32"),
-                        "size_b": sz[jj].astype("int32"),
-                        "jaccard": jac[ii, jj],
-                    }
-                )
-            )
-        if chunks:
-            return pd.concat(chunks, ignore_index=True)
-        empty = {c: pd.Series([], dtype=pdf[c].dtype) for c in block_cols}
-        empty["id_a"] = pd.Series([], dtype=pdf[id_col].dtype)
-        empty["id_b"] = pd.Series([], dtype=pdf[id_col].dtype)
-        empty["inter"] = pd.Series([], dtype="int32")
-        empty["size_a"] = pd.Series([], dtype="int32")
-        empty["size_b"] = pd.Series([], dtype="int32")
-        empty["jaccard"] = pd.Series([], dtype="float64")
-        return pd.DataFrame(empty)
-
-    grouped = dense_sets.groupBy(*(group_cols or block_cols))
-    return grouped.applyInPandas(emit, schema=out_schema)
-
-
-def _dense_tiled_pairs(
+def _dense_pairs(
     tiled_sets: DataFrame,
     threshold: float,
     id_col: str,
@@ -233,20 +122,35 @@ def _dense_tiled_pairs(
     group_cols: list[str],
     batch_cells: int = 16_777_216,
 ) -> DataFrame:
-    """Exhaustive Jaccard for dense blocks TOO BIG for one task: the
-    block's docs are hashed into ``_ntiles`` tiles (the count chosen by the
-    router so a two-tile matrix fits the cell budget) and every tile
-    PAIR (i <= j) becomes its own task — pair (x, y) lands in exactly
-    group (min(tile_x, tile_y), max(...)), so the union over groups is
-    the exact within-block pair set, each task bounded. The price of
-    scale-out is replication: each doc ships to its _ntiles groups (one per
-    partner tile), i.e. shuffle volume _ntiles x the block's sets — linear
-    in the chosen fan-out, never quadratic. Same bit-identical scoring
-    as :func:`_dense_block_pairs` (integer intersections, one IEEE
-    divide) — and the same output-side caveat: each tile-pair task
-    accumulates ALL of its qualifying pairs in one frame before
-    returning, bounded only by the threshold's selectivity, not by
-    ``batch_cells``."""
+    """Exhaustive within-block threshold Jaccard for LOW-ENTROPY blocks
+    (the dense escape hatch of :func:`jaccard_join`) as a tile-pair
+    grid: the router hashes each block's docs into ``_ntiles`` tiles
+    (T=1 when the block's ``n_docs x vocab`` matrix fits the cell
+    budget, else enough that a two-tile matrix does) and every tile
+    PAIR (i <= j) is one task — pair (x, y) lands in exactly group
+    (min(tile_x, tile_y), max(...)), so the union over groups is the
+    exact within-block pair set. Each task builds its docs' 0/1 float32
+    matrix from their shingle sets and scores the pairs with a blocked
+    BLAS matmul: |A∩B| is exact (sums of ones stay < 2^24, enforced by
+    the router's vocab bound) and jaccard is the same one-IEEE-divide
+    expression the PPJoin verify computes, so the emitted pair set is
+    bit-identical to the inverted-index path. A diagonal task (i == j)
+    scores its matrix against itself through slices, no copy. The
+    price of T > 1 is replication: each doc ships to its T groups, so
+    shuffle volume is T x the block's sets — linear in the fan-out.
+
+    BOUNDED: intermediates — B x n score batches with B clamped so
+    B*n <= ``batch_cells`` (~400 MB of float64 at the default), never
+    a fixed row count that would scale with the biggest block the
+    budget admits. NOT bounded: the OUTPUT pair set — all qualifying
+    pairs of a task accumulate in one pandas frame before it returns
+    (applyInPandas has no per-group streaming emit), so a LOW
+    threshold on exactly the low-entropy blocks that fire can qualify
+    a near-quadratic set in one task where PPJoin would have streamed
+    the same rows distributed. At thresholds in the gate range (>= 0.5)
+    true pairs are sparse; for exploratory low-threshold scans either
+    lower ``dense_budget_cells`` (more, smaller tile pairs) or disable
+    the guard (``dense_min_mass=None``)."""
     import numpy as np
     import pandas as pd
 
@@ -268,9 +172,14 @@ def _dense_tiled_pairs(
     def emit(pdf: pd.DataFrame) -> pd.DataFrame:
         gi = int(pdf["_gi"].iloc[0])
         gj = int(pdf["_gj"].iloc[0])
+        # tile gi's docs first, so each side of the grid cell is a
+        # row slice of one matrix (a view, never a copy)
+        tiles = pdf["_t"].to_numpy()
+        order = np.argsort(tiles != gi, kind="stable")
+        na = int((tiles == gi).sum())
         vocab: dict = {}
         idx_rows = []
-        for sh in pdf["_sh"]:
+        for sh in pdf["_sh"].to_numpy()[order]:
             arr = np.empty(len(sh), dtype=np.int64)
             for k, sgl in enumerate(sh):
                 v = vocab.get(sgl)
@@ -282,43 +191,42 @@ def _dense_tiled_pairs(
         M = np.zeros((len(pdf), V), dtype=np.float32)
         for i, arr in enumerate(idx_rows):
             M[i, arr] = 1.0
-        ids = pdf[id_col].to_numpy()
-        sz = pdf["_sz"].to_numpy().astype(np.int64)
-        tiles = pdf["_t"].to_numpy()
-        ia = np.nonzero(tiles == gi)[0]
-        ib = np.nonzero(tiles == gj)[0] if gj != gi else ia
+        ids = pdf[id_col].to_numpy()[order]
+        sz = pdf["_sz"].to_numpy().astype(np.int64)[order]
+        Ma, ida, sza = M[:na], ids[:na], sz[:na]
+        if gi == gj:  # a diagonal group holds only tile gi's docs
+            Mb, idb, szb = Ma, ida, sza
+        else:  # two disjoint tiles: the full rectangle between them
+            Mb, idb, szb = M[na:], ids[na:], sz[na:]
         chunks = []
-        nb = len(ib)
-        step = max(16, min(4096, batch_cells // max(nb, 1)))
-        MbT = M[ib].T.copy()
-        for s0 in range(0, len(ia), step):
-            sel = ia[s0 : s0 + step]
-            inter = np.rint(M[sel] @ MbT).astype(np.int64)
-            union = sz[sel][:, None] + sz[ib][None, :] - inter
+        step = max(16, min(4096, batch_cells // max(len(idb), 1)))
+        for s0 in range(0, len(ida), step):
+            s1 = min(s0 + step, len(ida))
+            inter = np.rint(Ma[s0:s1] @ Mb.T).astype(np.int64)
+            union = sza[s0:s1, None] + szb[None, :] - inter
             with np.errstate(invalid="ignore", divide="ignore"):
-                jac = inter / union
-            if gi == gj:  # triangle within one tile
-                mask = (jac >= t) & (ids[sel][:, None] < ids[ib][None, :])
-            else:  # full rectangle across two disjoint tiles
-                mask = jac >= t
+                jac = inter / union  # 0/0 (both empty) -> nan -> masked
+            mask = jac >= t
+            if gi == gj:  # each unordered pair once
+                mask &= ida[s0:s1, None] < idb[None, :]
             ii, jj = np.nonzero(mask)
             if len(ii) == 0:
                 continue
-            ida, idb = ids[sel][ii], ids[ib][jj]
-            sza, szb = sz[sel][ii], sz[ib][jj]
-            if gi != gj:  # normalize (id_a < id_b), sizes follow ids
-                swap = ida > idb
-                ida, idb = np.where(swap, idb, ida), np.where(swap, ida, idb)
-                sza, szb = np.where(swap, szb, sza), np.where(swap, sza, szb)
+            pa, pb = ida[s0 + ii], idb[jj]
+            qa, qb = sza[s0 + ii], szb[jj]
+            # normalize (id_a < id_b), sizes follow ids
+            swap = pa > pb
+            pa, pb = np.where(swap, pb, pa), np.where(swap, pa, pb)
+            qa, qb = np.where(swap, qb, qa), np.where(swap, qa, qb)
             chunks.append(
                 pd.DataFrame(
                     {
                         **{c: pdf[c].iloc[0] for c in block_cols},
-                        "id_a": ida,
-                        "id_b": idb,
+                        "id_a": pa,
+                        "id_b": pb,
                         "inter": inter[ii, jj].astype("int32"),
-                        "size_a": sza.astype("int32"),
-                        "size_b": szb.astype("int32"),
+                        "size_a": qa.astype("int32"),
+                        "size_b": qb.astype("int32"),
                         "jaccard": jac[ii, jj],
                     }
                 )
@@ -350,13 +258,15 @@ def _dense_block_route(
     cost_ratio: int = 60_000,
 ):
     """Measure per-block PPJoin candidate mass and route quadratically
-    dense blocks to :func:`_dense_block_pairs`. Returns ``(keys,
-    dense_pairs)`` — ``keys`` is a persisted tiny frame of fired block
-    keys (``None`` when inert; the caller anti-joins it off the prefix
-    self-join), ``dense_pairs`` the exhaustive pairs for those blocks.
-    The trigger is a pure function of exact counts; both the firing and
-    the over-budget fallback warn loudly (no silent caps). All stats
-    aggregations read the caller's cached sets/prefix tables."""
+    dense blocks to the :func:`_dense_pairs` tile grid, T=1 for a block
+    that fits ``budget_cells``. Returns ``(keys, dense_pairs)`` —
+    ``keys`` is a persisted tiny frame of fired block keys (``None``
+    when inert; the caller anti-joins it off the prefix self-join),
+    ``dense_pairs`` the exhaustive pairs for those blocks. The trigger
+    is a pure function of exact counts; the firing (with each block's
+    tile count) and the vocab-bound fallback warn loudly (no silent
+    caps). All stats aggregations read the caller's cached sets/prefix
+    tables."""
     import warnings
 
     gcols = block_cols or ["_dblk"]
@@ -383,9 +293,9 @@ def _dense_block_route(
     if fired_mass.limit(1).count() == 0:
         fired_mass.unpersist()
         return None, None
-    # PHASE 2 (rare) — vocabulary for the mass-fired blocks only:
-    # budget check = fits one task's matrix (float32 n x V) and keeps
-    # float32 intersection sums exact (< 2^24)
+    # PHASE 2 (rare) — vocabulary for the mass-fired blocks only: it
+    # sizes each block's float32 n x V matrix against the cell budget
+    # (the tile count) and keeps float32 intersection sums exact (< 2^24)
     vocab = (
         s.join(F.broadcast(fired_mass.select(*gcols)), gcols, "left_semi")
         .select(*gcols, F.explode("_sh").alias("_t"))
@@ -413,28 +323,27 @@ def _dense_block_route(
         F.col("_nd").cast("double") * F.col("_nd") * F.col("_v")
         <= F.col("_mass") * F.lit(float(cost_ratio))
     )
-    eligible = exact_ok & wins
-    fits = (F.col("_nd") * F.col("_v") <= F.lit(int(budget_cells))) & eligible
-    keys = stats.filter(fits).select(*gcols).persist()
-    # over-budget blocks go to the TILED dense path: _ntiles tiles such that
-    # a two-tile matrix (~2n/T docs x V) fits the cell budget
-    tkeys = (
-        stats.filter((~fits) & eligible)
-        .select(
-            *gcols,
+    # T=1 when the block's (n x V) matrix fits the cell budget (one
+    # task); past it, T tiles such that a two-tile matrix (~2n/T docs x
+    # V) fits
+    cells = F.col("_nd") * F.col("_v")
+    ntiles = (
+        F.when(cells <= F.lit(int(budget_cells)), F.lit(1))
+        .otherwise(
             F.greatest(
-                F.lit(2),
-                F.ceil(
-                    2.0 * F.col("_nd") * F.col("_v") / F.lit(float(budget_cells))
-                ),
+                F.lit(2), F.ceil(2.0 * cells / F.lit(float(budget_cells)))
             )
-            .cast("int")
-            .alias("_ntiles"),
         )
+        .cast("int")
+    )
+    keys = (
+        stats.filter(exact_ok & wins)
+        .select(*gcols, "_nd", "_mass", "_v", ntiles.alias("_ntiles"))
         .persist()
     )
-    n_fired = keys.count()
-    n_tiled = tkeys.count()
+    n_fired, n_tiled = keys.agg(
+        F.count(F.lit(1)), F.count_if(F.col("_ntiles") > 1)
+    ).first()
     unsplit = (
         stats.filter(~exact_ok)
         .select(*gcols, "_nd", "_mass", "_v")
@@ -459,89 +368,49 @@ def _dense_block_route(
             ),
             stacklevel=3,
         )
-    # release whichever routing frame the returned plan will NOT
-    # reference (an unused persisted frame would otherwise sit in the
-    # cache until the caller's clearCache) — the live one(s) stay
-    # persisted because the broadcast anti-join and the dense-pairs
-    # semi-join read them lazily from the returned plan.
-    if n_fired == 0:
-        keys.unpersist()
-    if n_tiled == 0:
-        tkeys.unpersist()
-    if n_fired == 0 and n_tiled == 0:
-        fired_mass.unpersist()
-        stats.unpersist()
-        return None, None
-    if n_fired:
-        fired_rows = (
-            stats.filter(fits).orderBy(F.desc("_mass")).limit(8).collect()
-        )
-        warnings.warn(
-            "jaccard_join: routing %d dense block(s) to the exhaustive "
-            "bitset-matmul path (identical pairs, no prefix enumeration): %s"
-            % (
-                n_fired,
-                "; ".join(
-                    f"{tuple(r[c] for c in gcols)} n={r['_nd']} "
-                    f"mass={int(r['_mass'])} vocab={r['_v']}"
-                    for r in fired_rows
-                ),
-            ),
-            stacklevel=3,
-        )
-    if n_tiled:
-        tiled_rows = tkeys.orderBy(F.desc("_ntiles")).limit(8).collect()
-        warnings.warn(
-            "jaccard_join: routing %d over-budget dense block(s) to the "
-            "TILED bitset-matmul path (identical pairs; each tile pair a "
-            "budget-sized task): %s"
-            % (
-                n_tiled,
-                "; ".join(
-                    f"{tuple(r[c] for c in gcols)} T={r['_ntiles']}"
-                    for r in tiled_rows
-                ),
-            ),
-            stacklevel=3,
-        )
     fired_mass.unpersist()
     stats.unpersist()
-    pairs = None
-    if n_fired:
-        dense_sets = s.join(F.broadcast(keys), gcols, "left_semi")
-        pairs = _dense_block_pairs(
-            dense_sets, threshold, id_col, block_cols, group_cols=gcols
+    if n_fired == 0:
+        keys.unpersist()
+        return None, None
+    # the keys frame stays persisted: the returned plan's broadcast
+    # anti-join and tile join read it lazily
+    fired_rows = keys.orderBy(F.desc("_mass")).limit(8).collect()
+    warnings.warn(
+        "jaccard_join: routing %d dense block(s) to the exhaustive "
+        "bitset-matmul path (identical pairs, no prefix enumeration%s): %s"
+        % (
+            n_fired,
+            f"; {n_tiled} over budget run TILED bitset-matmul, each tile "
+            "pair a budget-sized task" if n_tiled else "",
+            "; ".join(
+                f"{tuple(r[c] for c in gcols)} n={r['_nd']} "
+                f"mass={int(r['_mass'])} vocab={r['_v']} T={r['_ntiles']}"
+                for r in fired_rows
+            ),
+        ),
+        stacklevel=3,
+    )
+    ts = s.join(F.broadcast(keys.select(*gcols, "_ntiles")), gcols).withColumn(
+        "_t", F.pmod(F.xxhash64(F.col(id_col)), F.col("_ntiles")).cast("int")
+    )
+    grid = F.explode(
+        F.transform(
+            F.sequence(F.lit(0), F.col("_ntiles") - 1),
+            lambda u: F.struct(
+                F.least(F.col("_t"), u).cast("int").alias("gi"),
+                F.greatest(F.col("_t"), u).cast("int").alias("gj"),
+            ),
         )
-    if n_tiled:
-        ts = s.join(F.broadcast(tkeys), gcols).withColumn(
-            "_t", F.pmod(F.xxhash64(F.col(id_col)), F.col("_ntiles")).cast("int")
-        )
-        grid = F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.col("_ntiles") - 1),
-                lambda u: F.struct(
-                    F.least(F.col("_t"), u).cast("int").alias("gi"),
-                    F.greatest(F.col("_t"), u).cast("int").alias("gj"),
-                ),
-            )
-        )
-        ts = ts.select(
-            *gcols, id_col, "_sh", "_sz", "_t", grid.alias("_g")
-        ).select(
-            *gcols, id_col, "_sh", "_sz", "_t",
-            F.col("_g.gi").alias("_gi"), F.col("_g.gj").alias("_gj"),
-        )
-        tpairs = _dense_tiled_pairs(
-            ts, threshold, id_col, block_cols, group_cols=gcols
-        )
-        pairs = tpairs if pairs is None else pairs.unionByName(tpairs)
-    if n_fired and n_tiled:
-        all_keys = keys.unionByName(tkeys.select(*gcols))
-    elif n_tiled:
-        all_keys = tkeys.select(*gcols)
-    else:
-        all_keys = keys
-    return all_keys, pairs
+    )
+    ts = ts.select(
+        *gcols, id_col, "_sh", "_sz", "_t", grid.alias("_g")
+    ).select(
+        *gcols, id_col, "_sh", "_sz", "_t",
+        F.col("_g.gi").alias("_gi"), F.col("_g.gj").alias("_gj"),
+    )
+    pairs = _dense_pairs(ts, threshold, id_col, block_cols, group_cols=gcols)
+    return keys.select(*gcols), pairs
 
 
 def jaccard_join(
@@ -580,43 +449,43 @@ def jaccard_join(
     doc-keyed prefix groupBy exchange, then the prefix self-join and
     two verify joins. No step is quadratic in document frequency.
 
-    DENSE-BLOCK GUARD (the Zipf-host skew dimension, BENCH_SKEW.md r11
-    attribution): prefix filtering is powerless on a LOW-ENTROPY block —
-    the measured skewed-sf1 hot (lang, source) block holds 11,474 docs
-    over only ~2,000 distinct prefix shingles (median prefix document
-    frequency 623), so EVERY shingle is hot and candidate enumeration is
-    Θ(block²) no matter how prefixes are chosen (banning hot tokens just
-    refills prefixes with equally-hot ones; size-tiering measured a
-    1.1x cut — sizes are too concentrated). The guard MEASURES per-block
-    candidate mass Σ_shingle C(prefix_df, 2) (one map-side-combinable
-    aggregation over the already-cached prefix table) and routes any
-    block past ``max(dense_min_mass, dense_mass_per_doc·n_docs)`` whose
-    predicted matmul work also BEATS the predicted enumeration
+    DENSE-BLOCK GUARD (the Zipf-host skew dimension; measurements in
+    BENCH_SKEW.md): prefix filtering is powerless on a LOW-ENTROPY
+    block — the measured skewed-sf1 hot (lang, source) block holds
+    11,474 docs over only ~2,000 distinct prefix shingles (median prefix
+    document frequency 623), so EVERY shingle is hot and candidate
+    enumeration is Θ(block²) no matter how prefixes are chosen (banning
+    hot tokens just refills prefixes with equally-hot ones; size-tiering
+    measured a 1.1x cut — sizes are too concentrated). The guard
+    MEASURES per-block candidate mass Σ_shingle C(prefix_df, 2) (one
+    map-side-combinable aggregation over the already-cached prefix
+    table) and routes any block past
+    ``max(dense_min_mass, dense_mass_per_doc·n_docs)`` whose predicted
+    matmul work also BEATS the predicted enumeration
     (``n² · vocab <= mass · dense_cost_ratio`` — the measured ~1 µs per
     candidate row vs ~0.016 ns per flop break-even, halved toward
     PPJoin; a rich-vocabulary block can clear the mass floor while its
-    matmul would dwarf the enumeration) to an
-    EXHAUSTIVE within-block bitset matmul instead: one task per dense
-    block builds the block's (n_docs × vocab) 0/1 matrix and computes
-    every pairwise intersection at BLAS speed (~0.02 us/pair vs ~1 us
-    per enumerated candidate row through the shuffle join — the
+    matmul would dwarf the enumeration) to an EXHAUSTIVE within-block
+    bitset matmul instead: the block's (n_docs × vocab) 0/1 matrix
+    scores every pairwise intersection at BLAS speed (~0.02 us/pair vs
+    ~1 us per enumerated candidate row through the shuffle join — the
     exact_knn_blocked lesson), emitting only the jaccard >= threshold
     pairs. EXACTNESS IS PRESERVED: the dense path enumerates all pairs
     of its block, so the prefix-filter completeness argument above is
     untouched for the remaining blocks and trivially satisfied inside
     dense ones — the output pair set is identical (pinned by test and
     by the unchanged all-pairs oracle). The trigger is LOUD
-    (warnings.warn naming blocks and masses), deterministic (exact
-    counts), and bounded: a fired block that fits
+    (warnings.warn naming blocks, masses and tile counts),
+    deterministic (exact counts), and bounded: every fired block runs
+    as a grid of T tiles in which each tile pair (i <= j) is one task
+    (pair (x,y) lands in exactly group (min, max) of its tiles, so the
+    union is still the exact pair set). T=1 — one task — when
     ``n_docs · vocab <= dense_budget_cells`` (the per-task matrix, 512
-    MB at the float32 default) runs as ONE task; a fired block PAST the
-    budget runs TILED — docs hash into ``_ntiles`` tiles sized so a two-tile
-    matrix fits the budget and every tile pair (i <= j) is its own
-    task (pair (x,y) lands in exactly group (min, max) of its tiles, so
-    the union is still the exact pair set; shuffle volume is _ntiles x the
-    block's sets, linear in the fan-out). Only a block whose VOCABULARY
-    exceeds the float32 exactness bound (2^24 distinct shingles) has no
-    exact dense spelling and stays on PPJoin with its own warning. Real
+    MB at the float32 default); past the budget, T is sized so a
+    two-tile matrix fits it, and shuffle volume is T x the block's sets,
+    linear in the fan-out. Only a block whose VOCABULARY exceeds the
+    float32 exactness bound (2^24 distinct shingles) has no exact dense
+    spelling and stays on PPJoin with its own warning. Real
     rich-vocabulary corpora never fire (mass per doc is small when
     vocab >> block size); templated/boilerplate-heavy hosts — exactly
     the Zipf pathology — fire per block. ``dense_min_mass=None``
@@ -921,16 +790,14 @@ def collapse_jaccard_join(
         ]
     )
     # exact and memb are persisted for the duration of this function:
-    # the r12 bounded-broadcast probe (`hot.limit(cap+1).count()` below)
-    # added a SECOND job over this subtree, and without these two
-    # persists that job re-ran the exact-collapse + 16-hash portable
-    # signature chain from scratch before `tagged.count()` ran it yet
-    # again — measured +3.6 s on the sf0.1 gate (interleaved A/B vs the
-    # r11 probe-less code, BENCH_COLLAPSE_AB_SF01.json). With them the
-    # expensive chain executes once; both are released with the other
-    # internals once `reps` materializes. memb is (id, band-key) rows —
-    # far smaller than the corpus; exact carries the distinct texts,
-    # the same order of cache mass jaccard_join's `sets` already holds.
+    # the bounded-broadcast probe (`hot.limit(cap+1).count()` below) and
+    # `tagged.count()` both read this subtree, and without the persists
+    # each would re-run the exact-collapse + 16-hash portable signature
+    # chain (interleaved A/B in BENCH_COLLAPSE_AB_SF01.json). Both are
+    # released with the other internals once `reps` materializes. memb
+    # is (id, band-key) rows — far smaller than the corpus; exact
+    # carries the distinct texts, the same order of cache mass
+    # jaccard_join's `sets` already holds.
     memb = sig.select(F.col(id_col), F.explode(keys).alias("_bk")).persist()
     # hot buckets keyed by (member count, key): a doc groups under its
     # SMALLEST hot bucket — the most SPECIFIC boilerplate family — so a
@@ -1741,8 +1608,7 @@ def semdedup(
     centroids=None,
     seed: int = 42,
     max_sample: int = 65536,
-    dense: bool = True,
-    tile_rows: int | None = 8192,
+    tile_rows: int = 8192,
     max_tiles: int = 64,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
@@ -1753,8 +1619,7 @@ def semdedup(
     is its deterministic keeper policy). Returns df + (cluster, is_dup);
     filter ``is_dup = 0`` to keep. ``id_col`` values must be unique —
     the lower-id ordering is strict, so two rows sharing an id never
-    flag each other (the dedup-module contract; every spelling here
-    agrees on unique ids, which is the only defined input).
+    flag each other (the dedup-module contract).
 
     Spark shape: bounded-sample k-means on the driver (``ivf_train`` —
     a coarse quantizer needs O(100) points/cluster, not the corpus),
@@ -1765,216 +1630,145 @@ def semdedup(
     50k clusters for LAION) or pre-split hot clusters with
     ``similarity.hyperplane_bucket`` as a secondary block key.
 
-    ``dense=True`` (default) scores each cluster with one
-    batched-matmul task (the dense-block lesson: ~0.02 µs/pair of BLAS
-    vs ~33 µs/pair of interpreted HOF lambda, measured at sf1 —
-    r12 A/B on the same corpus: 35.4 s HOF -> 4.9 s dense, identical
-    flags): the cluster's normalized vectors multiply against
-    themselves in id order, batch intermediates clamped to ~16M cells,
-    and a vector is flagged iff some LOWER-id vector in its cluster
-    scores ``cosine >= threshold`` — the same flag set as the pair-join
-    spelling up to summation-order ULPs (the gate threshold carries a
-    >= 1e-3 margin). Zero-norm vectors score cosine 0.0 (guarded
-    divide, the similarity-module contract). ``dense=False`` keeps the
-    pair-join spelling (norms factored out before the join, the same
-    guarded divide — the two spellings are flag-set identical, pinned
-    by the parity pytest incl. zero-norm vectors, string ids, and a
-    cluster past the batch clamp).
+    Scoring is a batched dense matmul (48-58x faster than a HOF-cosine
+    pair join at sf1 with identical flags; BENCH_SCALE.md,
+    BENCH_SEMDEDUP_DECADE.json): a cluster's normalized vectors
+    multiply against themselves in id order, batch intermediates
+    clamped to ~16M cells, and a vector is flagged iff some LOWER-id
+    vector in its cluster scores ``cosine >= threshold`` — exact up to
+    summation-order ULPs (the gate threshold carries a >= 1e-3 margin).
+    Zero-norm vectors score cosine 0.0 (guarded divide, the
+    similarity-module contract).
 
-    ``tile_rows`` is the hot-cluster straggler guard (the decade
-    rehearsal's attributed bound: scoring parallelism == n_clusters,
-    one applyInPandas task per cluster, so a dominant cluster — which
-    k-means cannot count-split out of a density contrast, the same
-    failure mode as the IVF dominant cell — owns the critical path). A
-    cluster larger than ``tile_rows`` is hash-split into
-    T = ceil(n / tile_rows) tiles (capped at ``max_tiles`` — past the
-    cap tiles grow proportionally instead of multiplying shuffle
-    volume; a documented bound, not a probe, so no extra job re-runs
-    the assignment scan) and scored as T·(T+1)/2 independent
-    TILE-PAIR tasks: each
-    unordered pair of vectors lands in exactly one task (the task of
-    its two tiles), which flags the HIGHER id of any qualifying pair —
-    no global ordering or prefix asymmetry needed, so the tasks are
-    balanced at (n/T)² and the flag-set union is exactly the
-    single-task answer (parity-pinned). Cost: shuffle volume T× the
-    hot cluster's rows (each row joins T tasks); flops unchanged.
-    Clusters at or under ``tile_rows`` keep T=1 — one task, the
-    single-task plan, plus only a tiny per-cluster-size broadcast
-    join. ``tile_rows=None`` disables the guard (the pre-r13 plan).
-    Measured (BENCH_SCALE.md r13): sf10 uniform 32.1 -> 19.7 s at
-    tile_rows=8192 (the default; ~9 s of both legs is the result
-    collect, so the scoring gain is larger) and sf10 dominant-cluster
-    skew (hot cluster 40% of 200k vectors) 87.8 -> 31.9 s (2.75x,
-    skew/uniform 2.7x -> 1.6x), byte-identical flags in both;
-    inert-path overhead at sf1 ~0.4 s.
+    ``tile_rows`` is the hot-cluster straggler guard (scoring
+    parallelism would otherwise equal n_clusters, one applyInPandas
+    task per cluster, so a dominant cluster — which k-means cannot
+    count-split out of a density contrast, the same failure mode as the
+    IVF dominant cell — owns the critical path). A cluster larger than
+    ``tile_rows`` is hash-split into T = ceil(n / tile_rows) tiles
+    (capped at ``max_tiles`` — past the cap tiles grow proportionally
+    instead of multiplying shuffle volume; a documented bound, not a
+    probe, so no extra job re-runs the assignment scan) and scored as
+    T·(T+1)/2 independent TILE-PAIR tasks: each unordered pair of
+    vectors lands in exactly one task (the task of its two tiles),
+    which flags the HIGHER id of any qualifying pair — no global
+    ordering or prefix asymmetry needed, so the tasks are balanced at
+    (n/T)² and the flag-set union is exactly the single-task answer
+    (parity-pinned). Cost: shuffle volume T× the hot cluster's rows
+    (each row joins T tasks); flops unchanged. Clusters at or under
+    ``tile_rows`` keep T=1 — one task, plus only a tiny
+    per-cluster-size broadcast join. Measured sf10 wall times and
+    dominant-cluster skew numbers, byte-identical flags, are in
+    BENCH_SCALE.md.
     """
-    from coffea_spark.llmdata.similarity import dot, ivf_assign, ivf_train, norm
+    import numpy as np
+    import pandas as pd
+
+    from pyspark.sql import types as T
+
+    from coffea_spark.llmdata.similarity import ivf_assign, ivf_train
 
     if centroids is None:
         centroids = ivf_train(
             df, n_lists=n_clusters, vec_col=vec_col, seed=seed, max_sample=max_sample
         )
     asg = df.withColumn("cluster", ivf_assign(F.col(vec_col), centroids))
-    if dense:
-        import numpy as np
-        import pandas as pd
+    t = float(threshold)
+    out_schema = T.StructType([T.StructField(id_col, asg.schema[id_col].dataType)])
 
-        from pyspark.sql import types as T
+    def _sorted_norm(pdf: pd.DataFrame):
+        ids = pdf[id_col].to_numpy()
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        X = np.asarray(
+            [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+        )[order]
+        nrm = np.sqrt((X * X).sum(axis=1))
+        Xn = X / np.where(nrm == 0, 1.0, nrm)[:, None]
+        return ids, Xn
 
-        t = float(threshold)
-        out_schema = T.StructType(
-            [T.StructField(id_col, asg.schema[id_col].dataType)]
-        )
+    def _prefix_flags(ids, Xn):
+        n = len(ids)
+        dupped = np.zeros(n, dtype=bool)
+        step = max(16, min(4096, 16_777_216 // max(n, 1)))
+        for s0 in range(0, n, step):
+            s1 = min(s0 + step, n)
+            S = Xn @ Xn[s0:s1].T  # (n, B) cosines
+            # column j (global gj) is dup iff any row i < gj >= t
+            hit = S >= t
+            for b, gj in enumerate(range(s0, s1)):
+                if gj and hit[:gj, b].any():
+                    dupped[gj] = True
+        return ids[dupped]
 
-        def _sorted_norm(pdf: pd.DataFrame):
-            ids = pdf[id_col].to_numpy()
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )[order]
-            nrm = np.sqrt((X * X).sum(axis=1))
-            Xn = X / np.where(nrm == 0, 1.0, nrm)[:, None]
-            return ids, Xn
+    def emit_tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        _, ti, tj = key
+        if ti == tj:
+            # within-tile pairs: the single-task prefix logic
+            ids, Xn = _sorted_norm(pdf)
+            return pd.DataFrame({id_col: _prefix_flags(ids, Xn)})
+        # cross-tile pairs: every (a, b) pair of this task is scored
+        # once; the HIGHER id of a qualifying pair is flagged. Rows are
+        # sorted by id per side, so "partner with a lower id" is a
+        # searchsorted prefix test over a running any() — no global
+        # rank needed.
+        pa = pdf[pdf["_tile"] == ti]
+        pb = pdf[pdf["_tile"] == tj]
+        if len(pa) == 0 or len(pb) == 0:
+            # a hash tile can be empty when T is near the cluster size;
+            # the exploded partner rows still form a group
+            return pd.DataFrame({id_col: pdf[id_col][:0]})
+        ida, An = _sorted_norm(pa)
+        idb, Bn = _sorted_norm(pb)
+        na, nb = len(ida), len(idb)
+        flag_a = np.zeros(na, dtype=bool)
+        flag_b = np.zeros(nb, dtype=bool)
+        arange_a = np.arange(na)
+        step = max(16, min(4096, 16_777_216 // max(na, 1)))
+        for s0 in range(0, nb, step):
+            s1 = min(s0 + step, nb)
+            hit = (An @ Bn[s0:s1].T) >= t  # (na, B)
+            # b is dup if some a with id_a < id_b hits: prefix of sorted
+            # A up to searchsorted(ida, id_b)
+            ka = np.searchsorted(ida, idb[s0:s1], side="left")
+            cum_a = np.logical_or.accumulate(hit, axis=0)
+            ok = ka > 0
+            flag_b[s0:s1] |= ok & cum_a[np.maximum(ka - 1, 0), np.arange(s1 - s0)]
+            # a is dup if some b (this chunk) with id_b < id_a
+            kb = np.searchsorted(idb[s0:s1], ida, side="left")
+            cum_b = np.logical_or.accumulate(hit, axis=1)
+            ok = kb > 0
+            flag_a |= ok & cum_b[arange_a, np.maximum(kb - 1, 0)]
+        return pd.DataFrame({id_col: np.concatenate([ida[flag_a], idb[flag_b]])})
 
-        def _prefix_flags(ids, Xn):
-            n = len(ids)
-            dupped = np.zeros(n, dtype=bool)
-            step = max(16, min(4096, 16_777_216 // max(n, 1)))
-            for s0 in range(0, n, step):
-                s1 = min(s0 + step, n)
-                S = Xn @ Xn[s0:s1].T  # (n, B) cosines
-                # column j (global gj) is dup iff any row i < gj >= t
-                hit = S >= t
-                for b, gj in enumerate(range(s0, s1)):
-                    if gj and hit[:gj, b].any():
-                        dupped[gj] = True
-            return ids[dupped]
-
-        if tile_rows is None:
-
-            def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-                ids, Xn = _sorted_norm(pdf)
-                return pd.DataFrame({id_col: _prefix_flags(ids, Xn)})
-
-            dup_ids = (
-                asg.select("cluster", id_col, vec_col)
-                .groupBy("cluster")
-                .applyInPandas(emit, schema=out_schema)
-                .withColumn("is_dup", F.lit(1))
-            )
-        else:
-
-            def emit_tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-                _, ti, tj = key
-                if ti == tj:
-                    # within-tile pairs: the single-task prefix logic
-                    ids, Xn = _sorted_norm(pdf)
-                    return pd.DataFrame({id_col: _prefix_flags(ids, Xn)})
-                # cross-tile pairs: every (a, b) pair of this task is
-                # scored once; the HIGHER id of a qualifying pair is
-                # flagged. Rows are sorted by id per side, so "partner
-                # with a lower id" is a searchsorted prefix test over a
-                # running any() — no global rank needed.
-                pa = pdf[pdf["_tile"] == ti]
-                pb = pdf[pdf["_tile"] == tj]
-                if len(pa) == 0 or len(pb) == 0:
-                    # a hash tile can be empty when T is near the
-                    # cluster size; the exploded partner rows still
-                    # form a group
-                    return pd.DataFrame({id_col: pdf[id_col][:0]})
-                ida, An = _sorted_norm(pa)
-                idb, Bn = _sorted_norm(pb)
-                na, nb = len(ida), len(idb)
-                flag_a = np.zeros(na, dtype=bool)
-                flag_b = np.zeros(nb, dtype=bool)
-                arange_a = np.arange(na)
-                step = max(16, min(4096, 16_777_216 // max(na, 1)))
-                for s0 in range(0, nb, step):
-                    s1 = min(s0 + step, nb)
-                    hit = (An @ Bn[s0:s1].T) >= t  # (na, B)
-                    # b is dup if some a with id_a < id_b hits: prefix
-                    # of sorted A up to searchsorted(ida, id_b)
-                    ka = np.searchsorted(ida, idb[s0:s1], side="left")
-                    cum_a = np.logical_or.accumulate(hit, axis=0)
-                    ok = ka > 0
-                    flag_b[s0:s1] |= ok & cum_a[
-                        np.maximum(ka - 1, 0), np.arange(s1 - s0)
-                    ]
-                    # a is dup if some b (this chunk) with id_b < id_a
-                    kb = np.searchsorted(idb[s0:s1], ida, side="left")
-                    cum_b = np.logical_or.accumulate(hit, axis=1)
-                    ok = kb > 0
-                    flag_a |= ok & cum_b[arange_a, np.maximum(kb - 1, 0)]
-                return pd.DataFrame(
-                    {id_col: np.concatenate([ida[flag_a], idb[flag_b]])}
-                )
-
-            sizes = asg.groupBy("cluster").agg(F.count(F.lit(1)).alias("_csz"))
-            ntile = F.least(
-                F.ceil(F.col("_csz") / F.lit(int(tile_rows))).cast("int"),
-                F.lit(int(max_tiles)),
-            )
-            tagged = (
-                asg.select("cluster", id_col, vec_col)
-                .join(F.broadcast(sizes), "cluster")
-                .withColumn("_T", ntile)
-                .withColumn(
-                    "_tile",
-                    F.pmod(F.hash(F.col(id_col)), F.col("_T")).cast("int"),
-                )
-                .withColumn(
-                    "_other", F.explode(F.sequence(F.lit(0), F.col("_T") - 1))
-                )
-                .select(
-                    "cluster",
-                    F.least("_tile", "_other").alias("_ti"),
-                    F.greatest("_tile", "_other").alias("_tj"),
-                    "_tile",
-                    id_col,
-                    vec_col,
-                )
-            )
-            dup_ids = (
-                tagged.groupBy("cluster", "_ti", "_tj")
-                .applyInPandas(emit_tile, schema=out_schema)
-                # an id can qualify in several tile-pair tasks; the
-                # left join below must see it once
-                .dropDuplicates([id_col])
-                .withColumn("is_dup", F.lit(1))
-            )
-    else:
-        a = asg.select(
+    sizes = asg.groupBy("cluster").agg(F.count(F.lit(1)).alias("_csz"))
+    ntile = F.least(
+        F.ceil(F.col("_csz") / F.lit(int(tile_rows))).cast("int"),
+        F.lit(int(max_tiles)),
+    )
+    tagged = (
+        asg.select("cluster", id_col, vec_col)
+        .join(F.broadcast(sizes), "cluster")
+        .withColumn("_T", ntile)
+        .withColumn("_tile", F.pmod(F.hash(F.col(id_col)), F.col("_T")).cast("int"))
+        .withColumn("_other", F.explode(F.sequence(F.lit(0), F.col("_T") - 1)))
+        .select(
             "cluster",
-            F.col(id_col).alias("_aid"),
-            F.col(vec_col).alias("_av"),
-            norm(F.col(vec_col)).alias("_an"),
+            F.least("_tile", "_other").alias("_ti"),
+            F.greatest("_tile", "_other").alias("_tj"),
+            "_tile",
+            id_col,
+            vec_col,
         )
-        b = asg.select(
-            "cluster",
-            F.col(id_col).alias("_bid"),
-            F.col(vec_col).alias("_bv"),
-            norm(F.col(vec_col)).alias("_bn"),
-        )
-        # guarded divide: a zero-norm vector scores cosine 0.0 (the
-        # similarity-module contract the dense path follows) — the bare
-        # `/` would THROW under ANSI (Spark 4 default) and silently
-        # null-drop under non-ANSI, two different answers for the same
-        # spelling
-        _denom = F.col("_an") * F.col("_bn")
-        dup_ids = (
-            a.join(b, "cluster")
-            .filter(F.col("_aid") < F.col("_bid"))
-            .filter(
-                F.when(
-                    _denom != 0, dot(F.col("_av"), F.col("_bv")) / _denom
-                ).otherwise(F.lit(0.0))
-                >= F.lit(float(threshold))
-            )
-            .select(F.col("_bid").alias(id_col))
-            .distinct()
-            .withColumn("is_dup", F.lit(1))
-        )
+    )
+    dup_ids = (
+        tagged.groupBy("cluster", "_ti", "_tj")
+        .applyInPandas(emit_tile, schema=out_schema)
+        # an id can qualify in several tile-pair tasks; the left join
+        # below must see it once
+        .dropDuplicates([id_col])
+        .withColumn("is_dup", F.lit(1))
+    )
     return asg.join(dup_ids, id_col, "left").na.fill({"is_dup": 0})
 
 

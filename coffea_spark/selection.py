@@ -112,7 +112,7 @@ class PackedSelection:
         names = list(names) or self.names
         aggs = [F.count(F.lit(1)).alias("initial")]
         if weight is not None:
-            aggs.append(F.sum(weight).alias("initial_w"))
+            aggs.append(F.coalesce(F.sum(weight), F.lit(0.0)).alias("initial_w"))
         cumulative = F.lit(True)
         for n in names:
             c = self._cuts[n]

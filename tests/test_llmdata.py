@@ -941,12 +941,13 @@ def _low_entropy_corpus(spark, n_docs=120, vocab_sz=12, words=40, seed=3,
 
 
 def test_jaccard_dense_block_guard_exact_parity(spark):
-    """r11 VERDICT #1 (Zipf-block skew guard): on a low-entropy block the
+    """Zipf-block skew guard: on a low-entropy block the
     dense bitset-matmul route must fire LOUDLY and return the EXACT same
     pair set as the pure PPJoin path — the completeness argument is
-    preserved, not approximated. Also pinned: inert on a rich-vocabulary
-    corpus, deterministic under repartitioning, and the budget fallback
-    keeps PPJoin (with its own warning) when the block doesn't fit."""
+    preserved, not approximated. Also pinned: deterministic under
+    repartitioning, blocks past the cell budget run as a multi-tile
+    grid with identical pairs, and a vocabulary past the float32 bound
+    keeps PPJoin with its own warning."""
     import warnings
 
     from coffea_spark.llmdata.dedup import jaccard_join
@@ -1094,7 +1095,7 @@ def test_jaccard_dense_guard_inert_and_unblocked(spark):
 
 
 def test_collapse_jaccard_join_cache_release(spark):
-    """r11 VERDICT #3 / ADVICE: collapse_jaccard_join's internal
+    """collapse_jaccard_join's internal
     persists (`tagged`, `hot`) are function-local — the caller can never
     release them — so the function must unpersist them itself once
     `reps` materializes. Contract: after the consumers finish, the only
@@ -1967,19 +1968,16 @@ def test_semdedup_deterministic_centroids(spark):
     assert got == {i: int(lab[i]) for i in range(40)}
 
 
-def test_semdedup_dense_pairjoin_parity(spark):
-    """dense=True (batched per-cluster matmul) and dense=False (pair
-    join) are two spellings of the same SemDeDup flag set — assert
-    IDENTICAL (id, cluster, is_dup) rows on a fixture that exercises
-    every edge the dense rewrite touched: STRING ids (the np.argsort
-    stable lexicographic order must match Spark's string '<'), a
-    ZERO-NORM vector (dense scores it cosine 0.0, the pair join's
-    null-propagating divide never passes the filter — both spellings
-    must agree it is never flagged and never flags others), and cosines
-    with >= 1e-3 margin from the threshold so summation-order ULPs
-    cannot flip a flag. Centroids are passed explicitly so cluster
-    assignment is identical across both runs."""
+def test_semdedup_string_ids_zero_norm_match_oracle(spark):
+    """The per-cluster matmul flags EXACTLY the O(n²) numpy oracle's
+    set on a fixture that exercises every edge of the scorer: STRING
+    ids (the np.argsort stable lexicographic order must match Spark's
+    string '<'), a ZERO-NORM vector (scored cosine 0.0 — never flagged
+    and never flags others), and cosines with >= 1e-3 margin from the
+    threshold so summation-order ULPs cannot flip a flag. Centroids are
+    passed explicitly so the oracle can replay the cluster assignment."""
     rng = np.random.default_rng(11)
+    t = 0.95
     base = np.linalg.qr(rng.normal(size=(8, 8)))[0][:3]  # 3 orthonormal dirs
     rows = []
     vid = 0
@@ -1995,29 +1993,43 @@ def test_semdedup_dense_pairjoin_parity(spark):
     rows.append((f"d{vid:02d}", [0.0] * 8))  # zero-norm vector
     df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
     cents = base.astype(np.float64)
-    got = {}
-    for dense in (True, False):
-        out = dedup.semdedup(
-            df, threshold=0.95, centroids=cents, dense=dense
-        ).select("vec_id", "cluster", "is_dup").collect()
-        got[dense] = sorted((r.vec_id, r.cluster, r.is_dup) for r in out)
-    assert got[True] == got[False]
-    flags = {v: f for v, _, f in got[True]}
+    # numpy oracle: nearest-centroid assignment (the zero vector's tie
+    # cannot change a flag: it scores 0.0 against everything), then the
+    # within-cluster lower-id hit rule
+    ids = [r[0] for r in rows]
+    X = np.asarray([r[1] for r in rows])
+    asg = (((X[:, None, :] - cents[None, :, :]) ** 2).sum(-1)).argmin(1)
+    nrm = np.linalg.norm(X, axis=1)
+    Xn = X / np.where(nrm == 0, 1.0, nrm)[:, None]
+    C = Xn @ Xn.T
+    off = np.abs(C - t)
+    np.fill_diagonal(off, 1.0)
+    assert off.min() > 1e-3
+    want = {
+        ids[j] for j in range(len(ids))
+        if any(asg[i] == asg[j] and C[i, j] >= t for i in range(j))
+    }
+    out = dedup.semdedup(
+        df, threshold=t, centroids=cents
+    ).select("vec_id", "cluster", "is_dup").collect()
+    assert len(out) == len(rows)
+    flags = {r.vec_id: r.is_dup for r in out}
+    assert {v for v, f in flags.items() if f == 1} == want
     assert flags[f"d{vid:02d}"] == 0  # zero-norm vector never flagged
     # the near-dup of each direction (second member, higher id) is the
     # flagged one; anchors and the cos~0.7 members are kept
-    assert {v for v, f in flags.items() if f == 1} == {"d01", "d04", "d07"}
+    assert want == {"d01", "d04", "d07"}
 
 
 def test_semdedup_tiled_parity(spark):
     """The hot-cluster tile guard (tile_rows): hash-split tile-pair
     scoring must produce EXACTLY the single-task flag set — every
     unordered pair lands in one tile-pair task and the higher id is
-    flagged, so the union equals the prefix answer. Legs: untiled
-    (tile_rows=None), moderate tiling (tile_rows=40 -> multiple tiles
-    per cluster), and degenerate tiling (tile_rows=1, T capped at
-    max_tiles=8 -> empty hash tiles exercise the empty-side guard),
-    all vs a straight O(n²) numpy oracle. Fixture has string ids, a
+    flagged, so the union equals the prefix answer. Legs: one tile per
+    cluster (the default tile_rows), moderate tiling (tile_rows=40 ->
+    multiple tiles per cluster), and degenerate tiling (tile_rows=1, T
+    capped at max_tiles=8 -> empty hash tiles exercise the empty-side
+    guard), all vs a straight O(n²) numpy oracle. Fixture has string ids, a
     zero-norm vector, and >= 1e-6 threshold margin."""
     rng = np.random.default_rng(23)
     n, dim, t = 240, 12, 0.9
@@ -2049,17 +2061,17 @@ def test_semdedup_tiled_parity(spark):
     ).repartition(6)
     got = {}
     for tag, kw in (
-        ("untiled", {"tile_rows": None}),
+        ("one_tile", {}),
         ("tiled", {"tile_rows": 40}),
         ("degenerate", {"tile_rows": 1, "max_tiles": 8}),
     ):
         out = dedup.semdedup(
-            df, threshold=t, centroids=cents, dense=True, **kw
+            df, threshold=t, centroids=cents, **kw
         ).select("vec_id", "cluster", "is_dup").collect()
         assert len(out) == n, tag  # no row duplication from the union
         got[tag] = sorted((r.vec_id, r.cluster, r.is_dup) for r in out)
         assert {v for v, _, f in got[tag] if f == 1} == want, tag
-    assert got["untiled"] == got["tiled"] == got["degenerate"]
+    assert got["one_tile"] == got["tiled"] == got["degenerate"]
     flags = {v: f for v, _, f in got["tiled"]}
     assert flags["doc0057"] == 0  # zero-norm never flagged
 
@@ -2106,7 +2118,6 @@ def test_semdedup_tiled_cross_chunk_seam(spark):
         df,
         threshold=t,
         centroids=np.zeros((1, dim)),
-        dense=True,
         tile_rows=tile_rows,
     ).select("vec_id", "is_dup").collect()
     assert len(out) == n
@@ -2121,10 +2132,7 @@ def test_semdedup_dense_batch_clamp(spark):
     hit only by rows from batch-1's range, etc.). Expected flags come
     from a straight O(n²) numpy oracle on the same normalized matrix;
     the fixture asserts every pairwise cosine sits >= 1e-6 away from
-    the threshold so BLAS summation order cannot flip a flag. (The
-    dense=False pair-join leg is deliberately absent here: 12.5M HOF
-    cosine evaluations at ~33 us each is a 7-minute pytest — parity is
-    pinned on the small fixture above, this case pins the clamp.)"""
+    the threshold so BLAS summation order cannot flip a flag."""
     rng = np.random.default_rng(5)
     n, dim, t = 5000, 16, 0.9
     base = rng.normal(size=(250, dim))
@@ -2144,7 +2152,7 @@ def test_semdedup_dense_batch_clamp(spark):
         "vec_id long, embedding array<double>",
     ).repartition(8)
     out = dedup.semdedup(
-        df, threshold=t, centroids=np.zeros((1, dim)), dense=True
+        df, threshold=t, centroids=np.zeros((1, dim))
     ).select("vec_id", "is_dup").collect()
     assert {r.vec_id for r in out if r.is_dup == 1} == want
     assert len(out) == n

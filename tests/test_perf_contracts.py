@@ -2,12 +2,16 @@
 the plan or the session that a slower spelling would break, asserted
 without timing anything."""
 
+import uuid
+
 import pytest
 from pyspark.errors import ArithmeticException
 from pyspark.errors.utils import is_debugging_enabled
 from pyspark.sql import functions as F
 
+from coffea_spark.llmdata.dedup import jaccard_join
 from coffea_spark.selection import PackedSelection
+from tests.test_llmdata import _low_entropy_corpus
 
 
 def _cuts():
@@ -56,3 +60,41 @@ def test_session_skips_call_site_capture(spark):
     with pytest.raises(ArithmeticException) as err:
         spark.range(3).select(F.col("id") / F.lit(0)).collect()
     assert err.value.getCondition() == "DIVIDE_BY_ZERO"
+
+
+def _job_count(spark, run):
+    """Spark jobs ``run()`` launches from this thread, counted by job
+    group on a cold cache (broadcast builds run under their own group)."""
+    sc = spark.sparkContext
+    group = f"perf-contract-{uuid.uuid4().hex}"
+    spark.catalog.clearCache()
+    sc.setJobGroup(group, "job-count contract")
+    try:
+        run()
+    finally:
+        sc._jsc.clearJobGroup()
+        spark.catalog.clearCache()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.filterwarnings("ignore:jaccard_join")
+def test_jaccard_join_job_counts(spark):
+    rows = [
+        (i, f"document number {i} speaks about unique topic alpha{i} beta{i}")
+        for i in range(30)
+    ]
+    rows += [(100, rows[0][1] + " x"), (101, rows[1][1])]
+    rich = spark.createDataFrame(rows, "doc_id long, text string")
+    low = _low_entropy_corpus(spark)
+    forced = dict(block_cols=["lang", "source"], dense_min_mass=100, dense_mass_per_doc=1)
+    calls = {
+        "inert": (15, lambda: jaccard_join(rich, 0.5, "doc_id", "text", 5).collect()),
+        "guard_off": (12, lambda: jaccard_join(
+            rich, 0.5, "doc_id", "text", 5, dense_min_mass=None).collect()),
+        "dense_one_tile": (30, lambda: jaccard_join(
+            low, 0.5, "doc_id", "text", 3, **forced).collect()),
+        "dense_tiled": (30, lambda: jaccard_join(
+            low, 0.5, "doc_id", "text", 3, dense_budget_cells=2000, **forced).collect()),
+    }
+    got = {name: _job_count(spark, run) for name, (_, run) in calls.items()}
+    assert all(got[name] <= cap for name, (cap, _) in calls.items()), got

@@ -399,7 +399,6 @@ def test_semdedup_tiled_matches_bruteforce(spark, n, dim, threshold, seed):
         df,
         threshold=threshold,
         centroids=cents,
-        dense=True,
         tile_rows=4,
         max_tiles=5,
     ).collect()

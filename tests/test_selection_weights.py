@@ -114,7 +114,7 @@ def test_cutflow_and_nminusone_match_filter_counts(spark):
         initial = df.count()
         assert cf.initial == cfw.initial == n1.initial == initial
         assert cf.wevonecut is None and cf.initial_w is None
-        assert cfw.initial_w == df.agg(F.sum("w")).first()[0]
+        assert cfw.initial_w == df.agg(F.coalesce(F.sum("w"), F.lit(0.0))).first()[0]
         for i, n in enumerate(names):
             one_n, one_w = _direct(df, cuts[n])
             cum_n, cum_w = _direct(df, all_of(names[: i + 1]))
@@ -125,6 +125,7 @@ def test_cutflow_and_nminusone_match_filter_counts(spark):
             assert n1.nev[i] == _direct(df, all_of([m for m in names if m != n]))[0]
         assert n1.nev_all == _direct(df, all_of(names))[0]
     assert cf.nevcutflow == [0, 0, 0] and n1.nev == [0, 0, 0] and n1.nev_all == 0
+    assert cfw.initial_w == 0.0
 
 
 def test_weights_variations(spark):
