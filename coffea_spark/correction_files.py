@@ -42,7 +42,7 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from coffea_spark.lookup import _bin_index_expr, _substitute
+from coffea_spark.lookup import _bin_index_expr, _lit_array, _substitute
 
 __all__ = [
     "read_btag_csv",
@@ -70,10 +70,6 @@ def _open_text(path: str):
     if magic == b"\x1f\x8b":
         return io.TextIOWrapper(gzip.open(path, "rb"), encoding="ascii")
     return open(path, encoding="ascii")
-
-
-def _lit_array(vals) -> Column:
-    return F.array(*[F.lit(float(v)) for v in vals])
 
 
 def _pick(flat_vals: np.ndarray, idx: Column) -> Column:
@@ -195,9 +191,7 @@ def _nested_row_index(cols: list[Column], edges0: np.ndarray, levels) -> Column:
     search, then per level a jagged search inside the parent cell's edge
     slice. Out-of-range values clamp into the edge bins at every level
     (reference lookup semantics)."""
-    cell = _bin_index_expr(
-        cols[0], np.nan_to_num(edges0, posinf=1e300, neginf=-1e300)
-    )
+    cell = _bin_index_expr(cols[0], edges0)
     for (flat_edges, eoff, ecnt, coff), col in zip(levels, cols[1:]):
         off = _pick(eoff, cell).cast("int")
         cnt = _pick(ecnt, cell).cast("int")

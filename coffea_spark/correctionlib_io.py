@@ -32,19 +32,13 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from coffea_spark.correction_files import _normalize_formula
-from coffea_spark.lookup import _bin_index_expr, _substitute
+from coffea_spark.lookup import _bin_index_expr, _cell_index, _lit_array, _substitute
 
 _VARS = "xyzt"
 
 
 class CorrectionError(ValueError):
     pass
-
-
-def _finite(edges) -> np.ndarray:
-    return np.nan_to_num(
-        np.asarray(edges, dtype=float), posinf=1e300, neginf=-1e300
-    )
 
 
 class Correction:
@@ -111,40 +105,31 @@ class Correction:
             return F.when(~out_of_range, result)  # NULL out of range
         return F.when(out_of_range, self._compile(flow, env)).otherwise(result)
 
+    def _gather(self, idx: Column, content, env) -> Column:
+        """``content[idx]``: one literal-array gather when every entry is a
+        number, else a CASE chain over the compiled sub-nodes."""
+        if all(isinstance(c, (int, float)) for c in content):
+            return F.element_at(_lit_array(content), idx + F.lit(1))
+        result = F.lit(None).cast("double")
+        for i, sub in enumerate(content):
+            result = F.when(idx == F.lit(i), self._compile(sub, env)).otherwise(result)
+        return result
+
     def _binning(self, node, env) -> Column:
         x = env[node["input"]]
         edges = self._edges_of(node)
-        idx = _bin_index_expr(x, _finite(edges))
-        content = node["content"]
-        if all(isinstance(c, (int, float)) for c in content):
-            arr = F.array(*[F.lit(float(c)) for c in content])
-            result = F.element_at(arr, idx + F.lit(1))
-        else:
-            result = F.lit(None).cast("double")
-            for i, sub in enumerate(content):
-                result = F.when(idx == F.lit(i), self._compile(sub, env)).otherwise(result)
+        result = self._gather(_bin_index_expr(x, edges), node["content"], env)
         return self._guard_flow(node, x, edges, env, result)
 
     def _multibinning(self, node, env) -> Column:
         inputs = node["inputs"]
         edge_sets = [np.asarray(e, dtype=float) for e in node["edges"]]
-        # C-order: last axis fastest
-        dims = [len(e) - 1 for e in edge_sets]
-        strides = [int(np.prod(dims[d + 1:], dtype=int)) for d in range(len(dims))]
-        idx = F.lit(0)
         guard = F.lit(False)
-        for name, edges, stride in zip(inputs, edge_sets, strides):
+        for name, edges in zip(inputs, edge_sets):
             x = env[name]
-            idx = idx + _bin_index_expr(x, _finite(edges)) * F.lit(stride)
             guard = guard | (x < F.lit(float(edges[0]))) | (x >= F.lit(float(edges[-1])))
-        content = node["content"]
-        if all(isinstance(c, (int, float)) for c in content):
-            arr = F.array(*[F.lit(float(c)) for c in content])
-            result = F.element_at(arr, idx + F.lit(1))
-        else:
-            result = F.lit(None).cast("double")
-            for i, sub in enumerate(content):
-                result = F.when(idx == F.lit(i), self._compile(sub, env)).otherwise(result)
+        idx = _cell_index([env[name] for name in inputs], edge_sets)
+        result = self._gather(idx, node["content"], env)
         flow = node.get("flow", "error")
         if flow == "clamp":
             return result

@@ -15,7 +15,9 @@ too); filter them out for plotting.
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 
@@ -52,6 +54,40 @@ def bucket_edges(col: Column, edges: list[float]) -> Column:
     )
 
 
+def _col(c: Column | str) -> Column:
+    """A column name or a Column, as a Column."""
+    return F.col(c) if isinstance(c, str) else c
+
+
+def _weight(weight: Column | str | None) -> Column:
+    """The fill weight: 1.0 per row when ``weight`` is None."""
+    return F.lit(1.0) if weight is None else _col(weight)
+
+
+def _fill(df: DataFrame, bins: dict, weight, by, flow: bool) -> DataFrame:
+    """The one histogram fill. ``bins`` maps each bin column to (bin-id
+    Column, in-range bin count); output is ``by..., bins..., sumw, sumw2,
+    n``, one row per occupied cell. ``flow=False`` keeps [0, nbins)."""
+    by = by or []
+    out = (
+        df.select(
+            *by,
+            *[expr.alias(name) for name, (expr, _) in bins.items()],
+            _weight(weight).alias("_w"),
+        )
+        .groupBy(*by, *bins)
+        .agg(
+            F.sum("_w").alias("sumw"),
+            F.sum(F.col("_w") * F.col("_w")).alias("sumw2"),
+            F.count("_w").alias("n"),
+        )
+    )
+    if not flow:
+        conds = [c for b, (_, n) in bins.items() for c in (F.col(b) >= 0, F.col(b) < n)]
+        out = out.filter(reduce(operator.and_, conds))
+    return out
+
+
 def hist1d(
     df: DataFrame,
     value: Column | str,
@@ -68,26 +104,8 @@ def hist1d(
     category axis. Plan shape: project -> partial hash agg -> final agg;
     a single small shuffle.
     """
-    value = F.col(value) if isinstance(value, str) else value
-    wcol = (
-        F.lit(1.0)
-        if weight is None
-        else (F.col(weight) if isinstance(weight, str) else weight)
-    )
-    b = bucket(value, lo, hi, nbins).alias("bin")
-    keys = [F.col(k) for k in (by or [])] + [b]
-    out = (
-        df.select(*keys, wcol.alias("_w"))
-        .groupBy(*[k if isinstance(k, str) else k for k in (by or [])], "bin")
-        .agg(
-            F.sum("_w").alias("sumw"),
-            F.sum(F.col("_w") * F.col("_w")).alias("sumw2"),
-            F.count("_w").alias("n"),
-        )
-    )
-    if not flow:
-        out = out.filter((F.col("bin") >= 0) & (F.col("bin") < nbins))
-    return out
+    b = bucket(_col(value), lo, hi, nbins)
+    return _fill(df, {"bin": (b, nbins)}, weight, by, flow)
 
 
 def hist1d_edges(
@@ -106,26 +124,8 @@ def hist1d_edges(
     i in 0..len(edges)-2; underflow -> -1, overflow -> len(edges)-1."""
     if len(edges) < 2 or any(b <= a for a, b in zip(edges, edges[1:])):
         raise ValueError("edges must be strictly increasing with >= 2 entries")
-    value = F.col(value) if isinstance(value, str) else value
-    wcol = (
-        F.lit(1.0)
-        if weight is None
-        else (F.col(weight) if isinstance(weight, str) else weight)
-    )
-    b = bucket_edges(value, edges).alias("bin")
-    keys = [F.col(k) for k in (by or [])] + [b]
-    out = (
-        df.select(*keys, wcol.alias("_w"))
-        .groupBy(*(by or []), "bin")
-        .agg(
-            F.sum("_w").alias("sumw"),
-            F.sum(F.col("_w") * F.col("_w")).alias("sumw2"),
-            F.count("_w").alias("n"),
-        )
-    )
-    if not flow:
-        out = out.filter((F.col("bin") >= 0) & (F.col("bin") < len(edges) - 1))
-    return out
+    b = bucket_edges(_col(value), edges)
+    return _fill(df, {"bin": (b, len(edges) - 1)}, weight, by, flow)
 
 
 def hist2d(
@@ -142,32 +142,9 @@ def hist2d(
     flow: bool = True,
 ) -> DataFrame:
     """Weighted 2-D histogram: group by the bucket-id tuple."""
-    xvalue = F.col(xvalue) if isinstance(xvalue, str) else xvalue
-    yvalue = F.col(yvalue) if isinstance(yvalue, str) else yvalue
-    wcol = (
-        F.lit(1.0)
-        if weight is None
-        else (F.col(weight) if isinstance(weight, str) else weight)
-    )
-    out = (
-        df.select(
-            bucket(xvalue, xlo, xhi, xbins).alias("xbin"),
-            bucket(yvalue, ylo, yhi, ybins).alias("ybin"),
-            wcol.alias("_w"),
-        )
-        .groupBy("xbin", "ybin")
-        .agg(
-            F.sum("_w").alias("sumw"),
-            F.sum(F.col("_w") * F.col("_w")).alias("sumw2"),
-            F.count("_w").alias("n"),
-        )
-    )
-    if not flow:
-        out = out.filter(
-            (F.col("xbin") >= 0) & (F.col("xbin") < xbins)
-            & (F.col("ybin") >= 0) & (F.col("ybin") < ybins)
-        )
-    return out
+    x = bucket(_col(xvalue), xlo, xhi, xbins)
+    y = bucket(_col(yvalue), ylo, yhi, ybins)
+    return _fill(df, {"xbin": (x, xbins), "ybin": (y, ybins)}, weight, None, flow)
 
 
 def profile1d(
@@ -185,18 +162,11 @@ def profile1d(
     accumulators (sumw, sumwy, sumwy2, n) needed for the error on the
     mean. Same bucket-id groupBy shape as hist1d — the shuffle carries
     one small row per occupied bin, map-side combined."""
-    xvalue = F.col(xvalue) if isinstance(xvalue, str) else xvalue
-    yvalue = F.col(yvalue) if isinstance(yvalue, str) else yvalue
-    wcol = (
-        F.lit(1.0)
-        if weight is None
-        else (F.col(weight) if isinstance(weight, str) else weight)
-    )
     out = (
         df.select(
-            bucket(xvalue, lo, hi, nbins).alias("bin"),
-            wcol.alias("_w"),
-            yvalue.alias("_y"),
+            bucket(_col(xvalue), lo, hi, nbins).alias("bin"),
+            _weight(weight).alias("_w"),
+            _col(yvalue).alias("_y"),
         )
         .groupBy("bin")
         .agg(
@@ -289,37 +259,17 @@ def histnd(
 
     ``axes`` is a list of (value, nbins, lo, hi) tuples (value: Column or
     column name). Output: one row per occupied bucket tuple
-    (bin0..bin{n-1}, by..., sumw, sumw2, n). Plan shape is identical at
+    (by..., bin0..bin{n-1}, sumw, sumw2, n). Plan shape is identical at
     any dimensionality: project to bucket ids -> partial hash agg ->
     final agg — ONE shuffle of (occupied buckets x partitions) tiny
     rows, never the data. Sparse by construction: empty buckets don't
     exist, so a 30000^3 binning costs only the occupied cells (the dense
     ndarray view is driver-side, HistND.from_df)."""
-    wcol = (
-        F.lit(1.0)
-        if weight is None
-        else (F.col(weight) if isinstance(weight, str) else weight)
-    )
-    bins = []
-    for i, (value, nbins, lo, hi) in enumerate(axes):
-        v = F.col(value) if isinstance(value, str) else value
-        bins.append(bucket(v, lo, hi, nbins).alias(f"bin{i}"))
-    keys = [F.col(k) for k in (by or [])]
-    out = (
-        df.select(*keys, *bins, wcol.alias("_w"))
-        .groupBy(*(by or []), *[f"bin{i}" for i in range(len(axes))])
-        .agg(
-            F.sum("_w").alias("sumw"),
-            F.sum(F.col("_w") * F.col("_w")).alias("sumw2"),
-            F.count("_w").alias("n"),
-        )
-    )
-    if not flow:
-        cond = F.lit(True)
-        for i, (_, nbins, _, _) in enumerate(axes):
-            cond = cond & (F.col(f"bin{i}") >= 0) & (F.col(f"bin{i}") < nbins)
-        out = out.filter(cond)
-    return out
+    bins = {
+        f"bin{i}": (bucket(_col(value), lo, hi, nbins), nbins)
+        for i, (value, nbins, lo, hi) in enumerate(axes)
+    }
+    return _fill(df, bins, weight, by, flow)
 
 
 def hist_categorical(
@@ -342,13 +292,8 @@ def hist_categorical(
 
     Scale: explode -> partial hash agg -> final agg; the shuffle carries
     one row per DISTINCT label per partition."""
-    cat = F.col(categories) if isinstance(categories, str) else categories
-    wcol = (
-        F.lit(1.0)
-        if weight is None
-        else (F.col(weight) if isinstance(weight, str) else weight)
-    )
-    base = df.select(*[F.col(k) for k in (by or [])], cat.alias("_c"), wcol.alias("_w"))
+    cols = [*(by or []), _col(categories).alias("_c"), _weight(weight).alias("_w")]
+    base = df.select(*cols)
     ctype = base.schema["_c"].dataType.typeName()
     if ctype == "array":
         base = base.select(*(by or []), F.explode("_c").alias("_c"), "_w")

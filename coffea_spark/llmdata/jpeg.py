@@ -421,29 +421,6 @@ class _BitReader:
         self.pos += 2
 
 
-def _decode_table(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
-    """(length, code) -> symbol."""
-    out, code, k = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[(length, code)] = vals[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return out
-
-
-def _read_symbol(br: _BitReader, table: dict[tuple[int, int], int]) -> int:
-    code, length = 0, 0
-    while length < 17:
-        code = (code << 1) | br.bit()
-        length += 1
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid Huffman code in entropy data")
-
-
 def _get_qt(qt: dict, tq: int) -> "np.ndarray":
     """Quantization table by id, fail-loud when the id was never defined
     (a corrupt SOF/DQT selector must not surface as a raw KeyError)."""

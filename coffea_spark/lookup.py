@@ -4,38 +4,46 @@ Reference: lookup_tools/dense_lookup.py:8-60 (N-dim searchsorted with
 clamp-to-edge), dispatch lookup_tools/lookup_base.py:75-138;
 dense_evaluated_lookup.py (per-bin formula evaluation).
 
-Two execution strategies, chosen by table size:
-
-- small tables (the common case: correction maps are KBs): the bin edges
-  and values become LITERAL arrays and the lookup compiles to pure column
-  expressions — runs inside whole-stage codegen, zero Python, zero
-  shuffle, replicated to every task for free.
-- large tables: the numpy arrays ride a Spark broadcast variable and the
-  lookup is an Arrow-batched pandas UDF doing vectorized
-  ``np.searchsorted`` — one broadcast, no shuffle.
-
-Both clamp out-of-range coordinates to the edge bins, exactly like the
-reference (`np.clip(searchsorted(...)-1, 0, n-2)`).
+One strategy for every table: the bin edges and the values become
+LITERAL arrays and the lookup compiles to pure column expressions — a
+clamped bin search per axis (:func:`_bin_index_expr`), one C-order cell
+index (:func:`_cell_index`) and one ``element_at`` gather, inside
+whole-stage codegen: zero Python, zero shuffle. Out-of-range coordinates
+clamp to the edge bins like the reference (`np.clip(searchsorted(...)-1, 0, n-2)`).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-_EXPR_SIZE_LIMIT = 4096  # values above this go through the broadcast-UDF path
+
+def _lit_array(vals) -> Column:
+    """Literal ``array<double>`` of ``vals``."""
+    return F.array(*[F.lit(float(v)) for v in vals])
 
 
 def _bin_index_expr(x: Column, edges: np.ndarray) -> Column:
     """searchsorted(edges, x, 'right')-1 clamped to [0, nbins-1] as a
-    column expression (edges literal)."""
-    arr = F.array(*[F.lit(float(e)) for e in edges])
-    raw = F.size(F.filter(arr, lambda e: e <= x)) - 1
+    column expression (edges literal; +/-inf edges become +/-1e300)."""
+    finite = np.nan_to_num(np.asarray(edges, dtype=float), posinf=1e300, neginf=-1e300)
+    raw = F.size(F.filter(_lit_array(finite), lambda e: e <= x)) - 1
     return F.greatest(F.least(raw, F.lit(len(edges) - 2)), F.lit(0))
+
+
+def _cell_index(coords, edges) -> Column:
+    """0-based C-order (last axis fastest) cell index of ``coords`` over
+    the axes ``edges``: strides come from the edge lengths, so it indexes
+    the logical ``ravel()`` of any table layout. One-bin axes add nothing."""
+    dims = [len(e) - 1 for e in edges]
+    idx = F.lit(0)
+    for d, (c, e) in enumerate(zip(coords, edges)):
+        if dims[d] > 1:
+            stride = int(np.prod(dims[d + 1:], dtype=int))
+            idx = idx + _bin_index_expr(c, e) * F.lit(stride)
+    return idx
 
 
 class DenseLookup:
@@ -50,58 +58,18 @@ class DenseLookup:
         if isinstance(bins, np.ndarray) and bins.ndim == 1:
             bins = [bins]
         self.bins = [np.asarray(b, dtype=float) for b in bins]
-        # contiguous copy: indexing math below uses C-order logical
-        # strides, which physical strides of a transposed/sliced input
-        # would NOT match
-        self.values = np.ascontiguousarray(np.asarray(values, dtype=float))
+        self.values = np.asarray(values, dtype=float)
         expected = tuple(len(b) - 1 for b in self.bins)
         if self.values.shape != expected:
             raise ValueError(
                 f"values shape {self.values.shape} != bins shape {expected}"
             )
 
-    # -- expression path ---------------------------------------------------
-
-    def _expr_call(self, *coords: Column) -> Column:
-        flat = self.values.ravel()
-        values_lit = F.array(*[F.lit(float(v)) for v in flat])
-        # logical C-order strides from the shape (never the ndarray's
-        # physical strides, which differ for non-contiguous views)
-        strides = [
-            int(np.prod(self.values.shape[d + 1:], dtype=int))
-            for d in range(self.values.ndim)
-        ]
-        idx = F.lit(0)
-        for c, edges, stride in zip(coords, self.bins, strides):
-            # replace inf edges with huge finite sentinels for literal math
-            e = np.nan_to_num(edges, posinf=1e300, neginf=-1e300)
-            idx = idx + _bin_index_expr(c, e) * F.lit(stride)
-        return F.element_at(values_lit, idx + F.lit(1))
-
-    # -- broadcast UDF path ------------------------------------------------
-
-    def _udf_call(self, spark: SparkSession, *coords: Column) -> Column:
-        bins = self.bins
-        values = self.values
-        bc = spark.sparkContext.broadcast((bins, values))
-
-        @F.pandas_udf(T.DoubleType())
-        def lookup_udf(*cols: pd.Series) -> pd.Series:
-            b, v = bc.value
-            idxs = []
-            for s, edges in zip(cols, b):
-                i = np.searchsorted(edges, s.to_numpy(dtype=float), side="right") - 1
-                idxs.append(np.clip(i, 0, len(edges) - 2))
-            return pd.Series(v[tuple(idxs)])
-
-        return lookup_udf(*coords)
-
-    def __call__(self, *coords: Column, spark: SparkSession | None = None) -> Column:
+    def __call__(self, *coords: Column) -> Column:
         if len(coords) != len(self.bins):
             raise ValueError(f"expected {len(self.bins)} coordinates")
-        if self.values.size <= _EXPR_SIZE_LIMIT or spark is None:
-            return self._expr_call(*coords)
-        return self._udf_call(spark, *coords)
+        idx = _cell_index(coords, self.bins)
+        return F.element_at(_lit_array(self.values.ravel()), idx + F.lit(1))
 
 
 class FormulaLookup:
@@ -117,7 +85,7 @@ class FormulaLookup:
         self.formulas = formulas
 
     def __call__(self, coord: Column, x: Column) -> Column:
-        idx = _bin_index_expr(coord, np.nan_to_num(self.bins, posinf=1e300, neginf=-1e300))
+        idx = _bin_index_expr(coord, self.bins)
         result = F.lit(None).cast("double")
         for i, formula in enumerate(self.formulas):
             compiled = _substitute(formula, x)
@@ -177,8 +145,6 @@ def _substitute(formula: str, x: Column | None = None, variables: dict[str, Colu
             if isinstance(node.op, ast.USub):
                 return -build(node.operand)
             raise ValueError("unsupported unary op")
-        if isinstance(node, ast.Num):  # pragma: no cover (py<3.8 style)
-            return F.lit(float(node.n))
         if isinstance(node, ast.Constant):
             return F.lit(float(node.value))
         if isinstance(node, ast.Name):
@@ -222,16 +188,9 @@ class DenseMappedLookup:
     def __call__(self, *coords: Column) -> Column:
         if len(coords) != len(self.axes):
             raise ValueError(f"expected {len(self.axes)} coordinates")
-        flat = self.mapping.ravel()
-        strides = [int(s) for s in np.array(self.mapping.strides) // self.mapping.itemsize]
-        idx = F.lit(0)
-        for c, edges, stride in zip(coords, self.axes, strides):
-            if len(edges) == 2:
-                continue  # degenerate axis: always bin 0
-            e = np.nan_to_num(edges, posinf=1e300, neginf=-1e300)
-            idx = idx + _bin_index_expr(c, e) * F.lit(stride)
+        idx = _cell_index(coords, self.axes)
         mapidx = F.element_at(
-            F.array(*[F.lit(int(v)) for v in flat]), idx + F.lit(1)
+            F.array(*[F.lit(int(v)) for v in self.mapping.ravel()]), idx + F.lit(1)
         )
         result = F.lit(None).cast("double")
         for i, formula in enumerate(self.formulas):

@@ -97,17 +97,6 @@ def numpy_mlp_wrapper(model_path: str, name: str = "numpy-mlp") -> BatchInferenc
     return BatchInferencer(name, load, predict)
 
 
-def _import_gate(module: str, extra: str):
-    def loader_factory(*a, **k):
-        raise ImportError(
-            f"{module} is not installed in this environment; install it to use "
-            f"{extra} (the BatchInferencer mechanism itself works without it — "
-            "see tests/test_streaming_ml_runner.py)"
-        )
-
-    return loader_factory
-
-
 def torch_wrapper(
     model_path: str, name: str = "torch-model", *, backend=None
 ) -> BatchInferencer:

@@ -446,18 +446,20 @@ def test_dense_mapped_lookup(spark):
     axes = [np.array([0.0, 1.0, 2.0]), np.array([0.0, 10.0, 20.0])]
     mapping = np.array([[0, 1], [2, -1]])
     formulas = ["1.0 + 0.1*x", "2.0", "sqrt(x)"]
-    lut = DenseMappedLookup(axes, mapping, formulas, feval_dim=1)
     df = spark.createDataFrame(
         [(0.5, 5.0), (0.5, 15.0), (1.5, 5.0), (1.5, 15.0), (0.5, -5.0), (0.5, 99.0)],
         "a double, b double",
     )
-    got = [r.v for r in df.select(lut(F.col("a"), F.col("b")).alias("v")).collect()]
-    assert got[0] == pytest.approx(1.0 + 0.1 * 5.0)
-    assert got[1] == 2.0
-    assert got[2] == pytest.approx(np.sqrt(5.0))
-    assert got[3] is None           # mapping -1 -> no correction
-    assert got[4] == pytest.approx(1.0)  # bin clamps low, x clamps to axis start
-    assert got[5] == 2.0                 # bin clamps high into the constant row
+    # a Fortran-ordered mapping must index by logical cell, not memory stride
+    for m in (mapping, np.asfortranarray(mapping)):
+        lut = DenseMappedLookup(axes, m, formulas, feval_dim=1)
+        got = [r.v for r in df.select(lut(F.col("a"), F.col("b")).alias("v")).collect()]
+        assert got[0] == pytest.approx(1.0 + 0.1 * 5.0)
+        assert got[1] == 2.0
+        assert got[2] == pytest.approx(np.sqrt(5.0))
+        assert got[3] is None           # mapping -1 -> no correction
+        assert got[4] == pytest.approx(1.0)  # bin clamps low, x clamps to axis start
+        assert got[5] == 2.0                 # bin clamps high into the constant row
 
 
 def test_doublecrystalball(spark):

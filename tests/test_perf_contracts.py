@@ -2,14 +2,25 @@
 the plan or the session that a slower spelling would break, asserted
 without timing anything."""
 
+import re
 import uuid
 
+import numpy as np
 import pytest
 from pyspark.errors import ArithmeticException
 from pyspark.errors.utils import is_debugging_enabled
 from pyspark.sql import functions as F
 
+from coffea_spark.hist import (
+    hist1d,
+    hist1d_edges,
+    hist2d,
+    hist_categorical,
+    histnd,
+    profile1d,
+)
 from coffea_spark.llmdata.dedup import jaccard_join
+from coffea_spark.lookup import DenseLookup, DenseMappedLookup
 from coffea_spark.selection import PackedSelection
 from tests.test_llmdata import _low_entropy_corpus
 
@@ -98,3 +109,35 @@ def test_jaccard_join_job_counts(spark):
     }
     got = {name: _job_count(spark, run) for name, (_, run) in calls.items()}
     assert all(got[name] <= cap for name, (cap, _) in calls.items()), got
+
+
+def _executed_plan(df):
+    """The executed (AQE final) physical plan of ``df`` after a collect."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_hist_fills_shuffle_once_and_lookups_stay_in_jvm(spark):
+    df = spark.sql(
+        "SELECT * FROM VALUES (0.5D, 1.5D, 2.0D, 'a', array('p', 'q')),"
+        " (2.5D, 0.5D, 1.0D, 'b', array('q')), (7.0D, -1.0D, 0.5D, 'a', array())"
+        " AS t(x, y, w, s, tags)"
+    )
+    fills = {
+        "hist1d": hist1d(df, "x", 4, 0.0, 4.0, weight="w", by=["s"]),
+        "hist1d_edges": hist1d_edges(df, "x", [0.0, 1.0, 4.0], weight="w"),
+        "hist2d": hist2d(df, "x", "y", 4, 0.0, 4.0, 2, 0.0, 2.0, weight="w", flow=False),
+        "histnd": histnd(df, [("x", 4, 0.0, 4.0), ("y", 2, 0.0, 2.0)], by=["s"], flow=False),
+        "profile1d": profile1d(df, "x", "y", 4, 0.0, 4.0, weight="w"),
+        "hist_categorical": hist_categorical(df, "tags", weight="w"),
+    }
+    for name, h in fills.items():
+        plan = _executed_plan(h)
+        assert len(re.findall(r"\bExchange\b", plan)) == 1, (name, plan)
+    axes = [np.array([0.0, 2.0, 4.0]), np.array([0.0, 1.0, 2.0])]
+    dense = DenseLookup(np.array([[1.0, 2.0], [3.0, 4.0]]), axes)
+    mapped = DenseMappedLookup(axes, np.array([[0, 1], [1, -1]]), ["x", "2.0"], feval_dim=0)
+    plan = _executed_plan(df.select(
+        dense(F.col("x"), F.col("y")).alias("d"), mapped(F.col("x"), F.col("y")).alias("m")))
+    assert "EvalPython" not in plan, plan
