@@ -90,8 +90,7 @@ class Correction:
         raise CorrectionError(f"{self.name}: unsupported nodetype {nt!r}")
 
     @staticmethod
-    def _edges_of(node) -> np.ndarray:
-        edges = node["edges"]
+    def _edges_of(edges) -> np.ndarray:
         if isinstance(edges, dict):  # UniformBinning
             return np.linspace(edges["low"], edges["high"], edges["n"] + 1)
         return np.asarray(edges, dtype=float)
@@ -117,13 +116,13 @@ class Correction:
 
     def _binning(self, node, env) -> Column:
         x = env[node["input"]]
-        edges = self._edges_of(node)
+        edges = self._edges_of(node["edges"])
         result = self._gather(_bin_index_expr(x, edges), node["content"], env)
         return self._guard_flow(node, x, edges, env, result)
 
     def _multibinning(self, node, env) -> Column:
         inputs = node["inputs"]
-        edge_sets = [np.asarray(e, dtype=float) for e in node["edges"]]
+        edge_sets = [self._edges_of(e) for e in node["edges"]]
         guard = F.lit(False)
         for name, edges in zip(inputs, edge_sets):
             x = env[name]

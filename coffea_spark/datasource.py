@@ -1,22 +1,24 @@
 """``spark.read.format("root")`` — the native ROOT scan as a Spark
-Python Data Source (Spark 4 ``pyspark.sql.datasource`` API).
+Python Data Source (Spark 4 ``pyspark.sql.datasource`` API), and the
+engine's only batch ROOT scan: :func:`coffea_spark.root_reader.read_root`
+is this source with its arguments as options.
 
 SURVEY.md §2.1 mapped the reference's `NanoEventsFactory.from_root`
 (factory.py:267-480) to "converted parquet; a custom DataSourceV2 would
 be out-of-scope v1" — Spark 4's Python data source API makes the native
-path practical: the SAME reader and chunk planner behind
-:func:`coffea_spark.root_reader.read_root` exposed through the engine's
-own source interface, so ROOT files compose with every DataFrameReader
-feature (``.load`` globs, schema inspection, SQL ``CREATE TABLE ...
-USING root`` in the session catalog).
+path practical, so ROOT files compose with every DataFrameReader feature
+(``.load`` of a file, glob, directory or list, schema inspection, SQL
+``CREATE TABLE ... USING root`` in the session catalog).
 
-Scale shape: ``partitions()`` returns the reader's (file, entry-range)
-work items — one multi-GB file fans out across executors exactly like
-``read_root``; each partition streams ``batch_rows``-entry Arrow record
-batches with only the overlapping baskets decompressed. Column pruning
-is declared via ``.option("columns", "a,b")`` (black-box Python sources
-cannot be traced by Catalyst — the same explicit-projection contract as
-SURVEY §2.9's column-tracing note).
+Scale shape: ``schema()`` and ``partitions()`` run in a Python planner
+worker, which opens each file's metadata to count its entries.
+``partitions()`` returns (file, entry-range) work items, so one multi-GB
+file fans out across executors; each partition streams
+``batch_rows``-entry Arrow record batches with only the overlapping
+baskets decompressed. Column pruning is declared via
+``.option("columns", "a,b")`` (black-box Python sources cannot be traced
+by Catalyst — the same explicit-projection contract as SURVEY §2.9's
+column-tracing note).
 
 Options: ``tree`` (default: most-basketed tree), ``columns``
 (comma-separated; default all readable), ``batch_rows`` (64k),
@@ -48,20 +50,22 @@ class RootDataSource(DataSource):
         return "root"
 
     def _paths(self) -> list[str]:
-        import glob as _g
-        import os as _os
+        import json
 
-        from coffea_spark.root_reader import _expand
+        from coffea_spark.session import list_files
 
-        raw = self.options.get("path")
-        if not raw:
-            raise ValueError("format('root') needs a path: .load('/x/*.root')")
-        if _os.path.isdir(raw):  # directory = its .root files (parquet-style)
-            paths = sorted(_g.glob(_os.path.join(raw, "*.root")))
+        if "paths" in self.options:  # .load([a, b]) sets a JSON list
+            raws = json.loads(self.options["paths"])
+        elif self.options.get("path"):
+            raws = [self.options["path"]]
         else:
-            paths = sorted(_expand(raw))
-        if not paths:
-            raise ValueError(f"format('root'): no files match {raw!r}")
+            raise ValueError("format('root') needs a path: .load('/x/*.root')")
+        paths: list[str] = []
+        for raw in raws:  # a missing entry must not drop its rows silently
+            got = list_files(raw, "*.root")
+            if not got:
+                raise ValueError(f"format('root'): no files match {raw}")
+            paths += got
         return paths
 
     def _columns(self, head) -> list[str]:
@@ -110,25 +114,32 @@ class RootReader(DataSourceReader):
         ]
 
     def read(self, partition: RootPartition):
-        import pyarrow as pa
-
-        from coffea_spark.root_reader import arrow_field_for, open_tree
+        from coffea_spark.root_reader import open_tree
 
         r = open_tree(partition.path, self._tree)
         r.payload_cache_size = 2 * len(self._cols) + 8
-        cast_schema = pa.schema(
-            [pa.field(c, arrow_field_for(r.branches[c])) for c in self._cols]
-        )
         start, stop = int(partition.start), int(partition.stop)
         for b0 in range(start, stop, self._batch_rows) or [0]:
             b1 = min(b0 + self._batch_rows, stop)
-            tbl = r.to_arrow(self._cols, entry_start=b0, entry_stop=b1)
-            for batch in tbl.cast(cast_schema).to_batches():
-                yield batch
+            yield from _spark_table(r, self._cols, b0, b1).to_batches()
+
+
+def _spark_table(r, cols: list[str], start: int = 0, stop: int | None = None):
+    """Entries ``[start, stop)`` of ``cols`` as Arrow, cast to the types
+    the source declares (unsigned widening, u8 -> decimal128(20,0))."""
+    from coffea_spark.root_reader import arrow_schema_for
+
+    tbl = r.to_arrow(cols, entry_start=start, entry_stop=stop)
+    return tbl.cast(arrow_schema_for(r, cols))
 
 
 def register_root_source(spark) -> None:
-    """Idempotently register ``format("root")`` on a session."""
+    """Idempotently register ``format("root")`` on a session. The
+    source's ``schema()`` and ``partitions()`` run in a Python planner
+    worker, so the package is shipped to workers first."""
+    from coffea_spark.session import ensure_worker_imports
+
+    ensure_worker_imports(spark)
     spark.dataSource.register(RootDataSource)
 
 
@@ -278,53 +289,33 @@ class RootStreamReader(SimpleDataSourceStreamReader):
         self._raw = source.options.get("path")
         if not self._raw:
             raise ValueError("format('root') stream needs a path/glob")
-        self._tree_opt = source.options.get("tree")
-        self._cols_opt = source.options.get("columns")
-        self._tree = None
+        self._source = source
+        self._tree = source.options.get("tree")
         self._cols = None
-
-    def _list(self) -> list[str]:
-        import glob as _g
-        import os as _os
-
-        if any(ch in self._raw for ch in "*?["):
-            return sorted(_g.glob(self._raw))
-        if _os.path.isdir(self._raw):
-            return sorted(_g.glob(_os.path.join(self._raw, "*.root")))
-        return [self._raw] if _os.path.exists(self._raw) else []
-
-    def _resolve(self, path: str):
-        from coffea_spark.root_reader import open_tree
-
-        head = open_tree(path, self._tree_opt)
-        if self._tree is None:
-            self._tree = head.tree
-        if self._cols is None:
-            if self._cols_opt:
-                self._cols = [
-                    c.strip() for c in self._cols_opt.split(",") if c.strip()
-                ]
-            else:
-                self._cols = sorted(head.branches)
-        return head
 
     def _rows(self, paths: list[str]) -> list[tuple]:
         # materialized (not a generator): the simple-reader protocol
         # pickles the prefetched batch to ship it to executors
+        from coffea_spark.root_reader import open_tree
+
         out: list[tuple] = []
         for p in paths:
-            r = self._resolve(p)
-            tbl = r.to_arrow(self._cols)
-            cols = [tbl.column(c).to_pylist() for c in self._cols]
-            out.extend(zip(*cols))
+            r = open_tree(p, self._tree)
+            if self._cols is None:  # pin the first file's tree, as the batch reader does
+                self._tree = r.tree
+                self._cols = self._source._columns(r)
+            tbl = _spark_table(r, self._cols)
+            out.extend(zip(*(tbl.column(c).to_pylist() for c in self._cols)))
         return out
 
     def initialOffset(self) -> dict:
         return {"files": []}
 
     def read(self, start: dict):
+        from coffea_spark.session import list_files
+
         done = set(start.get("files", []))
-        new = [p for p in self._list() if p not in done]
+        new = [p for p in list_files(self._raw, "*.root") if p not in done]
         end = {"files": sorted(done | set(new))}
         return iter(self._rows(new)), end
 

@@ -114,12 +114,11 @@ def read_warc(spark, paths: list[str] | str) -> DataFrame:
     as ``binary``."""
     import pandas as pd
 
-    from coffea_spark.root_reader import _expand
-    from coffea_spark.session import ensure_worker_imports
+    from coffea_spark.session import ensure_worker_imports, list_files
 
     ensure_worker_imports(spark)
     if isinstance(paths, str):
-        paths = sorted(_expand(paths))
+        paths = list_files(paths, "*.warc*")
     if not paths:
         raise ValueError("read_warc: empty path list")
 

@@ -1691,7 +1691,7 @@ FROM idx GROUP BY 1
 def q_root_scan(spark, sf_dir):
     """Native ROOT ingestion gate (root_reader + rntuple): scan the
     reference's OWN binary fixtures — nano_dimuon.root (TTree, zlib) and
-    its RNTuple twin — through the distributed ``read_root`` path, run
+    its RNTuple twin — through ``read_root``, run
     the dimuon pipeline, and emit per-format aggregates. The oracle is a
     golden-value table: every number is a property of the fixed public
     fixture (40 events, 84 muons, 6 Z-window opposite-sign pairs —
@@ -1739,10 +1739,10 @@ def q_root_source_scan(spark, sf_dir):
     """The SAME dimuon pipeline as root_scan, but ingested through the
     ``spark.read.format("root")`` Python Data Source (datasource.py) —
     the DataFrameReader-native surface SURVEY §2.1 originally declared
-    out-of-scope. Shares root_scan's golden oracle row: any divergence
-    between the data-source path and the mapInPandas path (partition
-    planning, Arrow casts, pruning) goes red here. ``sf_dir`` unused
-    (binary fixture input)."""
+    out-of-scope. Shares root_scan's golden oracle row; ``read_root`` is
+    this source with options, so this gate pins the string-option
+    spelling (comma-separated ``columns``, a single ``.load`` path).
+    ``sf_dir`` unused (binary fixture input)."""
     from coffea_spark.datasource import register_root_source
     from coffea_spark.schema import zip_collections
     from coffea_spark.vector import invariant_mass

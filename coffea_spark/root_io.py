@@ -20,9 +20,8 @@ ONCE per dataset — every subsequent query is a parquet scan with
 row-group skipping and pushdown, which a repeated ROOT decode (native
 or uproot) cannot match.
 
-The decode step prefers the native reader; uproot/awkward, when
-installed, are used for anything the native reader declares unsupported
-(dataless container headers, triply-nested vectors).
+The decode step is the native reader (:func:`root_reader.root_to_arrow`);
+uproot is not used.
 """
 
 from __future__ import annotations
@@ -31,55 +30,7 @@ import os
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
-
-# ---------------------------------------------------------------------------
-# branch-form -> Spark type mapping (pure; mirrors schemas/base.py:136-178)
-# ---------------------------------------------------------------------------
-
-_PRIMITIVES = {
-    "bool": T.BooleanType(),
-    "int8": T.ByteType(),
-    "uint8": T.ShortType(),  # widen: Spark has no unsigned types
-    "int16": T.ShortType(),
-    "uint16": T.IntegerType(),
-    "int32": T.IntegerType(),
-    "uint32": T.LongType(),
-    "int64": T.LongType(),
-    "uint64": T.DecimalType(20, 0),
-    "float32": T.FloatType(),
-    "float64": T.DoubleType(),
-}
-
-
-def branch_form_to_spark(form: dict[str, str]) -> T.StructType:
-    """Map a flat {branch_name: form} dict (forms: ``"float32"`` for a
-    per-event scalar, ``"var * float32"`` for a jagged branch — uproot's
-    awkward-form spelling) to the Spark schema of the converted parquet.
-
-    Unsigned integers widen to the next signed type (Spark has none);
-    ``uint64`` becomes DECIMAL(20,0) — lossless, as the reference's
-    arrow conversion also does.
-    """
-    fields = []
-    for name, spec in form.items():
-        spec = spec.strip()
-        if spec.startswith("var *"):
-            inner = spec[len("var *"):].strip()
-            if inner not in _PRIMITIVES:
-                raise ValueError(f"unsupported jagged element type {inner!r} for {name}")
-            fields.append(T.StructField(name, T.ArrayType(_PRIMITIVES[inner]), True))
-        else:
-            if spec not in _PRIMITIVES:
-                raise ValueError(f"unsupported branch type {spec!r} for {name}")
-            fields.append(T.StructField(name, _PRIMITIVES[spec], True))
-    return T.StructType(fields)
-
-
-# ---------------------------------------------------------------------------
-# conversion (import-gated: uproot/awkward are not in this environment)
-# ---------------------------------------------------------------------------
 
 def ttree_to_parquet(
     root_path: str,
@@ -96,26 +47,14 @@ def ttree_to_parquet(
     Mirrors the decode the reference performs per-chunk at query time
     (factory.py:267-480), but performed once at the storage layer.
     """
-    try:
-        import awkward as ak  # noqa: F401
-        import uproot
-    except ImportError:
-        # No uproot: flat leaflist trees (all NanoAOD-family files) go
-        # through the native pure-Python reader instead.
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        from coffea_spark.root_reader import root_to_arrow
+    from coffea_spark.root_reader import root_to_arrow
 
-        table = root_to_arrow(
-            root_path, tree, list(branches) if branches is not None else None
-        )
-        pq.write_table(table, out_path, row_group_size=64 * 1024)
-        return
-
-    with uproot.open(root_path) as f:  # pragma: no cover
-        t = f[tree]
-        arrays = t.arrays(branches, library="ak")
-        ak.to_parquet(arrays, out_path, row_group_size=64 * 1024)
+    table = root_to_arrow(
+        root_path, tree, list(branches) if branches is not None else None
+    )
+    pq.write_table(table, out_path, row_group_size=64 * 1024)
 
 
 def convert_fileset(

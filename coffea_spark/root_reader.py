@@ -34,9 +34,9 @@ This replaces the reference's uproot mapping (nanoevents/factory.py:
 reference tests ship; the residual unreadables are dataless container
 headers, ``vector<string>``, and triply-nested vectors.
 
-Scale design: the Spark entry point :func:`read_root` distributes one
-task per file via ``mapInPandas`` over a file-list DataFrame — the
-embarrassingly-parallel unit the reference also uses (file×tree chunks).
+Scale design: :func:`read_root` is ``spark.read.format("root")``, whose
+partitions are (file, entry-range) chunks — the embarrassingly-parallel
+unit the reference also uses (file×tree chunks).
 Column pruning is pushed INTO the format: only the baskets of requested
 branches are ever decompressed (each branch's baskets are separate keyed
 byte ranges), so a 5-column read of a 2000-branch NanoAOD file touches
@@ -2003,58 +2003,11 @@ def root_to_arrow(path: str, tree: str | None = None, columns: list[str] | None 
     return r.to_arrow(columns)
 
 
-def spark_field_for(info) -> "object":
-    """Spark DataType for one BranchInfo — the single source of truth
-    for the reader's type mapping (shared by read_root and the
-    ``format("root")`` Python data source). Unsigned types widen to the
-    next signed Spark type; u8 has no signed container, so it maps to
-    DecimalType(20,0) — the same convention Spark's parquet reader uses
-    for UINT64 (values like xAOD pileUpMixtureID genuinely exceed
-    int64)."""
-    from pyspark.sql import types as T
-
-    _ARROW_TO_SPARK = {
-        "f4": T.FloatType(), "f8": T.DoubleType(),
-        "i1": T.ByteType(), "i2": T.ShortType(), "i4": T.IntegerType(),
-        "i8": T.LongType(), "u1": T.ShortType(), "u2": T.IntegerType(),
-        "u4": T.LongType(), "u8": T.DecimalType(20, 0),
-    }
-    link_struct = T.StructType([
-        T.StructField("persKey", T.LongType()),
-        T.StructField("persIndex", T.LongType()),
-    ])
-    if info.link:
-        base = link_struct
-    elif info.string:
-        base = T.StringType()
-    else:
-        base = T.BooleanType() if info.is_bool else _ARROW_TO_SPARK[info.dtype]
-    if info.string == 1:
-        return base
-    if info.string >= 2:
-        return T.ArrayType(base)
-    if info.depth == 3:
-        return T.ArrayType(T.ArrayType(T.ArrayType(base)))
-    if info.depth == 2:
-        return T.ArrayType(T.ArrayType(base))
-    if info.counts is not None or info.fixed_len > 1 or info.from_offsets:
-        return T.ArrayType(base)
-    return base
-
-
-def spark_schema_for(reader, columns: list[str] | None = None):
-    """Spark StructType for a tree's (pruned) column set."""
-    from pyspark.sql import types as T
-
-    use_cols = columns if columns is not None else sorted(reader.branches)
-    return T.StructType(
-        [T.StructField(c, spark_field_for(reader.branches[c])) for c in use_cols]
-    )
-
-
 def arrow_field_for(info):
-    """Arrow type for one BranchInfo, mirroring :func:`spark_field_for`
-    (unsigned widening, u8 -> decimal128(20,0))."""
+    """Arrow type for one BranchInfo — the reader's only type rule
+    (Spark's types are its ``from_arrow_schema``). Unsigned types widen
+    to the next signed type; u8 maps to decimal128(20,0), as Spark's
+    parquet reader maps UINT64 (xAOD pileUpMixtureID exceeds int64)."""
     import pyarrow as pa
 
     _PA = {
@@ -2063,9 +2016,8 @@ def arrow_field_for(info):
         "u1": pa.int16(), "u2": pa.int32(), "u4": pa.int64(),
         "u8": pa.decimal128(20, 0),
     }
-    pa_link = pa.struct([("persKey", pa.int64()), ("persIndex", pa.int64())])
     if info.link:
-        base = pa_link
+        base = pa.struct([("persKey", pa.int64()), ("persIndex", pa.int64())])
     elif info.string:
         return pa.string() if info.string == 1 else pa.list_(pa.string())
     else:
@@ -2079,16 +2031,28 @@ def arrow_field_for(info):
     return base
 
 
-def plan_chunks(paths: list[str], tree: str | None, split_rows: int,
-                entry_counts: dict[str, int] | None = None):
+def arrow_schema_for(reader, columns: list[str]):
+    """Arrow schema of ``columns`` under :func:`arrow_field_for`."""
+    import pyarrow as pa
+
+    return pa.schema([pa.field(c, arrow_field_for(reader.branches[c])) for c in columns])
+
+
+def spark_schema_for(reader, columns: list[str]):
+    """Spark StructType of ``columns``: Spark's view of
+    :func:`arrow_schema_for`."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(arrow_schema_for(reader, columns))
+
+
+def plan_chunks(paths: list[str], tree: str | None, split_rows: int):
     """(path, start, stop) work items, ``split_rows`` entries each — the
     reference's cluster-aligned chunking (processor/executor.py:110-181)
     so one multi-GB file fans out across executors."""
-    if entry_counts is None:
-        entry_counts = {p: open_tree(p, tree).entries for p in paths}
     chunks = []
     for p in paths:
-        n = entry_counts[p]
+        n = open_tree(p, tree).entries
         if n == 0:
             chunks.append((p, 0, 0))
         for s in range(0, n, split_rows):
@@ -2104,80 +2068,25 @@ def read_root(
     batch_rows: int = 65536,
     split_rows: int = 1 << 19,
 ):
-    """Distributed flat-TTree scan: one task per (file, entry-range),
-    Arrow batches out.
+    """Distributed flat-TTree scan: ``spark.read.format("root")`` with
+    the arguments as its options (see :mod:`coffea_spark.datasource`).
 
-    Schema is inferred from the first file on the driver (metadata-only:
-    the TTree record is decompressed, no baskets).  Files are split into
-    ``split_rows``-entry work items — the reference's cluster-aligned
-    chunking (processor/executor.py:110-181) — so a single multi-GB file
-    fans out across executors instead of pinning one task.  Each task
-    iterates ``batch_rows``-entry sub-ranges through the reader's
-    entry-range path: only the baskets overlapping the current range are
-    decompressed (a small payload LRU keeps boundary baskets from
-    decompressing twice), so peak memory is range-sized, never
-    file-sized.  Equivalent reference surface: NanoEventsFactory.from_root
-    over a fileset (factory.py:267-480) — here the fan-out is Spark's.
+    ``paths`` is a list of files, or one glob, directory or file. Each
+    file splits into ``split_rows``-entry partitions, and each partition
+    streams ``batch_rows``-entry Arrow batches. Reference surface:
+    NanoEventsFactory.from_root over a fileset (factory.py:267-480).
     """
-    from coffea_spark.session import ensure_worker_imports
+    from coffea_spark.datasource import register_root_source
 
-    ensure_worker_imports(spark)
-    if isinstance(paths, str):
-        paths = sorted(_expand(paths))
     if not paths:
         raise ValueError("read_root: empty path list")
-
-    head = open_tree(paths[0], tree)
-    use_cols = columns if columns is not None else sorted(head.branches)
-    schema = spark_schema_for(head, use_cols)
-    tree_name = head.tree
-
-    # metadata pass: entry counts per file -> (path, start, stop) chunks.
-    # Header-only (TKey walk + basket headers via mmap) so it is cheap;
-    # distributed when the file list is long, exactly like parquet
-    # footer reads in a planner.
-    if len(paths) > 32:
-        entry_counts = dict(
-            spark.sparkContext.parallelize(paths, min(len(paths), 256)).map(
-                lambda p: (p, open_tree(p, tree_name).entries)
-            ).collect()
-        )
-    else:
-        entry_counts = {p: open_tree(p, tree_name).entries for p in paths}
-    chunks = plan_chunks(paths, tree_name, split_rows, entry_counts)
-
-    def _read(iterator):
-        import pyarrow as pa
-
-        readers: dict[str, RootTreeReader] = {}
-        for pdf in iterator:
-            for path, start, stop in zip(pdf["path"], pdf["start"], pdf["stop"]):
-                r = readers.get(path)
-                if r is None:
-                    readers.clear()  # one open file per task at a time
-                    r = readers[path] = open_tree(path, tree_name)
-                    r.payload_cache_size = 2 * len(use_cols) + 8
-                cast_schema = pa.schema(
-                    [pa.field(c, arrow_field_for(r.branches[c])) for c in use_cols]
-                )
-                for b0 in range(int(start), int(stop), batch_rows) or [0]:
-                    b1 = min(b0 + batch_rows, int(stop))
-                    tbl = r.to_arrow(use_cols, entry_start=b0, entry_stop=b1)
-                    # widen unsigned types to Spark's signed equivalents;
-                    # u8 goes to decimal128(20,0) (lossless — values like
-                    # xAOD pileUpMixtureID genuinely exceed int64)
-                    yield tbl.cast(cast_schema).to_pandas()
-
-    chunks_df = spark.createDataFrame(
-        chunks, "path string, start long, stop long"
-    ).repartition(min(len(chunks), 256))
-    return chunks_df.mapInPandas(_read, schema=schema)
-
-
-def _expand(pattern: str) -> list[str]:
-    import glob
-
-    return glob.glob(pattern) if any(ch in pattern for ch in "*?[") else [pattern]
+    register_root_source(spark)
+    opts = {"batch_rows": batch_rows, "split_rows": split_rows}
+    if tree is not None:
+        opts["tree"] = tree
+    if columns is not None:
+        opts["columns"] = ",".join(columns)
+    return spark.read.format("root").options(**opts).load(paths)
 
 
 # ---------------------------------------------------------------------------

@@ -111,6 +111,20 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     _PYFILES_SENT.add(key)
 
 
+def list_files(raw: str, pattern: str) -> list[str]:
+    """Sorted files named by ``raw``: a glob's matches, a directory's
+    files matching ``pattern`` (e.g. ``"*.root"``), or ``raw`` itself
+    when it is a file; ``[]`` when nothing matches (each caller decides
+    what that means)."""
+    import glob
+
+    if any(ch in raw for ch in "*?["):
+        return sorted(glob.glob(raw))
+    if os.path.isdir(raw):
+        return sorted(glob.glob(os.path.join(raw, pattern)))
+    return [raw] if os.path.exists(raw) else []
+
+
 def read_tables(spark: SparkSession, sf_dir: str, *names: str):
     """Read the named parquet tables from a scale-factor directory.
 

@@ -54,6 +54,38 @@ def test_formula_lookup(spark):
     assert np.allclose(got, [7.0, 4.0])
 
 
+def test_correction_multibinning_uniform_axis(spark):
+    """A correctionlib multibinning axis given as a UniformBinning
+    ({"n", "low", "high"}) evaluates like the explicit edges it stands
+    for, as it already does in a one-input binning node."""
+    from coffea_spark.correctionlib_io import Correction
+
+    def sf(eta_edges):
+        return Correction({
+            "name": "sf",
+            "inputs": [{"name": "pt", "type": "real"}, {"name": "eta", "type": "real"}],
+            "output": {"name": "w", "type": "real"},
+            "data": {
+                "nodetype": "multibinning",
+                "inputs": ["pt", "eta"],
+                "edges": [[20.0, 40.0, 100.0], eta_edges],
+                "content": [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0],
+                "flow": "error",
+            },
+        })
+
+    uniform = sf({"n": 4, "low": -2.0, "high": 2.0})
+    explicit = sf([-2.0, -1.0, 0.0, 1.0, 2.0])
+    df = spark.createDataFrame(
+        [(25.0, -1.5), (50.0, 0.5), (99.0, 1.9), (10.0, 0.0)], "pt double, eta double"
+    )
+    rows = df.select(
+        uniform(F.col("pt"), F.col("eta")).alias("u"),
+        explicit(F.col("pt"), F.col("eta")).alias("e"),
+    ).collect()
+    assert [r.u for r in rows] == [r.e for r in rows] == [1.0, 7.0, 8.0, None]
+
+
 def test_jec_chain(spark):
     """Chained multiplicative levels: level 2 sees level-1-corrected pt."""
     l1 = lambda eta, pt: F.lit(1.1)

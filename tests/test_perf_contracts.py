@@ -141,3 +141,16 @@ def test_hist_fills_shuffle_once_and_lookups_stay_in_jvm(spark):
     plan = _executed_plan(df.select(
         dense(F.col("x"), F.col("y")).alias("d"), mapped(F.col("x"), F.col("y")).alias("m")))
     assert "EvalPython" not in plan, plan
+
+
+def test_read_root_is_one_python_scan(spark, tmp_path):
+    """read_root plans as the format("root") batch scan: no pandas map
+    and no shuffle, and one partition per ``plan_chunks`` work item."""
+    from coffea_spark.root_reader import plan_chunks, read_root
+    from tests.test_root_writer import _scan_files
+
+    paths = _scan_files(tmp_path)
+    df = read_root(spark, paths, split_rows=4)
+    plan = _executed_plan(df)
+    assert "MapInPandas" not in plan and not re.search(r"\bExchange\b", plan), plan
+    assert df.rdd.getNumPartitions() == len(plan_chunks(paths, None, 4)) == 7

@@ -1,44 +1,15 @@
-"""ROOT ingestion plumbing: form->schema mapping, import gating, and the
-read-side collection reassembly on a parquet file with the converted
-layout (reference: nanoevents/factory.py from_root + schemas/base.py)."""
+"""ROOT ingestion plumbing: the convert-once path and the read-side
+collection reassembly on a parquet file with the converted layout
+(reference: nanoevents/factory.py from_root + schemas/base.py)."""
 
 import pytest
 
-from pyspark.sql import types as T
-
-from coffea_spark.root_io import branch_form_to_spark, read_converted, ttree_to_parquet
-
-
-def test_branch_form_mapping():
-    schema = branch_form_to_spark(
-        {
-            "run": "uint32",
-            "luminosityBlock": "uint32",
-            "event": "uint64",
-            "nMuon": "int32",
-            "Muon_pt": "var * float32",
-            "Muon_charge": "var * int8",
-            "HLT_IsoMu24": "bool",
-        }
-    )
-    by_name = {f.name: f.dataType for f in schema.fields}
-    assert by_name["run"] == T.LongType()
-    assert by_name["event"] == T.DecimalType(20, 0)
-    assert by_name["Muon_pt"] == T.ArrayType(T.FloatType())
-    assert by_name["Muon_charge"] == T.ArrayType(T.ByteType())
-    assert by_name["HLT_IsoMu24"] == T.BooleanType()
-
-
-def test_branch_form_rejects_unknown():
-    with pytest.raises(ValueError, match="unsupported"):
-        branch_form_to_spark({"x": "complex128"})
-    with pytest.raises(ValueError, match="unsupported jagged"):
-        branch_form_to_spark({"x": "var * var * float32"})
+from coffea_spark.root_io import read_converted, ttree_to_parquet
 
 
 def test_converter_native_fallback():
-    # the env has no uproot: the converter falls back to the native
-    # pure-Python reader (root_reader), which surfaces real I/O errors
+    # the converter decodes with the native pure-Python reader
+    # (root_reader), which surfaces real I/O errors
     with pytest.raises(FileNotFoundError):
         ttree_to_parquet("/nonexistent.root", "/tmp/out.parquet")
 

@@ -842,9 +842,9 @@ def test_map_string_sub_branches():
 
 
 def test_root_datasource_format(spark):
-    """spark.read.format('root') must match read_root exactly, split a
-    file into multiple partitions when split_rows is small, and fail
-    loudly on bad columns/paths."""
+    """spark.read.format('root') must match the native reader exactly,
+    split a file into multiple partitions when split_rows is small, and
+    fail loudly on bad columns/paths."""
     from coffea_spark.datasource import RootDataSource, register_root_source
 
     register_root_source(spark)
@@ -858,12 +858,8 @@ def test_root_datasource_format(spark):
     )
     assert df.rdd.getNumPartitions() == 3
     via_ds = df.orderBy("event").collect()
-    via_mp = (
-        read_root(spark, [p], columns=cols.split(","))
-        .orderBy("event")
-        .collect()
-    )
-    assert [tuple(r) for r in via_ds] == [tuple(r) for r in via_mp]
+    native = RootTreeReader(p).to_arrow(cols.split(",")).sort_by("event")
+    assert [tuple(r) for r in via_ds] == [tuple(r.values()) for r in native.to_pylist()]
 
     # RNTuple files route through the same source (open_tree dispatch)
     rnt = (

@@ -28,6 +28,24 @@ def _cols(n=500, seed=5):
     }
 
 
+def _scan_files(dest, sizes=(7, 11, 5), seed=3):
+    """One file per size, with bool, u8, jagged and counts branches and
+    event ids running on across the files."""
+    rng = np.random.default_rng(seed)
+    paths, e0 = [], 0
+    for i, n in enumerate(sizes):
+        cols = {
+            "event": np.arange(e0, e0 + n, dtype=np.int64),
+            "flag": rng.random(n) > 0.5,
+            "id": np.uint64(2**63) + rng.integers(0, 1000, n).astype(np.uint64),
+            "Muon_pt": [rng.random(k).astype(np.float32) * 50 for k in rng.integers(0, 4, n)],
+        }
+        path = str(dest / f"f{i}.root")
+        paths.append(write_root_file(cols, path, counts_map={"Muon_pt": "nMuon"}))
+        e0 += n
+    return paths
+
+
 def test_roundtrip_all_dtypes(tmp_path):
     cols = _cols()
     path = str(tmp_path / "t.root")
@@ -188,6 +206,51 @@ def test_u8_reads_lossless_as_decimal(spark, tmp_path):
     assert dict(df.dtypes)["evt"] == "decimal(20,0)"
     vals = sorted(int(row.evt) for row in df.collect())
     assert vals == [1, 3, 2 ** 63 + 5]
+
+
+def test_read_root_list_glob_and_source_agree(spark, tmp_path):
+    """read_root over a file list, and format("root") over the same list
+    and over a glob, read exactly the concatenated native reads, with
+    every file split into several partitions."""
+    from decimal import Decimal
+
+    import pyarrow as pa
+
+    from coffea_spark.datasource import register_root_source
+
+    paths = _scan_files(tmp_path)
+    cols = sorted(RootTreeReader(paths[0]).branches)
+    assert cols == ["Muon_pt", "event", "flag", "id", "nMuon"]
+    want = pa.concat_tables([RootTreeReader(p).to_arrow(cols) for p in paths]).to_pylist()
+    register_root_source(spark)
+    source = spark.read.format("root").option("split_rows", 4)
+    for df in (
+        read_root(spark, paths, split_rows=4),
+        source.load(paths),
+        source.load(str(tmp_path / "*.root")),
+    ):
+        assert dict(df.dtypes)["id"] == "decimal(20,0)"
+        got = [
+            {k: int(v) if isinstance(v, Decimal) else v for k, v in r.asDict().items()}
+            for r in df.orderBy("event").collect()
+        ]
+        assert got == want
+
+
+def test_read_root_list_with_missing_file_raises(spark, tmp_path):
+    """A list with one missing entry fails loudly, through read_root and
+    through format("root"), rather than reading the other files' rows."""
+    from coffea_spark.datasource import register_root_source
+
+    good = _scan_files(tmp_path, sizes=(3,))[0]
+    missing = str(tmp_path / "gone.root")
+    register_root_source(spark)
+    for read in (
+        lambda: read_root(spark, [good, missing]).count(),
+        lambda: spark.read.format("root").load([good, missing]).count(),
+    ):
+        with pytest.raises(Exception, match=f"no files match {missing}"):
+            read()
 
 
 def test_empty_jagged_row_preserves_dtype(spark, tmp_path):

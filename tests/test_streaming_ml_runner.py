@@ -597,6 +597,32 @@ def test_root_stream_source_incremental(spark, tmp_path):
     assert (b2.n, b2.s) == (80, 102)  # +40 events, +18 muons — b.root only
 
 
+def test_root_stream_casts_like_read_root(spark, tmp_path):
+    """readStream.format("root") applies the batch reader's type casts:
+    a u8 branch streams as decimal(20,0) beside a jagged one, and the
+    rows equal read_root's over the same file."""
+    from coffea_spark.datasource import register_root_source
+    from coffea_spark.root_reader import read_root
+    from tests.test_root_writer import _scan_files
+
+    src = tmp_path / "u8stream"
+    src.mkdir()
+    (path,) = _scan_files(src, sizes=(9,))
+    register_root_source(spark)
+    q = (
+        spark.readStream.format("root")
+        .load(str(src))
+        .writeStream.format("memory")
+        .queryName("root_stream_u8")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = spark.table("root_stream_u8").orderBy("event").collect()
+    assert got == read_root(spark, [path]).orderBy("event").collect()
+
+
 def test_torch_wrapper_protocol_with_injected_backend(spark, tmp_path):
     """The torch wrapper's FULL Spark path (per-executor load-once,
     Arrow batch -> tensor marshaling, detach().numpy() return) driven
