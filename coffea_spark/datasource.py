@@ -23,6 +23,11 @@ column-tracing note).
 Options: ``tree`` (default: most-basketed tree), ``columns``
 (comma-separated; default all readable), ``batch_rows`` (64k),
 ``split_rows`` (512k).
+
+``spark.readStream.format("root")`` takes its columns from the stream's
+schema. Without ``.schema(...)`` that schema is inferred from the first
+file, so a stream that starts before its first file arrives needs
+``.schema(...)``, naming the branches to read.
 """
 
 from __future__ import annotations
@@ -91,7 +96,7 @@ class RootDataSource(DataSource):
         return RootWriter(self.options, schema, overwrite)
 
     def simpleStreamReader(self, schema) -> "RootStreamReader":
-        return RootStreamReader(self)
+        return RootStreamReader(self, schema)
 
 
 class RootReader(DataSourceReader):
@@ -285,13 +290,12 @@ class RootStreamReader(SimpleDataSourceStreamReader):
     lumisection). For bulk backfills use batch ``format("root")`` /
     ``read_root`` inside ``foreachBatch`` instead."""
 
-    def __init__(self, source: "RootDataSource"):
+    def __init__(self, source: "RootDataSource", schema):
         self._raw = source.options.get("path")
         if not self._raw:
             raise ValueError("format('root') stream needs a path/glob")
-        self._source = source
         self._tree = source.options.get("tree")
-        self._cols = None
+        self._cols = schema.fieldNames()  # the user's or the inferred schema
 
     def _rows(self, paths: list[str]) -> list[tuple]:
         # materialized (not a generator): the simple-reader protocol
@@ -301,9 +305,10 @@ class RootStreamReader(SimpleDataSourceStreamReader):
         out: list[tuple] = []
         for p in paths:
             r = open_tree(p, self._tree)
-            if self._cols is None:  # pin the first file's tree, as the batch reader does
-                self._tree = r.tree
-                self._cols = self._source._columns(r)
+            self._tree = r.tree  # pin the first file's tree, as the batch reader does
+            missing = [c for c in self._cols if c not in r.branches]
+            if missing:
+                raise ValueError(f"format('root') stream: {p} lacks branches {missing}")
             tbl = _spark_table(r, self._cols)
             out.extend(zip(*(tbl.column(c).to_pylist() for c in self._cols)))
         return out

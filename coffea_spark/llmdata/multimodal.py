@@ -22,11 +22,19 @@ Design for 100 TB of media:
   record batches; batch size is bounded by
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` to cap executor memory
   (payloads of tens of MB => set it low).
+- every one-row-in, one-row-out operator (image, color-image, resize,
+  audio, resample, tone and patch features) has one shape: the payload
+  column is dropped, the other columns pass through in order, and the
+  operator's typed feature columns are appended — features, not
+  samples or pixels, cross the wire. A function maps each Arrow
+  batch's payloads to one tuple per row, so a block codec can decode
+  the whole batch in one pass (``audio_features(batch_decoder=...)``).
+  ``sample_frames`` (one row in, many out) is the exception.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -52,6 +60,31 @@ AUDIO_SCHEMA = T.StructType(
         T.StructField("n_samples", T.LongType()),
     ]
 )
+
+
+def _map_payloads(
+    df: DataFrame,
+    payload_col: str,
+    fields: list[tuple[str, T.DataType]],
+    rows: Callable[[pd.Series], Iterable[tuple]],
+) -> DataFrame:
+    """The feature operators' one ``mapInPandas``: the output keeps
+    every column but ``payload_col`` in order and appends ``fields`` in
+    order, filled by ``rows`` — a function from one Arrow batch's
+    payload column to one tuple per row."""
+    keep = [f for f in df.schema.fields if f.name != payload_col]
+    names = [f.name for f in keep]
+    schema = T.StructType(keep + [T.StructField(n, t) for n, t in fields])
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = pdf[names].copy()
+            got = list(rows(pdf[payload_col]))
+            for k, (name, _) in enumerate(fields):
+                out[name] = [r[k] for r in got]
+            yield out
+
+    return df.mapInPandas(run, schema)
 
 
 def decode_ppm(data: bytes) -> np.ndarray:
@@ -419,43 +452,40 @@ def color_image_features(
     image_col: str = "image",
     decoder: Callable[[bytes], np.ndarray] | None = None,
 ) -> DataFrame:
-    """Decode + per-CHANNEL summary features for color images via
-    mapInPandas (one decode per image): width/height plus mean of each
-    of the three planes. Default decoder returns the coded YCbCr planes
-    (the exactness surface — RGB conversion rounds); pass a custom
-    decoder for RGB-space features."""
+    """Per-CHANNEL summary features for color images (one decode per
+    image): width/height, the mean of each of the three planes and the
+    pixel sum. Default decoder returns the coded YCbCr planes (the
+    exactness surface — RGB conversion rounds); pass a custom decoder
+    for RGB-space features."""
     if decoder is None:
         from coffea_spark.llmdata.jpeg import decode_jpeg
 
         def decoder(data):  # noqa: F811 — default: coded planes
             return decode_jpeg(data, color_space="ycbcr")
 
-    out_fields = [f for f in df.schema.fields if f.name != image_col]
-    schema = T.StructType(
-        out_fields
-        + [
-            T.StructField("img_width", T.IntegerType()),
-            T.StructField("img_height", T.IntegerType()),
-            T.StructField("mean_c0", T.DoubleType()),
-            T.StructField("mean_c1", T.DoubleType()),
-            T.StructField("mean_c2", T.DoubleType()),
-            T.StructField("sum_pixels", T.LongType()),
-        ]
+    def rows(payloads):
+        for s in payloads:
+            a = decoder(s["data"])
+            yield (
+                int(a.shape[1]),
+                int(a.shape[0]),
+                *(float(a[..., c].mean()) for c in range(3)),
+                int(a.sum(dtype=np.int64)),
+            )
+
+    return _map_payloads(
+        df,
+        image_col,
+        [
+            ("img_width", T.IntegerType()),
+            ("img_height", T.IntegerType()),
+            ("mean_c0", T.DoubleType()),
+            ("mean_c1", T.DoubleType()),
+            ("mean_c2", T.DoubleType()),
+            ("sum_pixels", T.LongType()),
+        ],
+        rows,
     )
-    keep = [f.name for f in out_fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            imgs = pdf[image_col].map(lambda s: decoder(s["data"]))
-            out = pdf[keep].copy()
-            out["img_width"] = imgs.map(lambda a: int(a.shape[1]))
-            out["img_height"] = imgs.map(lambda a: int(a.shape[0]))
-            for c in range(3):
-                out[f"mean_c{c}"] = imgs.map(lambda a, c=c: float(a[..., c].mean()))
-            out["sum_pixels"] = imgs.map(lambda a: int(a.sum(dtype=np.int64)))
-            yield out
-
-    return df.mapInPandas(run, schema)
 
 
 def real_image_decoder(data: bytes) -> np.ndarray:
@@ -497,32 +527,25 @@ def image_features(
     image_col: str = "image",
     decoder: Callable[[bytes], np.ndarray] = real_image_decoder,
 ) -> DataFrame:
-    """Decode + per-image summary features via mapInPandas (Arrow batch
-    iterator). Output keeps all input columns minus the payload, plus
-    decoded stats."""
-    out_fields = [f for f in df.schema.fields if f.name != image_col]
-    schema = T.StructType(
-        out_fields
-        + [
-            T.StructField("img_width", T.IntegerType()),
-            T.StructField("img_height", T.IntegerType()),
-            T.StructField("img_mean", T.DoubleType()),
-            T.StructField("img_std", T.DoubleType()),
-        ]
+    """Per-image summary features: decoded width, height, pixel mean
+    and pixel std."""
+
+    def rows(payloads):
+        for s in payloads:
+            a = decoder(s["data"])
+            yield int(a.shape[1]), int(a.shape[0]), float(a.mean()), float(a.std())
+
+    return _map_payloads(
+        df,
+        image_col,
+        [
+            ("img_width", T.IntegerType()),
+            ("img_height", T.IntegerType()),
+            ("img_mean", T.DoubleType()),
+            ("img_std", T.DoubleType()),
+        ],
+        rows,
     )
-    keep = [f.name for f in out_fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            imgs = pdf[image_col].map(lambda s: decoder(s["data"]))
-            out = pdf[keep].copy()
-            out["img_width"] = imgs.map(lambda a: int(a.shape[1]))
-            out["img_height"] = imgs.map(lambda a: int(a.shape[0]))
-            out["img_mean"] = imgs.map(lambda a: float(a.mean()))
-            out["img_std"] = imgs.map(lambda a: float(a.std()))
-            yield out
-
-    return df.mapInPandas(run, schema)
 
 
 def resize_images(
@@ -531,34 +554,25 @@ def resize_images(
     image_col: str = "image",
     decoder: Callable[[bytes], np.ndarray] = real_image_decoder,
 ) -> DataFrame:
-    """Nearest-neighbour resize to (target, target); payload replaced by
-    the raw resized bytes. Demonstrates the write-back shape (binary out)."""
-    schema = T.StructType(
-        [f for f in df.schema.fields if f.name != image_col]
-        + [T.StructField(image_col, IMAGE_SCHEMA)]
-    )
-    keep = [f.name for f in df.schema.fields if f.name != image_col]
+    """Nearest-neighbour resize to (target, target); the payload column
+    moves to the end, holding the raw resized bytes. Demonstrates the
+    write-back shape (binary out)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            def resize(s):
-                a = decoder(s["data"])
-                h, w = a.shape[:2]
-                yi = (np.arange(target) * h // target).clip(0, h - 1)
-                xi = (np.arange(target) * w // target).clip(0, w - 1)
-                r = a[np.ix_(yi, xi)]
-                return {
-                    "data": r.astype(np.uint8).tobytes(),
-                    "format": "raw8",
-                    "width": target,
-                    "height": target,
-                }
+    def rows(payloads):
+        for s in payloads:
+            a = decoder(s["data"])
+            h, w = a.shape[:2]
+            yi = (np.arange(target) * h // target).clip(0, h - 1)
+            xi = (np.arange(target) * w // target).clip(0, w - 1)
+            r = a[np.ix_(yi, xi)]
+            yield ({
+                "data": r.astype(np.uint8).tobytes(),
+                "format": "raw8",
+                "width": target,
+                "height": target,
+            },)
 
-            out = pdf[keep].copy()
-            out[image_col] = pdf[image_col].map(resize)
-            yield out
-
-    return df.mapInPandas(run, schema)
+    return _map_payloads(df, image_col, [(image_col, IMAGE_SCHEMA)], rows)
 
 
 # -- Y4M video (YUV4MPEG2 — a real uncompressed video container) ------------
@@ -1127,55 +1141,40 @@ def audio_features(
     batch_decoder: "Callable[[list, list], list] | None" = None,
 ) -> DataFrame:
     """Per-clip audio summary features (duration, RMS level, peak,
-    zero-crossing rate) via the same mapInPandas Arrow-batch shape as
-    image_features. Payload dropped from the output. Pass
-    ``batch_decoder`` (e.g. ``real_audio_batch_decoder``) to decode a
-    whole Arrow batch at once — the right shape for block codecs whose
-    per-clip decode is loop-bound."""
-    out_fields = [f for f in df.schema.fields if f.name != audio_col]
-    schema = T.StructType(
-        out_fields
-        + [
-            T.StructField("duration_s", T.DoubleType()),
-            T.StructField("rms", T.DoubleType()),
-            T.StructField("peak", T.IntegerType()),
-            T.StructField("zcr", T.DoubleType()),
-        ]
+    zero-crossing rate). Pass ``batch_decoder`` (e.g.
+    ``real_audio_batch_decoder``) to decode a whole Arrow batch at
+    once — the right shape for block codecs whose per-clip decode is
+    loop-bound."""
+
+    def rows(payloads):
+        rates = [s["sample_rate"] for s in payloads]
+        if batch_decoder is not None:
+            pcms = batch_decoder([s["data"] for s in payloads], rates)
+        else:
+            pcms = [decoder(s["data"], s["sample_rate"]) for s in payloads]
+        for pcm, rate in zip(pcms, rates):
+            pcm = pcm.astype(np.float64)
+            if len(pcm) == 0:
+                yield 0.0, 0.0, 0, 0.0
+                continue
+            yield (
+                len(pcm) / float(rate),
+                float(np.sqrt(np.mean(pcm**2))),
+                int(np.abs(pcm).max()),
+                float(np.mean(np.signbit(pcm[1:]) != np.signbit(pcm[:-1]))),
+            )
+
+    return _map_payloads(
+        df,
+        audio_col,
+        [
+            ("duration_s", T.DoubleType()),
+            ("rms", T.DoubleType()),
+            ("peak", T.IntegerType()),
+            ("zcr", T.DoubleType()),
+        ],
+        rows,
     )
-    keep = [f.name for f in out_fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            col = pdf[audio_col]
-            rates = [s["sample_rate"] for s in col]
-            if batch_decoder is not None:
-                pcms = batch_decoder([s["data"] for s in col], rates)
-            else:
-                pcms = [decoder(s["data"], s["sample_rate"]) for s in col]
-            durs, rmss, peaks, zcrs = [], [], [], []
-            for pcm, rate in zip(pcms, rates):
-                pcm = pcm.astype(np.float64)
-                n = len(pcm)
-                if n == 0:
-                    durs.append(0.0)
-                    rmss.append(0.0)
-                    peaks.append(0)
-                    zcrs.append(0.0)
-                    continue
-                durs.append(n / float(rate))
-                rmss.append(float(np.sqrt(np.mean(pcm**2))))
-                peaks.append(int(np.abs(pcm).max()))
-                zcrs.append(float(np.mean(
-                    np.signbit(pcm[1:]) != np.signbit(pcm[:-1])
-                )))
-            out = pdf[keep].copy()
-            out["duration_s"] = durs
-            out["rms"] = rmss
-            out["peak"] = peaks
-            out["zcr"] = zcrs
-            yield out
-
-    return df.mapInPandas(run, schema)
 
 
 def resample_linear(pcm: np.ndarray, src_rate: int, dst_rate: int) -> np.ndarray:
@@ -1210,37 +1209,27 @@ def resample_features(
     decoder: Callable[[bytes, int], np.ndarray] = fake_audio_decoder,
 ) -> DataFrame:
     """Decode -> :func:`resample_linear` to ``target_rate`` -> per-clip
-    summary (output length, mean, RMS) via the audio_features
-    mapInPandas shape: features-not-samples cross the wire, payload
-    dropped from the output."""
-    out_fields = [f for f in df.schema.fields if f.name != audio_col]
-    schema = T.StructType(
-        out_fields
-        + [
-            T.StructField("n_out", T.LongType()),
-            T.StructField("mean_out", T.DoubleType()),
-            T.StructField("rms_out", T.DoubleType()),
-        ]
+    summary (output length, mean, RMS)."""
+
+    def rows(payloads):
+        for s in payloads:
+            pcm = decoder(s["data"], s["sample_rate"])
+            y = resample_linear(pcm, int(s["sample_rate"]), target_rate)
+            if len(y) == 0:
+                yield 0, 0.0, 0.0
+                continue
+            yield len(y), float(np.mean(y)), float(np.sqrt(np.mean(y * y)))
+
+    return _map_payloads(
+        df,
+        audio_col,
+        [
+            ("n_out", T.LongType()),
+            ("mean_out", T.DoubleType()),
+            ("rms_out", T.DoubleType()),
+        ],
+        rows,
     )
-    keep = [f.name for f in out_fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            col = pdf[audio_col]
-            ns, means, rmss = [], [], []
-            for s in col:
-                pcm = decoder(s["data"], s["sample_rate"])
-                y = resample_linear(pcm, int(s["sample_rate"]), target_rate)
-                ns.append(len(y))
-                means.append(float(np.mean(y)) if len(y) else 0.0)
-                rmss.append(float(np.sqrt(np.mean(y * y))) if len(y) else 0.0)
-            out = pdf[keep].copy()
-            out["n_out"] = ns
-            out["mean_out"] = means
-            out["rms_out"] = rmss
-            yield out
-
-    return df.mapInPandas(run, schema=schema)
 
 
 def goertzel_power(pcm: np.ndarray, sample_rate: int, freqs) -> np.ndarray:
@@ -1272,35 +1261,27 @@ def tone_features(
     decoder: Callable[[bytes, int], np.ndarray] = fake_audio_decoder,
 ) -> DataFrame:
     """Per-clip Goertzel tone powers (one array column, ordered like
-    ``freqs``) plus the dominant requested frequency — the
-    audio_features mapInPandas shape (features-not-samples cross the
-    wire)."""
-    out_fields = [f for f in df.schema.fields if f.name != audio_col]
-    schema = T.StructType(
-        out_fields
-        + [
-            T.StructField("tone_power", T.ArrayType(T.DoubleType())),
-            T.StructField("dominant_freq", T.DoubleType()),
-        ]
-    )
-    keep = [f.name for f in out_fields]
+    ``freqs``) plus the dominant requested frequency."""
     flist = [float(f) for f in freqs]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            col = pdf[audio_col]
-            powers, dom = [], []
-            for s in col:
-                pcm = decoder(s["data"], s["sample_rate"])
-                p = goertzel_power(pcm, int(s["sample_rate"]), flist)
-                powers.append([float(v) for v in p])
-                dom.append(flist[int(np.argmax(p))] if len(p) else float("nan"))
-            out = pdf[keep].copy()
-            out["tone_power"] = powers
-            out["dominant_freq"] = dom
-            yield out
+    def rows(payloads):
+        for s in payloads:
+            pcm = decoder(s["data"], s["sample_rate"])
+            p = goertzel_power(pcm, int(s["sample_rate"]), flist)
+            yield (
+                [float(v) for v in p],
+                flist[int(np.argmax(p))] if len(p) else float("nan"),
+            )
 
-    return df.mapInPandas(run, schema=schema)
+    return _map_payloads(
+        df,
+        audio_col,
+        [
+            ("tone_power", T.ArrayType(T.DoubleType())),
+            ("dominant_freq", T.DoubleType()),
+        ],
+        rows,
+    )
 
 
 def patchify(arr: np.ndarray, patch: int) -> np.ndarray:
@@ -1331,47 +1312,30 @@ def patch_features(
     patch: int = 4,
     decoder: Callable[[bytes], np.ndarray] = real_image_decoder,
 ) -> DataFrame:
-    """Per-image ViT-patch statistics via the image_features
-    mapInPandas shape: decode -> :func:`patchify` -> (n_patches,
-    mean / max of patch means, patch CONTRAST = population std of the
-    patch means — the texture-vs-flat signal vision curation filters
-    threshold on). Features-not-pixels cross the wire."""
-    out_fields = [f for f in df.schema.fields if f.name != image_col]
-    schema = T.StructType(
-        out_fields
-        + [
-            T.StructField("n_patches", T.LongType()),
-            T.StructField("patch_mean_avg", T.DoubleType()),
-            T.StructField("patch_mean_max", T.DoubleType()),
-            T.StructField("patch_contrast", T.DoubleType()),
-        ]
+    """Per-image ViT-patch statistics: decode -> :func:`patchify` ->
+    (n_patches, mean / max of patch means, patch CONTRAST = population
+    std of the patch means — the texture-vs-flat signal vision curation
+    filters threshold on)."""
+
+    def rows(payloads):
+        for s in payloads:
+            m = patchify(decoder(s["data"]), patch).ravel()
+            if m.size == 0:
+                yield 0, 0.0, 0.0, 0.0
+                continue
+            mu = float(np.mean(m))
+            # explicit E[m^2] - E[m]^2 shape (matches the SQL oracle)
+            ct = float(np.sqrt(max(np.mean(m * m) - mu * mu, 0.0)))
+            yield int(m.size), mu, float(np.max(m)), ct
+
+    return _map_payloads(
+        df,
+        image_col,
+        [
+            ("n_patches", T.LongType()),
+            ("patch_mean_avg", T.DoubleType()),
+            ("patch_mean_max", T.DoubleType()),
+            ("patch_contrast", T.DoubleType()),
+        ],
+        rows,
     )
-    keep = [f.name for f in out_fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            col = pdf[image_col]
-            ns, avgs, maxs, stds = [], [], [], []
-            for payload in col:
-                arr = decoder(payload["data"])
-                m = patchify(arr, patch).ravel()
-                if m.size == 0:
-                    ns.append(0)
-                    avgs.append(0.0)
-                    maxs.append(0.0)
-                    stds.append(0.0)
-                    continue
-                ns.append(int(m.size))
-                mu = float(np.mean(m))
-                avgs.append(mu)
-                maxs.append(float(np.max(m)))
-                # explicit E[m^2] - E[m]^2 shape (matches the SQL oracle)
-                stds.append(float(np.sqrt(max(np.mean(m * m) - mu * mu, 0.0))))
-            out = pdf[keep].copy()
-            out["n_patches"] = ns
-            out["patch_mean_avg"] = avgs
-            out["patch_mean_max"] = maxs
-            out["patch_contrast"] = stds
-            yield out
-
-    return df.mapInPandas(run, schema=schema)

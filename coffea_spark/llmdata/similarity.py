@@ -496,7 +496,7 @@ def ivf_train(
     the standard IVF recipe trains in memory on a sample and only the
     assignment pass touches every row. So the 100 TB cost profile is:
     one bounded sample collect (max_sample rows), millisecond training,
-    then one distributed column-math assignment (ivf_assign_table).
+    then one distributed Arrow-batched assignment (ivf_assign_table).
     Iterative Spark ML jobs for 16 centroids would pay multi-second
     scheduling overhead per iteration for no quality gain.
 
@@ -748,20 +748,13 @@ def ivf_assign_table(
     centroids: np.ndarray,
     vec_col: str = "embedding",
     list_col: str = "_list",
-    batched: bool = True,
 ) -> DataFrame:
     """Materializable list assignment: the precompute step of the IVF
-    index. Assign ONCE (cache, or better: write), then serve every query
-    from the assigned table — k-means inference must not hide inside
-    each lookup. See :func:`ivf_write_index` for the persisted form.
-    ``batched=True`` uses the Arrow matmul path (the at-scale default);
-    False keeps the pure column-math expression."""
-    lid = (
-        ivf_assign_batched(vec_col, centroids)
-        if batched
-        else ivf_assign(F.col(vec_col), centroids)
-    )
-    return df.withColumn(list_col, lid)
+    index, through the Arrow matmul path (:func:`ivf_assign_batched`).
+    Assign ONCE (cache, or better: write), then serve every query from
+    the assigned table — k-means inference must not hide inside each
+    lookup. See :func:`ivf_write_index` for the persisted form."""
+    return df.withColumn(list_col, ivf_assign_batched(vec_col, centroids))
 
 
 def ivf_write_index(

@@ -508,6 +508,27 @@ def repetition_signals(
     return out
 
 
+def _bigram_pairs(
+    df: DataFrame, text_col: str, groups: list[str], id_col: str
+) -> DataFrame:
+    """One row per adjacent token pair of each document: the ``groups``
+    columns, ``id_col``, ``w1`` and ``w2``. Documents with fewer than
+    two tokens have no pairs."""
+    t = tokens(F.col(text_col))
+    n = F.greatest(F.size(t) - 1, F.lit(0))
+    return df.select(
+        *groups,
+        id_col,
+        F.explode(
+            F.zip_with(
+                F.slice(t, 1, n),
+                F.slice(t, 2, n),
+                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+            )
+        ).alias("bg"),
+    ).select(*groups, id_col, "bg.w1", "bg.w2")
+
+
 def bigram_logprob_score(
     df: DataFrame,
     text_col: str = "text",
@@ -533,19 +554,7 @@ def bigram_logprob_score(
     from pyspark.sql import functions as F  # noqa: F811
 
     groups = by or []
-    gcols = [F.col(c) for c in groups]
-    t = tokens(F.col(text_col))
-    pairs = df.select(
-        *gcols,
-        F.col("doc_id"),
-        F.explode(
-            F.zip_with(
-                F.slice(t, 1, F.greatest(F.size(t) - 1, F.lit(0))),
-                F.slice(t, 2, F.greatest(F.size(t) - 1, F.lit(0))),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("bg"),
-    ).select(*groups, "doc_id", "bg.w1", "bg.w2")
+    pairs = _bigram_pairs(df, text_col, groups, "doc_id")
 
     bigrams = pairs.groupBy(*groups, "w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     left = bigrams.groupBy(*groups, "w1").agg(F.sum("c12").alias("c1"))
@@ -619,19 +628,7 @@ def kneser_ney_logprob_score(
     from pyspark.sql import functions as F  # noqa: F811
 
     groups = by or []
-    gcols = [F.col(c) for c in groups]
-    t = tokens(F.col(text_col))
-    pairs = df.select(
-        *gcols,
-        F.col(id_col),
-        F.explode(
-            F.zip_with(
-                F.slice(t, 1, F.greatest(F.size(t) - 1, F.lit(0))),
-                F.slice(t, 2, F.greatest(F.size(t) - 1, F.lit(0))),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("bg"),
-    ).select(*groups, id_col, "bg.w1", "bg.w2")
+    pairs = _bigram_pairs(df, text_col, groups, id_col)
 
     bg = pairs.groupBy(*groups, "w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     lft = bg.groupBy(*groups, "w1").agg(

@@ -2936,104 +2936,143 @@ FROM ranked WHERE rn = 1
 """
 
 
-def _fixture_ready(out: str) -> bool:
-    """A media fixture is usable only when its Spark parquet dir exists
-    AND carries the _SUCCESS marker — a stale partial dir from an
-    interrupted run must trigger regeneration, not be read as-is."""
-    return os.path.exists(os.path.join(out, "_SUCCESS"))
+def _fixture(sf_dir, name: str, write: Callable[[str], object]) -> str:
+    """The cached fixture dir ``name`` of the corpus at ``sf_dir``,
+    built by ``write(tmp)`` on first use. Fixtures hold already-encoded
+    media, so a gate's measured path pays only the decode.
+
+    The key is ``<basename>_<sha1(abspath)[:8]>_<name>`` under the
+    system temp dir: two corpora with one basename (``/a/sf0.01`` and
+    ``/b/sf0.01``) never share a fixture. A dir without ``_SUCCESS`` (a
+    stale partial from an interrupted run) is rebuilt, not read. The
+    build fills ``<key>.tmp`` and renames it into place; a concurrent
+    writer winning the rename is fine (the contents are deterministic),
+    any other rename failure raises."""
+    import hashlib
+    import shutil
+    import tempfile
+
+    ap = os.path.abspath(sf_dir)
+    tag = (os.path.basename(ap) or "sf") + "_" + hashlib.sha1(ap.encode()).hexdigest()[:8]
+    out = os.path.join(tempfile.gettempdir(), "coffea_spark_fixtures", f"{tag}_{name}")
+    done = os.path.join(out, "_SUCCESS")
+    if not os.path.exists(done):
+        tmp = out + ".tmp"
+        shutil.rmtree(tmp, ignore_errors=True)
+        write(tmp)
+        open(os.path.join(tmp, "_SUCCESS"), "a").close()
+        if not os.path.exists(done):  # a stale partial dir blocks the rename
+            shutil.rmtree(out, ignore_errors=True)
+        try:
+            os.rename(tmp, out)
+        except OSError:
+            if not os.path.exists(done):
+                raise
+    return out
+
+
+def _docs_fixture(spark, sf_dir, name: str, *cols) -> str:
+    """Parquet :func:`_fixture` of the corpus's documents projected to
+    ``cols``."""
+    return _fixture(
+        sf_dir,
+        name,
+        lambda tmp: _t(spark, sf_dir, "documents").select(*cols).write.parquet(tmp),
+    )
+
+
+def _image_fixture(spark, sf_dir, name: str, payloads, fmt, width, height) -> str:
+    """One encoded image per document: ``doc_id``, ``lang`` and the
+    ``image`` struct of the ``payloads(doc_id)`` bytes (a pandas-UDF
+    body), its ``fmt`` label and its ``width``/``height``."""
+    return _docs_fixture(
+        spark,
+        sf_dir,
+        name,
+        "doc_id",
+        "lang",
+        F.struct(
+            F.pandas_udf(payloads, "binary")("doc_id").alias("data"),
+            fmt.alias("format"),
+            width.cast("int").alias("width"),
+            height.cast("int").alias("height"),
+        ).alias("image"),
+    )
 
 
 def _multimodal_fixture(spark, sf_dir) -> str:
-    """Encode the deterministic per-document images (PNG for ids with
-    doc_id %3==0, paletted BMP for other odd ids, binary PGM otherwise)
-    into a parquet FIXTURE once per sf_dir — the
-    real pipeline scans already-encoded media; only decode belongs in
-    the measured path (round-4 advice: half the gate's cost was in-query
-    fixture encoding)."""
-    import tempfile
-
+    """The deterministic per-document grayscale images
+    (synthetic_gray_payloads): PNG for doc_id %3==0, paletted BMP for
+    other odd ids, binary PGM otherwise."""
     from coffea_spark.llmdata.multimodal import synthetic_gray_payloads
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = os.path.join(
-        tempfile.gettempdir(), "coffea_spark_fixtures", f"{tag}_multimodal_v3.parquet"
+    return _image_fixture(
+        spark,
+        sf_dir,
+        "multimodal_v3",
+        synthetic_gray_payloads,
+        F.when(F.col("doc_id") % 3 == 0, F.lit("png"))
+        .when(F.col("doc_id") % 2 == 1, F.lit("bmp"))
+        .otherwise(F.lit("pgm")),
+        F.lit(8) + F.col("doc_id") % 9,
+        F.lit(8) + F.col("doc_id") % 7,
     )
-    if not _fixture_ready(out):
-        enc = F.pandas_udf(synthetic_gray_payloads, "binary")
-        docs = _t(spark, sf_dir, "documents").select(
-            "doc_id",
-            "lang",
-            F.struct(
-                enc("doc_id").alias("data"),
-                F.when(F.col("doc_id") % 3 == 0, F.lit("png"))
-                .when(F.col("doc_id") % 2 == 1, F.lit("bmp"))
-                .otherwise(F.lit("pgm")).alias("format"),
-                (F.lit(8) + F.col("doc_id") % 9).cast("int").alias("width"),
-                (F.lit(8) + F.col("doc_id") % 7).cast("int").alias("height"),
-            ).alias("image"),
-        )
-        tmp = out + ".tmp"
-        docs.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            # a concurrent writer winning the rename is fine (identical
-            # deterministic contents) — but only if the destination really
-            # exists; any other rename failure (cross-device tmp, stale
-            # partial destination removed by a cleaner) must not hand the
-            # gate a missing/stale fixture path
-            if not _fixture_ready(out):
-                raise
-    return out
+
+
+def _pcm_fixture(
+    spark, sf_dir, name: str, codec: str, encode, n0: int, n_mod: int, stereo: bool
+) -> str:
+    """One deterministic PCM clip per document in the ``audio`` struct:
+    sample i of doc d = ((d*13 + 5i) % 4001) - 2000, n = n0 + d%n_mod,
+    8 kHz, stereo (L=R) for d%5==0 when ``stereo``; ``encode(pcm,
+    8000)`` makes the container bytes."""
+    import numpy as np
+    import pandas as pd
+
+    def clips(ids):
+        out = []
+        for d in ids:
+            d = int(d)
+            pcm = (((d * 13 + 5 * np.arange(n0 + d % n_mod)) % 4001) - 2000).astype(np.int16)
+            if stereo and d % 5 == 0:
+                pcm = np.stack([pcm, pcm], axis=1)
+            out.append(encode(pcm, 8000))
+        return pd.Series(out)
+
+    return _docs_fixture(
+        spark,
+        sf_dir,
+        name,
+        "doc_id",
+        "lang",
+        F.struct(
+            F.pandas_udf(clips, "binary")("doc_id").alias("data"),
+            F.lit(codec).alias("codec"),
+            F.lit(8000).alias("sample_rate"),
+            (F.lit(n0) + F.col("doc_id") % n_mod).cast("long").alias("n_samples"),
+        ).alias("audio"),
+    )
 
 
 def _audio_fixture(spark, sf_dir) -> str:
-    """Encode deterministic PCM clips (sample i of doc d =
-    ((d*13 + 5i) % 4001) - 2000, n = 400 + d%300, 8 kHz) into REAL
-    RIFF/WAVE containers — 16-bit stereo (L=R) for d%5==0, mono
-    otherwise — once per sf_dir."""
-    import tempfile
+    """The PCM clips (n = 400 + d%300, stereo for d%5==0) in REAL
+    RIFF/WAVE 16-bit containers."""
+    from coffea_spark.llmdata.multimodal import encode_wav
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = os.path.join(
-        tempfile.gettempdir(), "coffea_spark_fixtures", f"{tag}_audio.parquet"
+    return _pcm_fixture(spark, sf_dir, "audio", "wav", encode_wav, 400, 300, stereo=True)
+
+
+def _clip_stats(feats):
+    """Per-language clip count, total duration, mean RMS, peak sum and
+    mean zero-crossing rate of ``audio_features`` rows: the aggregate
+    the WAV, FLAC and ADPCM gates compare with their oracles."""
+    return feats.groupBy("lang").agg(
+        F.count(F.lit(1)).alias("n_clips"),
+        F.round(F.sum("duration_s"), 6).alias("sum_dur"),
+        F.round(F.avg("rms"), 6).alias("avg_rms"),
+        F.sum("peak").alias("sum_peak"),
+        F.round(F.avg("zcr"), 6).alias("avg_zcr"),
     )
-    if not _fixture_ready(out):
-        import numpy as np
-        import pandas as pd
-
-        from coffea_spark.llmdata.multimodal import encode_wav
-
-        def make(ids):
-            clips = []
-            for d in ids:
-                d = int(d)
-                n = 400 + d % 300
-                pcm = (((d * 13 + 5 * np.arange(n)) % 4001) - 2000).astype(np.int16)
-                if d % 5 == 0:
-                    pcm = np.stack([pcm, pcm], axis=1)
-                clips.append(encode_wav(pcm, 8000))
-            return pd.Series(clips)
-
-        enc = F.pandas_udf(make, "binary")
-        docs = _t(spark, sf_dir, "documents").select(
-            "doc_id",
-            "lang",
-            F.struct(
-                enc("doc_id").alias("data"),
-                F.lit("wav").alias("codec"),
-                F.lit(8000).alias("sample_rate"),
-                (F.lit(400) + F.col("doc_id") % 300).cast("long").alias("n_samples"),
-            ).alias("audio"),
-        )
-        tmp = out + ".tmp"
-        docs.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if not _fixture_ready(out):
-                raise
-    return out
 
 
 def q_audio_features(spark, sf_dir):
@@ -3049,13 +3088,7 @@ def q_audio_features(spark, sf_dir):
 
     docs = spark.read.parquet(_audio_fixture(spark, sf_dir))
     feats = audio_features(docs, "audio", decoder=real_audio_decoder)
-    return feats.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_clips"),
-        F.round(F.sum("duration_s"), 6).alias("sum_dur"),
-        F.round(F.avg("rms"), 6).alias("avg_rms"),
-        F.sum("peak").alias("sum_peak"),
-        F.round(F.avg("zcr"), 6).alias("avg_zcr"),
-    )
+    return _clip_stats(feats)
 
 
 SQL_AUDIO_FEATURES = """
@@ -3085,54 +3118,13 @@ FROM st GROUP BY lang
 
 
 def _flac_fixture(spark, sf_dir) -> str:
-    """Encode the SAME deterministic PCM clips as _audio_fixture
-    (sample i of doc d = ((d*13 + 5i) % 4001) - 2000, n = 400 + d%300,
-    8 kHz; stereo L=R for d%5==0) into REAL FLAC streams
+    """The SAME PCM clips as :func:`_audio_fixture` in REAL FLAC streams
     (llmdata/flac.py: STREAMINFO + CONSTANT/FIXED-order-2 frames with
-    rice residuals) once per sf_dir. FLAC is lossless, so the decoded
-    stats must equal the WAV gate's — the oracle is shared verbatim."""
-    import tempfile
+    rice residuals). FLAC is lossless, so the decoded stats must equal
+    the WAV gate's — the oracle is shared verbatim."""
+    from coffea_spark.llmdata.flac import encode_flac
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = os.path.join(
-        tempfile.gettempdir(), "coffea_spark_fixtures", f"{tag}_flac.parquet"
-    )
-    if not _fixture_ready(out):
-        import numpy as np
-        import pandas as pd
-
-        from coffea_spark.llmdata.flac import encode_flac
-
-        def make(ids):
-            clips = []
-            for d in ids:
-                d = int(d)
-                n = 400 + d % 300
-                pcm = (((d * 13 + 5 * np.arange(n)) % 4001) - 2000).astype(np.int16)
-                if d % 5 == 0:
-                    pcm = np.stack([pcm, pcm], axis=1)
-                clips.append(encode_flac(pcm, 8000))
-            return pd.Series(clips)
-
-        enc = F.pandas_udf(make, "binary")
-        docs = _t(spark, sf_dir, "documents").select(
-            "doc_id",
-            "lang",
-            F.struct(
-                enc("doc_id").alias("data"),
-                F.lit("flac").alias("codec"),
-                F.lit(8000).alias("sample_rate"),
-                (F.lit(400) + F.col("doc_id") % 300).cast("long").alias("n_samples"),
-            ).alias("audio"),
-        )
-        tmp = out + ".tmp"
-        docs.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if not _fixture_ready(out):
-                raise
-    return out
+    return _pcm_fixture(spark, sf_dir, "flac", "flac", encode_flac, 400, 300, stereo=True)
 
 
 def q_flac_features(spark, sf_dir):
@@ -3147,13 +3139,7 @@ def q_flac_features(spark, sf_dir):
 
     docs = spark.read.parquet(_flac_fixture(spark, sf_dir))
     feats = audio_features(docs, "audio", decoder=real_audio_decoder)
-    return feats.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_clips"),
-        F.round(F.sum("duration_s"), 6).alias("sum_dur"),
-        F.round(F.avg("rms"), 6).alias("avg_rms"),
-        F.sum("peak").alias("sum_peak"),
-        F.round(F.avg("zcr"), 6).alias("avg_zcr"),
-    )
+    return _clip_stats(feats)
 
 
 def q_audio_resample(spark, sf_dir):
@@ -3256,53 +3242,15 @@ FROM g GROUP BY lang
 
 
 def _adpcm_fixture(spark, sf_dir) -> str:
-    """Encode deterministic PCM clips (sample i of doc d =
-    ((d*13 + 5i) % 4001) - 2000, n = 600 + d%500, 8 kHz mono) into
-    REAL IMA ADPCM RIFF/WAVE containers (format tag 0x11, 4:1
-    compression, 256-byte blocks -> 505 samples/block, so every clip
-    spans 2-3 blocks and exercises header re-sync) once per sf_dir."""
-    import tempfile
+    """The PCM formula with n = 600 + d%500, mono, in REAL IMA ADPCM
+    RIFF/WAVE containers (format tag 0x11, 4:1 compression, 256-byte
+    blocks -> 505 samples/block, so every clip spans 2-3 blocks and
+    exercises header re-sync)."""
+    from coffea_spark.llmdata.multimodal import encode_wav_adpcm
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = os.path.join(
-        tempfile.gettempdir(), "coffea_spark_fixtures", f"{tag}_adpcm.parquet"
+    return _pcm_fixture(
+        spark, sf_dir, "adpcm", "ima_adpcm", encode_wav_adpcm, 600, 500, stereo=False
     )
-    if not _fixture_ready(out):
-        import numpy as np
-        import pandas as pd
-
-        from coffea_spark.llmdata.multimodal import encode_wav_adpcm
-
-        def make(ids):
-            clips = []
-            for d in ids:
-                d = int(d)
-                n = 600 + d % 500
-                pcm = (((d * 13 + 5 * np.arange(n)) % 4001) - 2000).astype(
-                    np.int16
-                )
-                clips.append(encode_wav_adpcm(pcm, 8000))
-            return pd.Series(clips)
-
-        enc = F.pandas_udf(make, "binary")
-        docs = _t(spark, sf_dir, "documents").select(
-            "doc_id",
-            "lang",
-            F.struct(
-                enc("doc_id").alias("data"),
-                F.lit("ima_adpcm").alias("codec"),
-                F.lit(8000).alias("sample_rate"),
-                (F.lit(600) + F.col("doc_id") % 500).cast("long").alias("n_samples"),
-            ).alias("audio"),
-        )
-        tmp = out + ".tmp"
-        docs.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if not _fixture_ready(out):
-                raise
-    return out
 
 
 def q_adpcm_features(spark, sf_dir):
@@ -3332,13 +3280,7 @@ def q_adpcm_features(spark, sf_dir):
         docs, "audio", decoder=real_audio_decoder,
         batch_decoder=real_audio_batch_decoder,
     )
-    return feats.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_clips"),
-        F.round(F.sum("duration_s"), 6).alias("sum_dur"),
-        F.round(F.avg("rms"), 6).alias("avg_rms"),
-        F.sum("peak").alias("sum_peak"),
-        F.round(F.avg("zcr"), 6).alias("avg_zcr"),
-    )
+    return _clip_stats(feats)
 
 
 def _sql_adpcm_features() -> str:
@@ -3432,50 +3374,34 @@ FROM fin GROUP BY lang
 
 
 def _video_fixture(spark, sf_dir) -> str:
-    """Encode deterministic video clips into REAL YUV4MPEG2 containers
-    once per sf_dir: doc d gets n = 4 + d%5 frames of (6 + 2*(d%4)) x
-    (8 + 2*(d%5)) luma with pixel i of frame f = (d*17 + f*29 + 3i) %
-    256 (chroma neutral)."""
-    import tempfile
+    """Deterministic video clips in REAL YUV4MPEG2 containers: doc d
+    gets n = 4 + d%5 frames of (6 + 2*(d%4)) x (8 + 2*(d%5)) luma with
+    pixel i of frame f = (d*17 + f*29 + 3i) % 256 (chroma neutral)."""
+    import numpy as np
+    import pandas as pd
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = os.path.join(
-        tempfile.gettempdir(), "coffea_spark_fixtures", f"{tag}_video.parquet"
+    from coffea_spark.llmdata.multimodal import encode_y4m
+
+    def clips(ids):
+        out = []
+        for d in ids:
+            d = int(d)
+            nf, h, w = 4 + d % 5, 6 + 2 * (d % 4), 8 + 2 * (d % 5)
+            frames = np.stack(
+                [
+                    ((d * 17 + f * 29 + 3 * np.arange(h * w)) % 256)
+                    .astype(np.uint8)
+                    .reshape(h, w)
+                    for f in range(nf)
+                ]
+            )
+            out.append(encode_y4m(frames))
+        return pd.Series(out)
+
+    return _docs_fixture(
+        spark, sf_dir, "video", "doc_id", "lang",
+        F.pandas_udf(clips, "binary")("doc_id").alias("video"),
     )
-    if not _fixture_ready(out):
-        import numpy as np
-        import pandas as pd
-
-        from coffea_spark.llmdata.multimodal import encode_y4m
-
-        def make(ids):
-            clips = []
-            for d in ids:
-                d = int(d)
-                nf, h, w = 4 + d % 5, 6 + 2 * (d % 4), 8 + 2 * (d % 5)
-                frames = np.stack(
-                    [
-                        ((d * 17 + f * 29 + 3 * np.arange(h * w)) % 256)
-                        .astype(np.uint8)
-                        .reshape(h, w)
-                        for f in range(nf)
-                    ]
-                )
-                clips.append(encode_y4m(frames))
-            return pd.Series(clips)
-
-        enc = F.pandas_udf(make, "binary")
-        docs = _t(spark, sf_dir, "documents").select(
-            "doc_id", "lang", enc("doc_id").alias("video")
-        )
-        tmp = out + ".tmp"
-        docs.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if not _fixture_ready(out):
-                raise
-    return out
 
 
 def q_video_frames(spark, sf_dir):
@@ -3611,38 +3537,20 @@ FROM st GROUP BY lang
 
 
 def _jpeg_fixture(spark, sf_dir) -> str:
-    """Encode the deterministic block-constant images (8x8 block (i,j)
-    of doc d = (d*37 + i*16 + j*5) % 256) through the REAL baseline
-    JPEG encoder (llmdata/jpeg.py) into a parquet fixture once per
-    sf_dir — the measured query pays only the decode."""
-    import tempfile
-
+    """The deterministic block-constant grayscale images (8x8 block
+    (i,j) of doc d = (d*37 + i*16 + j*5) % 256) through the REAL
+    baseline JPEG encoder (llmdata/jpeg.py)."""
     from coffea_spark.llmdata.multimodal import synthetic_jpeg_payloads
 
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = os.path.join(
-        tempfile.gettempdir(), "coffea_spark_fixtures", f"{tag}_jpeg.parquet"
+    return _image_fixture(
+        spark,
+        sf_dir,
+        "jpeg",
+        synthetic_jpeg_payloads,
+        F.lit("jpeg"),
+        F.lit(8) * (1 + F.col("doc_id") % 4),
+        F.lit(8) * (1 + F.col("doc_id") % 3),
     )
-    if not _fixture_ready(out):
-        enc = F.pandas_udf(synthetic_jpeg_payloads, "binary")
-        docs = _t(spark, sf_dir, "documents").select(
-            "doc_id",
-            "lang",
-            F.struct(
-                enc("doc_id").alias("data"),
-                F.lit("jpeg").alias("format"),
-                (F.lit(8) * (1 + F.col("doc_id") % 4)).cast("int").alias("width"),
-                (F.lit(8) * (1 + F.col("doc_id") % 3)).cast("int").alias("height"),
-            ).alias("image"),
-        )
-        tmp = out + ".tmp"
-        docs.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if not _fixture_ready(out):
-                raise
-    return out
 
 
 def q_jpeg_features(spark, sf_dir):
@@ -3700,39 +3608,42 @@ FROM stats GROUP BY lang
 """
 
 
-def _jpeg_color_fixture(spark, sf_dir) -> str:
-    """Encode the deterministic tile-constant RGB images through the
-    REAL 4:2:0 baseline color JPEG encoder (llmdata/jpeg.py) into a
-    parquet fixture once per sf_dir — the measured query pays only the
-    decode."""
-    import tempfile
+def _tile_jpeg_fixture(spark, sf_dir, progressive: bool) -> str:
+    """The deterministic tile-constant RGB images through the REAL 4:2:0
+    color JPEG encoder (llmdata/jpeg.py): baseline sequential, or
+    PROGRESSIVE (SOF2) with ``progressive``."""
+    from coffea_spark.llmdata import multimodal as mm
 
-    from coffea_spark.llmdata.multimodal import synthetic_color_jpeg_payloads
-
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = os.path.join(
-        tempfile.gettempdir(), "coffea_spark_fixtures", f"{tag}_jpeg_color.parquet"
+    return _image_fixture(
+        spark,
+        sf_dir,
+        "jpeg_prog" if progressive else "jpeg_color",
+        mm.synthetic_progressive_jpeg_payloads
+        if progressive
+        else mm.synthetic_color_jpeg_payloads,
+        F.lit("jpeg"),
+        F.lit(16) * (1 + F.col("doc_id") % 3),
+        F.lit(16) * (1 + F.col("doc_id") % 2),
     )
-    if not _fixture_ready(out):
-        enc = F.pandas_udf(synthetic_color_jpeg_payloads, "binary")
-        docs = _t(spark, sf_dir, "documents").select(
-            "doc_id",
-            "lang",
-            F.struct(
-                enc("doc_id").alias("data"),
-                F.lit("jpeg").alias("format"),
-                (F.lit(16) * (1 + F.col("doc_id") % 3)).cast("int").alias("width"),
-                (F.lit(16) * (1 + F.col("doc_id") % 2)).cast("int").alias("height"),
-            ).alias("image"),
-        )
-        tmp = out + ".tmp"
-        docs.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if not _fixture_ready(out):
-                raise
-    return out
+
+
+def _tile_jpeg_stats(spark, sf_dir, progressive: bool):
+    """Decode :func:`_tile_jpeg_fixture` in YCbCr and aggregate per
+    language: image count, size sums, plane means and the pixel sum —
+    the one aggregate SQL_JPEG_COLOR_FEATURES checks for both the
+    sequential and the progressive stream."""
+    from coffea_spark.llmdata.multimodal import color_image_features
+
+    docs = spark.read.parquet(_tile_jpeg_fixture(spark, sf_dir, progressive))
+    return color_image_features(docs, "image").groupBy("lang").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("img_width").alias("sum_w"),
+        F.sum("img_height").alias("sum_h"),
+        F.round(F.avg("mean_c0"), 6).alias("avg_y"),
+        F.round(F.avg("mean_c1"), 6).alias("avg_cb"),
+        F.round(F.avg("mean_c2"), 6).alias("avg_cr"),
+        F.sum("sum_pixels").alias("sum_pixels"),
+    )
 
 
 def q_jpeg_color_features(spark, sf_dir):
@@ -3748,52 +3659,7 @@ def q_jpeg_color_features(spark, sf_dir):
     every YCbCr value >= 1e-3 from a .5 boundary so numpy half-even and
     SQL half-away rounding agree (domain-scanned). sum_pixels is an
     exact integer checksum of all three coded planes."""
-    from coffea_spark.llmdata.multimodal import color_image_features
-
-    docs = spark.read.parquet(_jpeg_color_fixture(spark, sf_dir))
-    feats = color_image_features(docs, "image")
-    return feats.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("img_width").alias("sum_w"),
-        F.sum("img_height").alias("sum_h"),
-        F.round(F.avg("mean_c0"), 6).alias("avg_y"),
-        F.round(F.avg("mean_c1"), 6).alias("avg_cb"),
-        F.round(F.avg("mean_c2"), 6).alias("avg_cr"),
-        F.sum("sum_pixels").alias("sum_pixels"),
-    )
-
-
-def _jpeg_prog_fixture(spark, sf_dir) -> str:
-    """The tile-constant RGB images encoded PROGRESSIVE (SOF2) into a
-    parquet fixture once per sf_dir."""
-    import tempfile
-
-    from coffea_spark.llmdata.multimodal import synthetic_progressive_jpeg_payloads
-
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = os.path.join(
-        tempfile.gettempdir(), "coffea_spark_fixtures", f"{tag}_jpeg_prog.parquet"
-    )
-    if not _fixture_ready(out):
-        enc = F.pandas_udf(synthetic_progressive_jpeg_payloads, "binary")
-        docs = _t(spark, sf_dir, "documents").select(
-            "doc_id",
-            "lang",
-            F.struct(
-                enc("doc_id").alias("data"),
-                F.lit("jpeg").alias("format"),
-                (F.lit(16) * (1 + F.col("doc_id") % 3)).cast("int").alias("width"),
-                (F.lit(16) * (1 + F.col("doc_id") % 2)).cast("int").alias("height"),
-            ).alias("image"),
-        )
-        tmp = out + ".tmp"
-        docs.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if not _fixture_ready(out):
-                raise
-    return out
+    return _tile_jpeg_stats(spark, sf_dir, progressive=False)
 
 
 def q_jpeg_progressive_features(spark, sf_dir):
@@ -3806,19 +3672,7 @@ def q_jpeg_progressive_features(spark, sf_dir):
     bit-identical to the sequential stream's and the gate shares
     SQL_JPEG_COLOR_FEATURES verbatim — any divergence in any scan type
     flips the hash."""
-    from coffea_spark.llmdata.multimodal import color_image_features
-
-    docs = spark.read.parquet(_jpeg_prog_fixture(spark, sf_dir))
-    feats = color_image_features(docs, "image")
-    return feats.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("img_width").alias("sum_w"),
-        F.sum("img_height").alias("sum_h"),
-        F.round(F.avg("mean_c0"), 6).alias("avg_y"),
-        F.round(F.avg("mean_c1"), 6).alias("avg_cb"),
-        F.round(F.avg("mean_c2"), 6).alias("avg_cr"),
-        F.sum("sum_pixels").alias("sum_pixels"),
-    )
+    return _tile_jpeg_stats(spark, sf_dir, progressive=True)
 
 
 SQL_JPEG_COLOR_FEATURES = """
@@ -7513,29 +7367,16 @@ FROM top t
 
 
 def _docs_split_fixture(spark, sf_dir, n_files: int = 4) -> str:
-    """documents.parquet repartitioned into n_files once per sf_dir, so
-    file-source streaming gates get REAL multi-batch behavior
+    """documents.parquet repartitioned into n_files, so file-source
+    streaming gates get REAL multi-batch behavior
     (maxFilesPerTrigger=1 -> n_files micro-batches)."""
-    import tempfile
-
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    out = os.path.join(
-        tempfile.gettempdir(), "coffea_spark_fixtures", f"{tag}_docs_split.parquet"
+    return _fixture(
+        sf_dir,
+        "docs_split",
+        lambda tmp: _t(spark, sf_dir, "documents")
+        .repartition(n_files, "doc_id")
+        .write.parquet(tmp),
     )
-    if not _fixture_ready(out):
-        tmp = out + ".tmp"
-        (
-            _t(spark, sf_dir, "documents")
-            .repartition(n_files, "doc_id")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if not _fixture_ready(out):
-                raise
-    return out
 
 
 def q_stream_heavy_hitters(spark, sf_dir):
@@ -7783,7 +7624,7 @@ def _warc_fixture(spark, sf_dir) -> str:
     """Deterministic WARC files from the documents table (the Common
     Crawl container layout): round-robin by doc_id, every odd file
     gzip-per-record; even doc_ids are text/plain, odd ones html-wrapped
-    text/html. Written once per sf_dir.
+    text/html.
 
     File count scales with the corpus — max(4, min(64, n_docs // 312))
     — the production shape (one task per CC segment file): the
@@ -7795,27 +7636,12 @@ def _warc_fixture(spark, sf_dir) -> str:
     every consumer aggregates on ids/content_type, so results are
     provably file-count independent; oracle parity re-verified at
     sf0.1 AND sf0.01 on the widened layout)."""
-    import tempfile
-
     import pandas as pd
 
     from coffea_spark.llmdata.warc import write_warc
 
-    # cache key = basename + path hash: two corpora with the same
-    # basename (e.g. /root/testdata/sf0.01 vs a scale-rehearsal
-    # /tmp/scale/sf0.01) must NEVER share a fixture — a basename-only
-    # tag silently fed one corpus's WARC files to the other's gates
-    import hashlib
-
-    ap = os.path.abspath(os.path.normpath(sf_dir))
-    tag = (os.path.basename(ap) or "sf") + "_" + hashlib.sha1(
-        ap.encode()
-    ).hexdigest()[:8]
-    out = os.path.join(
-        tempfile.gettempdir(), "coffea_spark_fixtures", f"{tag}_warc"
-    )
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        os.makedirs(out, exist_ok=True)
+    def write(out: str) -> None:
+        os.makedirs(out)
         docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "source")
         # file count from ONE tiny count, not a driver collect: the
         # documents themselves never visit the driver — each WARC file
@@ -7885,9 +7711,8 @@ def _warc_fixture(spark, sf_dir) -> str:
                     [],
                     compress=bool(i % 2),
                 )
-        with open(os.path.join(out, "_SUCCESS"), "w"):
-            pass
-    return out
+
+    return _fixture(sf_dir, "warc", write)
 
 
 def q_warc_scan(spark, sf_dir):

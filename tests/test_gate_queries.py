@@ -121,3 +121,64 @@ def test_registry_is_hermetic_without_samples(spark, tmp_path, monkeypatch):
     assert len(sql) == 156
     with_oracle = {n for n, q in REGISTRY.items() if q.oracle is not None}
     assert with_oracle - set(sql) == {"correctionlib_sf", "effarea_l5flavor"}
+
+
+def test_media_fixtures_keyed_by_corpus_path(spark, tmp_path):
+    """Two corpora with one basename get a media fixture each: the
+    second corpus's audio gate counts its own documents, not the ones
+    the first corpus's fixture holds."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from coffea_spark.queries import REGISTRY, _audio_fixture
+
+    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+    n = docs.count()
+    corpora = []
+    for sub, frame in (("a", docs), ("b", docs.orderBy("doc_id").limit(n // 2))):
+        d = str(tmp_path / sub / "corpus")
+        frame.coalesce(1).write.parquet(os.path.join(d, "documents.parquet"))
+        corpora.append((d, frame.count()))
+    made = set()
+    try:
+        for d, n_docs in corpora:
+            made.add(_audio_fixture(spark, d))
+            out = REGISTRY["audio_features"].fn(spark, d)
+            assert out.agg(F.sum("n_clips")).first()[0] == n_docs
+    finally:
+        for fx in made:
+            shutil.rmtree(fx, ignore_errors=True)
+    assert len(made) == 2
+
+
+def test_fixture_without_success_marker_is_rebuilt(tmp_path):
+    """A fixture dir without _SUCCESS (an interrupted build) is rebuilt
+    in place, not read; one with _SUCCESS is reused as is."""
+    import shutil
+
+    from coffea_spark.queries import _fixture
+
+    builds = []
+
+    def write(tmp):
+        builds.append(tmp)
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "part"), "w") as f:
+            f.write(str(len(builds)))
+
+    corpus = str(tmp_path / "corpus")
+    out = _fixture(corpus, "stale_probe", write)
+    try:
+        assert _fixture(corpus, "stale_probe", write) == out
+        assert len(builds) == 1
+        os.remove(os.path.join(out, "_SUCCESS"))
+        with open(os.path.join(out, "leftover"), "w") as f:
+            f.write("partial")
+        assert _fixture(corpus, "stale_probe", write) == out
+        assert len(builds) == 2
+        assert sorted(os.listdir(out)) == ["_SUCCESS", "part"]
+        with open(os.path.join(out, "part")) as f:
+            assert f.read() == "2"
+    finally:
+        shutil.rmtree(out, ignore_errors=True)

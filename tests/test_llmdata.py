@@ -8,10 +8,15 @@ import pytest
 
 from coffea_spark.llmdata import dedup, similarity, text
 from coffea_spark.llmdata.multimodal import (
+    audio_features,
+    color_image_features,
     fake_image_decoder,
     image_features,
+    patch_features,
+    resample_features,
     resize_images,
     sample_frames,
+    tone_features,
 )
 
 
@@ -194,6 +199,78 @@ def test_multimodal_plumbing(spark):
     frames = sample_frames(vids, every_n=2, video_col="video", frame_bytes=64).collect()
     assert [f.frame_no for f in frames] == [0, 2, 4, 6, 8]
     assert all(len(f.frame) == 64 for f in frames)
+
+
+_PAYLOAD_TYPES = {
+    "image": "struct<data:binary,format:string,width:int,height:int>",
+    "audio": "struct<data:binary,codec:string,sample_rate:int,n_samples:bigint>",
+}
+
+# operator name -> (payload column, call with fake decoders, appended columns)
+_MAPPED_OPERATORS = {
+    "image_features": (
+        "image",
+        lambda df: image_features(df, "image", decoder=fake_image_decoder),
+        ["img_width", "img_height", "img_mean", "img_std"],
+    ),
+    "color_image_features": (
+        "image",
+        lambda df: color_image_features(
+            df, "image", decoder=lambda d: np.stack([fake_image_decoder(d)] * 3, axis=-1)
+        ),
+        ["img_width", "img_height", "mean_c0", "mean_c1", "mean_c2", "sum_pixels"],
+    ),
+    "resize_images": (
+        "image",
+        lambda df: resize_images(df, 4, "image", decoder=fake_image_decoder),
+        ["image"],
+    ),
+    "patch_features": (
+        "image",
+        lambda df: patch_features(df, "image", patch=2, decoder=fake_image_decoder),
+        ["n_patches", "patch_mean_avg", "patch_mean_max", "patch_contrast"],
+    ),
+    "audio_features": (
+        "audio",
+        audio_features,
+        ["duration_s", "rms", "peak", "zcr"],
+    ),
+    "resample_features": (
+        "audio",
+        lambda df: resample_features(df, "audio", 8000),
+        ["n_out", "mean_out", "rms_out"],
+    ),
+    "tone_features": (
+        "audio",
+        tone_features,
+        ["tone_power", "dominant_freq"],
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_MAPPED_OPERATORS))
+def test_mapped_operator_schema_and_passthrough(spark, op):
+    """Each one-row-in, one-row-out media operator drops its payload
+    column, keeps the other columns in order and appends its features:
+    an empty frame returns no rows under that schema, and a passthrough
+    column after the payload keeps its values and its place ahead of
+    the features."""
+    col, fn, appended = _MAPPED_OPERATORS[op]
+    schema = f"a long, {col} {_PAYLOAD_TYPES[col]}, b string"
+    empty = fn(spark.createDataFrame([], schema))
+    assert empty.columns == ["a", "b", *appended]
+    assert [f.dataType.simpleString() for f in empty.schema.fields[:2]] == [
+        "bigint",
+        "string",
+    ]
+    assert empty.collect() == []
+
+    payload = bytes(range(256)) * 2  # a 22x22 fake image, 256 fake PCM samples
+    meta = ("raw8", 0, 0) if col == "image" else ("pcm16", 8000, 256)
+    rows = [(i, (payload, *meta), f"b{i}") for i in range(3)]
+    out = fn(spark.createDataFrame(rows, schema)).orderBy("a").collect()
+    assert [(r["a"], r["b"]) for r in out] == [(i, f"b{i}") for i in range(3)]
+    assert all(v is not None for r in out for v in r)
 
 
 def test_real_decoder_raises(spark):

@@ -623,6 +623,72 @@ def test_root_stream_casts_like_read_root(spark, tmp_path):
     assert got == read_root(spark, [path]).orderBy("event").collect()
 
 
+def test_root_stream_with_schema_starts_before_first_file(spark, tmp_path):
+    """A ROOT stream given .schema(...) starts on an empty landing
+    directory, and a file that lands later streams the schema's
+    columns in schema order, not every branch of the file."""
+    from coffea_spark.datasource import register_root_source
+    from coffea_spark.root_reader import read_root
+    from coffea_spark.root_writer import write_root_file
+
+    src = tmp_path / "landing"
+    src.mkdir()
+    register_root_source(spark)
+    q = (
+        spark.readStream.schema("nMuon int, event long")
+        .format("root")
+        .load(str(src))
+        .writeStream.format("memory")
+        .queryName("root_stream_schema")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        assert spark.table("root_stream_schema").collect() == []
+        rng = np.random.default_rng(5)
+        path = write_root_file(
+            {
+                "event": np.arange(6, dtype=np.int64),
+                "MET_pt": rng.random(6).astype(np.float32),
+                "Muon_pt": [rng.random(k).astype(np.float32) for k in (0, 2, 1, 3, 0, 1)],
+            },
+            str(src / "f0.root"),
+            counts_map={"Muon_pt": "nMuon"},
+        )
+        q.processAllAvailable()
+        got = spark.table("root_stream_schema")
+        assert got.columns == ["nMuon", "event"]
+        want = read_root(spark, [path]).select("nMuon", "event")
+        assert got.orderBy("event").collect() == want.orderBy("event").collect()
+    finally:
+        q.stop()
+
+
+def test_root_stream_schema_names_missing_branch(spark, tmp_path):
+    """A stream schema column the file lacks fails the stream, naming
+    the branch."""
+    from coffea_spark.datasource import register_root_source
+    from tests.test_root_writer import _scan_files
+
+    src = tmp_path / "landing"
+    src.mkdir()
+    _scan_files(src, sizes=(4,))
+    register_root_source(spark)
+    q = (
+        spark.readStream.schema("event long, no_such_branch int")
+        .format("root")
+        .load(str(src))
+        .writeStream.format("memory")
+        .queryName("root_stream_missing")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception, match=r"lacks branches \[.no_such_branch.\]"):
+        q.awaitTermination()
+
+
 def test_torch_wrapper_protocol_with_injected_backend(spark, tmp_path):
     """The torch wrapper's FULL Spark path (per-executor load-once,
     Arrow batch -> tensor marshaling, detach().numpy() return) driven
