@@ -30,26 +30,17 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # record the box load at launch: BENCH_r11 launched into load 3.8
-    # and produced a 298 s total that was pure contention (the one-sided
-    # 2-20 s noise documented in BASELINE.md) — the recorded load lets a
-    # reader adjudicate a noisy run without a re-measure
+    # record the box load at launch, so a reader can judge a noisy run
+    # without a re-measure (the one-sided noise: BASELINE.md)
     try:
         load_at_launch = round(os.getloadavg()[0], 2)
     except OSError:
         load_at_launch = None
-    # idle-gate (bounded): BENCH_r12 launched into load 7.52 — recording
-    # the load made the contamination visible, this acts on it. Wait for
-    # the 1-min load to drain below the gate before the timed sweep, but
-    # never more than IDLE_WAIT_MAX seconds (a stuck co-tenant must not
-    # stall the driver; a still-loaded start is RECORDED, not fatal —
-    # the per-query medians + burst reps remain the noise backstop).
-    # r13 driver evidence: the 32-core leg launched at load 12.12, the
-    # gate released at 1.7 after 120 s, and the sweep still read 295 s
-    # vs 215-223 s quiet — a ~1.5-load residual co-tenant contaminates a
-    # whole sweep. Tighten the default gate to 1.0 and give the drain
-    # up to 300 s; both remain env-overridable and a still-loaded start
-    # is recorded, not fatal.
+    # idle gate (bounded): wait for the 1-min load to drain below
+    # SPARK_GRAFT_IDLE_GATE before the timed sweep, for at most
+    # SPARK_GRAFT_IDLE_WAIT_MAX seconds. A still-loaded start is
+    # recorded, not fatal: the per-query medians and burst reps remain
+    # the noise backstop. Why 1.0 and 300 s: OPTIMIZATION_r14.md.
     idle_gate = float(os.environ.get("SPARK_GRAFT_IDLE_GATE", "1.0"))
     idle_max = float(os.environ.get("SPARK_GRAFT_IDLE_WAIT_MAX", "300"))
     idle_waited = 0.0
@@ -94,14 +85,10 @@ def main() -> None:
             # so every rep pays the same cache-fill cost and storage
             # memory doesn't accumulate across unrelated queries
             spark.catalog.clearCache()
-        # noise guard: the box has documented multi-second interference
-        # bursts (local evidence: a full run where lm_bigram's n=3
-        # median read 22.4 s vs 2.7 s isolated, spread 26 s). When the
-        # sample spread betrays a burst (median > 1.5x min and > 0.5 s
-        # over it — tightened from 2x/1.0 s in r14: the r13 driver sweep
-        # read +37% total with most per-query medians inflated below the
-        # old trigger), two extra reps let the median shed the
-        # contaminated samples. Bounded: at most 2 extra reps per query.
+        # noise guard: when the sample spread betrays an interference
+        # burst (median > 1.5x min and > 0.5 s over it), two extra reps
+        # let the median shed the contaminated samples. Bounded: at most
+        # 2 extra reps per query. Why these thresholds: OPTIMIZATION_r14.md.
         if samples and len(samples) >= 3:
             med = statistics.median(samples)
             if med > 1.5 * min(samples) and med - min(samples) > 0.5:

@@ -122,7 +122,6 @@ class RootReader(DataSourceReader):
         from coffea_spark.root_reader import open_tree
 
         r = open_tree(partition.path, self._tree)
-        r.payload_cache_size = 2 * len(self._cols) + 8
         start, stop = int(partition.start), int(partition.stop)
         for b0 in range(start, stop, self._batch_rows) or [0]:
             b1 = min(b0 + self._batch_rows, stop)

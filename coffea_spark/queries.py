@@ -119,10 +119,8 @@ def _parallelism_floor(
     sort of each input partition, i.e. a single-task sort of the whole
     table in exactly the one-split case this guard exists for — while
     hash partitioning is retry-deterministic with no sort, and a
-    downstream groupBy/join on the same key reuses the exchange (r13
-    A/B over 15 gates: floor sum 19.6-20.5 s round-robin vs 12.3-13.2 s
-    with no floor at all; the hash floor recovers most of that gap
-    while keeping scan-side work full-width)."""
+    downstream groupBy/join on the same key reuses the exchange. A/B:
+    OPTIMIZATION_r13.md §3."""
     cores = spark.sparkContext.defaultParallelism
     if _estimated_splits(spark, path) < max(2, cores // 4):
         if key is not None:
@@ -153,11 +151,8 @@ def _t(
     # added for parallelism" accidental Exchange of guide §2.4. This is
     # scale-independent: the floor only ever fires in the few-splits
     # regime, and in that regime a map side this cheap never needs
-    # width first. Measured fleet-wide (r13 interleaved floor-ON/OFF A/B
-    # over all 162 gates, min-of-2 per leg): the opted-out gates each
-    # save 0.15-1.2 s at sf0.1 while heavy-map gates (shingle
-    # extraction, HOF physics math, Arrow matmuls) keep the floor —
-    # removing it fleet-wide would LOSE a net 66 s.
+    # width first. Heavy-map gates (shingle extraction, HOF physics
+    # math, Arrow matmuls) keep the floor. A/B: OPTIMIZATION_r13.md §4.
     _prepare(spark)
     if name == "events":
         return _read_events(spark, sf_dir, floor=floor)
@@ -2941,9 +2936,13 @@ def _fixture(sf_dir, name: str, write: Callable[[str], object]) -> str:
     built by ``write(tmp)`` on first use. Fixtures hold already-encoded
     media, so a gate's measured path pays only the decode.
 
-    The key is ``<basename>_<sha1(abspath)[:8]>_<name>`` under the
-    system temp dir: two corpora with one basename (``/a/sf0.01`` and
-    ``/b/sf0.01``) never share a fixture. A dir without ``_SUCCESS`` (a
+    The key is ``<basename>_<sha1(abspath, stamp)[:8]>_<name>`` under
+    the system temp dir, where the stamp is the path, size and
+    ``mtime_ns`` of each file of the corpus's ``documents.parquet`` (as
+    :func:`~coffea_spark.root_reader.open_tree` keys its readers): two
+    corpora with one basename (``/a/sf0.01`` and ``/b/sf0.01``) never
+    share a fixture, and a corpus rewritten in place gets a new one. A
+    dir without ``_SUCCESS`` (a
     stale partial from an interrupted run) is rebuilt, not read. The
     build fills ``<key>.tmp`` and renames it into place; a concurrent
     writer winning the rename is fine (the contents are deterministic),
@@ -2953,7 +2952,13 @@ def _fixture(sf_dir, name: str, write: Callable[[str], object]) -> str:
     import tempfile
 
     ap = os.path.abspath(sf_dir)
-    tag = (os.path.basename(ap) or "sf") + "_" + hashlib.sha1(ap.encode()).hexdigest()[:8]
+    docs = os.path.join(ap, "documents.parquet")
+    files = [docs] if os.path.isfile(docs) else sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(docs) for f in fs
+    )
+    stamp = [(p, st.st_size, st.st_mtime_ns) for p in files for st in [os.stat(p)]]
+    digest = hashlib.sha1(repr((ap, stamp)).encode()).hexdigest()[:8]
+    tag = (os.path.basename(ap) or "sf") + "_" + digest
     out = os.path.join(tempfile.gettempdir(), "coffea_spark_fixtures", f"{tag}_{name}")
     done = os.path.join(out, "_SUCCESS")
     if not os.path.exists(done):
@@ -7539,7 +7544,8 @@ def q_bloom_decontam(spark, sf_dir):
     # count aggregate and a broadcast-join build share no reusable
     # exchange. Counts are identical: bloom_probe groups by id and
     # contaminated_ids is distinct, so both sides are unique-id sets —
-    # presence flags sum to exactly the old cardinalities (r13).
+    # presence flags sum to exactly the old cardinalities.
+    # OPTIMIZATION_r13.md §5.
     stats = (
         exact.withColumn("_e", F.lit(1))
         .join(flagged.withColumn("_f", F.lit(1)), "doc_id", "full_outer")
@@ -7628,14 +7634,11 @@ def _warc_fixture(spark, sf_dir) -> str:
 
     File count scales with the corpus — max(4, min(64, n_docs // 312))
     — the production shape (one task per CC segment file): the
-    correctness SFs (≤500 docs) keep the historical 4 files, so oracle
-    gate inputs are byte-identical; from the bench SF up the parse
-    parallelism grows with the corpus instead of bottlenecking the
-    whole ccnet pipeline on 4 tasks (r11 audit: the regex
-    extract+langid+gopher chain was fixture-file-bound at 4 tasks —
-    every consumer aggregates on ids/content_type, so results are
-    provably file-count independent; oracle parity re-verified at
-    sf0.1 AND sf0.01 on the widened layout)."""
+    correctness SFs (≤500 docs) keep 4 files, so oracle gate inputs
+    are byte-identical; from the bench SF up the parse parallelism
+    grows with the corpus. Every consumer aggregates on
+    ids/content_type, so results do not depend on the file count.
+    Measured: BENCH_SCALE.md, "WARC file count"."""
     import pandas as pd
 
     from coffea_spark.llmdata.warc import write_warc
@@ -8714,7 +8717,7 @@ def q_decontaminate(spark, sf_dir):
     check is a map-side semi-join probe. The gram tables are built ONCE:
     n_contaminated is the report's row count (one doc per row), so a
     single aggregation over contamination_report supplies both headline
-    numbers instead of two parallel gram-table builds (r8 judge ask)."""
+    numbers instead of two parallel gram-table builds."""
     from coffea_spark.llmdata.decontam import contamination_report
 
     docs = _t(spark, sf_dir, "documents")
@@ -9091,19 +9094,10 @@ def q_ccnet_pipeline(spark, sf_dir):
     the LM, 1 tiny cutoff agg, 1 final agg — all keyed on ids/terms,
     never payloads; the WARC parse is one task per file.
 
-    COST ATTRIBUTION (r11 audit, sf0.1 quiet box: 7.9 s median, 7.8 s
-    min): the wall is BREADTH, not a bad plan. Cold per-stage
-    decomposition: parse 4 files/4 tasks ~up to 8.6 s cold (JIT-heavy
-    first job; fused with extraction in the real gate), regex
-    extract+langid+gopher ~5.5 s (the 4-task parallelism is
-    fixture-file-bound at gate SFs by design — file count scales with
-    the corpus, BENCH_SCALE.md), paragraph_dedup 2.2 s, unigram LM
-    3.4 s, buckets+final agg 2.4 s. Six sequential keyed stages x
-    sub-second fixed scheduling each is the floor at this corpus size;
-    every stage is linear and keyed, so the fixed costs amortize at
-    100x. Caches are eagerly materialized (count()) so no stage runs
-    per consumer — verified by the decomposition being non-additive
-    with the fused gate wall."""
+    Every stage is linear and keyed, and each cache is eagerly
+    materialized (count()) so no stage runs once per consumer. The wall
+    at gate scale is the breadth of six sequential keyed stages, not a
+    bad plan: OPTIMIZATION_r14.md (``ccnet_pipeline``)."""
     from coffea_spark.llmdata.dedup import paragraph_dedup
     from coffea_spark.llmdata.text import (
         gopher_quality_signals,
@@ -9154,8 +9148,7 @@ def q_ccnet_pipeline(spark, sf_dir):
     # Each cache below is EAGERLY materialized (tiny count() job): the
     # consumers are separate subtrees that Spark may launch against a
     # cold cache CONCURRENTLY (broadcast builds especially), re-running
-    # the upstream chain per branch — the q_minhash_lsh /
-    # jaccard_join lesson, applied here by the r11 cost audit.
+    # the upstream chain per branch.
     kept.count()
     deduped = paragraph_dedup(kept, id_col="k")
     docs = deduped.select(

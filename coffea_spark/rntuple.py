@@ -523,11 +523,3 @@ class RNTupleReader:
             pa_fields.append(pa.field(name, arr.type))
         return pa.Table.from_arrays(cols, schema=pa.schema(pa_fields))
 
-
-def rntuple_to_arrow(path: str, name: str | None = None, columns: list[str] | None = None):
-    r = RNTupleReader(path, name)
-    if columns is not None:
-        missing = [c for c in columns if c not in r.branches]
-        if missing:
-            raise KeyError(f"{path}: fields not readable: {missing}")
-    return r.to_arrow(columns)

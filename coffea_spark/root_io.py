@@ -14,19 +14,18 @@ Converting once preserves everything Spark needs: jagged branches
 become Parquet LIST columns (Spark array<T>), NanoAOD's flat
 ``Muon_pt``-style naming survives as column names, and the schema
 module's ``zip_collections``/NanoAODSchemaSpec reassemble struct
-collections exactly as for driver-generated parquet. The conversion is
-embarrassingly parallel (one task per ROOT file, no shuffle) and runs
-ONCE per dataset — every subsequent query is a parquet scan with
-row-group skipping and pushdown, which a repeated ROOT decode (native
-or uproot) cannot match.
+collections exactly as for driver-generated parquet. The conversion
+runs ONCE per dataset as ``read_root(spark, files).write.parquet(dir)``:
+the distributed (file, entry-range) scan, no shuffle. Every subsequent
+query is a parquet scan with row-group skipping and pushdown, which a
+repeated ROOT decode (native or uproot) cannot match.
 
-The decode step is the native reader (:func:`root_reader.root_to_arrow`);
-uproot is not used.
+:func:`ttree_to_parquet` converts one file on the local process; both
+decode with the native reader, and uproot is not used.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,9 +39,8 @@ def ttree_to_parquet(
     step_size: str = "100 MB",
 ) -> None:
     """Convert one ROOT TTree to Parquet, preserving jaggedness as LIST
-    columns. One such call per input file = one independent task; run
-    them with ``spark.sparkContext.parallelize(files).foreach(...)`` (or
-    any job runner) for a shuffle-free distributed conversion.
+    columns. For a whole dataset use
+    ``read_root(spark, files).write.parquet(dir)``.
 
     Mirrors the decode the reference performs per-chunk at query time
     (factory.py:267-480), but performed once at the storage layer.
@@ -55,26 +53,6 @@ def ttree_to_parquet(
         root_path, tree, list(branches) if branches is not None else None
     )
     pq.write_table(table, out_path, row_group_size=64 * 1024)
-
-
-def convert_fileset(
-    spark: SparkSession,
-    fileset: dict[str, list[str]],
-    out_dir: str,
-    tree: str = "Events",
-) -> dict[str, str]:
-    """Distribute ``ttree_to_parquet`` over a reference-style fileset
-    ({dataset: [root files]}): one Spark task per file, no shuffle.
-    Returns {dataset: parquet directory} for ``spark.read.parquet``."""
-    jobs = [
-        (path, os.path.join(out_dir, ds, f"part-{i:05d}.parquet"), tree)
-        for ds, paths in fileset.items()
-        for i, path in enumerate(paths)
-    ]
-    spark.sparkContext.parallelize(jobs, len(jobs)).foreach(
-        lambda j: ttree_to_parquet(j[0], j[1], j[2])
-    )
-    return {ds: os.path.join(out_dir, ds) for ds in fileset}
 
 
 def read_converted(

@@ -467,7 +467,12 @@ def _pa_values(vals):
 
 
 class RootTreeReader:
-    """Read one TTree of one ROOT file. See module docstring for scope."""
+    """Read one TTree of one ROOT file. See module docstring for scope.
+
+    The entry range is the only read unit: :meth:`to_arrow` without a
+    range reads ``[0, entries)``, and :meth:`array`, :meth:`counts` and
+    :meth:`inner_counts` are views of the same column read over the
+    whole tree, decoded on each call."""
 
     def __init__(self, path: str, tree: str | None = None):
         self.path = path
@@ -527,7 +532,7 @@ class RootTreeReader:
                 trees[k.name] = k
         if not trees:
             kinds = sorted({k.cls for k in self._keys})
-            hint = " (RNTuple file — use root_io convert path)" if any(
+            hint = " (RNTuple file — open it with open_tree)" if any(
                 "RNTuple" in c for c in kinds
             ) else ""
             raise RootFileError(f"{path}: no TTree keys found{hint}; classes={kinds}")
@@ -546,20 +551,14 @@ class RootTreeReader:
         for k in self._keys:
             if k.cls == "TBasket" and k.title == tree:
                 self._baskets.setdefault(k.name, []).append(k)
-        # bounded decompressed-payload cache for entry-range iteration:
-        # adjacent ranges share their boundary basket, so a cache sized
-        # ~2 baskets per requested column makes each basket decompress
-        # once per pass. 0 disables (whole-branch reads cache the final
-        # arrays instead).
-        self.payload_cache_size = 0
-        self._payload_lru: "OrderedDict[int, bytes]" = OrderedDict()
+        # payloads of the baskets holding the first entry after the last
+        # to_arrow range: an adjacent next range starts in them
+        self._edge: dict[int, bytes] = {}
+        self._edge_offs: set[int] = set()
         self._tree_buf = self._payload(self._tree_key)
         self._parse_embedded_baskets()
         self.branches = self._parse_leaves()
         self._entries: int | None = None
-        self._cache: dict[str, np.ndarray] = {}
-        self._counts_cache: dict[str, np.ndarray] = {}
-        self._inner_counts_cache: dict[str, np.ndarray] = {}
         self._basket_starts: dict[str, np.ndarray] = {}
 
     # -- low-level ----------------------------------------------------------
@@ -749,16 +748,11 @@ class RootTreeReader:
     def _payload(self, key: _Key) -> bytes:
         if isinstance(key, _EmbeddedKey):
             return key.payload
-        if self.payload_cache_size > 0:
-            hit = self._payload_lru.get(key.off)
-            if hit is not None:
-                self._payload_lru.move_to_end(key.off)
-                return hit
-        out = self._payload_raw(key)
-        if self.payload_cache_size > 0:
-            self._payload_lru[key.off] = out
-            while len(self._payload_lru) > self.payload_cache_size:
-                self._payload_lru.popitem(last=False)
+        out = self._edge.get(key.off)
+        if out is None:
+            out = self._payload_raw(key)
+            if key.off in self._edge_offs:
+                self._edge[key.off] = out
         return out
 
     def _payload_raw(self, key: _Key) -> bytes:
@@ -1629,51 +1623,7 @@ class RootTreeReader:
         """Flat (entry-concatenated) values of one branch, native byte
         order. Jagged branches return the flattened content — regroup with
         :meth:`counts`."""
-        if name in self._cache:
-            return self._cache[name]
-        info = self.branches.get(name)
-        if info is None:
-            raise KeyError(
-                f"{self.path}:{self.tree}: no readable branch {name!r} "
-                f"(have {len(self.branches)})"
-            )
-        itemsize = np.dtype(info.dtype).itemsize
-        parts, count_parts, inner_parts = [], [], []
-        for k in self._baskets[name]:
-            v, c, i = self._basket_data(name, info, itemsize, k)
-            parts.append(v)
-            if c is not None:
-                count_parts.append(c)
-            if i is not None:
-                inner_parts.append(i)
-        vals = (
-            np.concatenate(parts)
-            if parts
-            else np.empty(0, dtype=">" + info.dtype)
-        )
-        vals = self._native(vals, info)
-        self._cache[name] = vals
-        if count_parts or (info.from_offsets and info.string != 1) or info.depth >= 2:
-            self._counts_cache[name] = (
-                np.concatenate(count_parts)
-                if count_parts
-                else np.empty(0, dtype=np.int64)
-            )
-        if info.depth == 3:
-            # per-basket (mid, inner) tuples -> concatenated levels
-            self._inner_counts_cache[name] = (
-                np.concatenate([t[0] for t in inner_parts])
-                if inner_parts else np.empty(0, dtype=np.int64),
-                np.concatenate([t[1] for t in inner_parts])
-                if inner_parts else np.empty(0, dtype=np.int64),
-            )
-        elif info.depth == 2:
-            self._inner_counts_cache[name] = (
-                np.concatenate(inner_parts)
-                if inner_parts
-                else np.empty(0, dtype=np.int64)
-            )
-        return vals
+        return self._range_column(name, 0, self.entries)[0]
 
     def basket_entry_index(self, name: str) -> np.ndarray:
         """Cumulative entry offsets of the branch's baskets (length
@@ -1685,13 +1635,37 @@ class RootTreeReader:
             )
         return self._basket_starts[name]
 
-    def _range_column(self, name: str, e0: int, e1: int):
+    def _basket_span(self, name: str, e0: int, e1: int) -> tuple[int, int]:
+        """Indices ``[b_lo, b_hi)`` of the branch's baskets that overlap
+        the entry range [e0, e1)."""
+        idx = self.basket_entry_index(name)
+        b_lo = max(int(np.searchsorted(idx, e0, side="right")) - 1, 0)
+        return b_lo, int(np.searchsorted(idx, e1, side="left"))
+
+    def _edge_off(self, name: str, e1: int) -> int | None:
+        """File offset of the branch's basket that holds entry ``e1`` and
+        also entries before it, or None when ``e1`` starts a basket."""
+        idx = self.basket_entry_index(name)
+        b = int(np.searchsorted(idx, e1, side="right")) - 1
+        if b < len(idx) - 1 and idx[b] < e1:
+            return self._baskets[name][b].off
+        return None
+
+    def _range_column(self, name: str, e0: int, e1: int, spans=None):
         """One branch over the half-open entry range [e0, e1): returns
         (native vals, per-entry counts or None, inner counts or None).
         Only baskets OVERLAPPING the range are decompressed, so peak
         memory is bounded by the range span + one basket on each edge —
         the reference's cluster-aligned chunk reads
-        (processor/executor.py:110-181), Spark-first."""
+        (processor/executor.py:110-181), Spark-first.
+
+        ``spans`` maps a counts branch to ``(lo, its values over
+        [lo, e1), their _cum)``, read once by :meth:`to_arrow` for every
+        member it frames; without it a leaflist-jagged member reads its
+        counts branch itself."""
+        if spans and name in spans:
+            lo, vals, _ = spans[name]
+            return vals[e0 - lo :], None, None
         info = self.branches.get(name)
         if info is None:
             raise KeyError(
@@ -1702,12 +1676,10 @@ class RootTreeReader:
         idx = self.basket_entry_index(name)
         e1 = min(e1, int(idx[-1]))
         e0 = min(e0, e1)
-        b_lo = max(int(np.searchsorted(idx, e0, side="right")) - 1, 0)
-        b_hi = int(np.searchsorted(idx, e1, side="left"))
-        keys = self._baskets.get(name, [])[b_lo:b_hi]
-        B0 = int(idx[b_lo]) if b_lo < len(idx) else 0
+        b_lo, b_hi = self._basket_span(name, e0, e1)
+        B0 = int(idx[b_lo])
         parts, cparts, iparts = [], [], []
-        for k in keys:
+        for k in self._baskets.get(name, [])[b_lo:b_hi]:
             v, c, i = self._basket_data(name, info, itemsize, k)
             parts.append(v)
             if c is not None:
@@ -1721,18 +1693,10 @@ class RootTreeReader:
         )
         s0, s1 = e0 - B0, e1 - B0
         if info.depth == 3:
-            outer = np.concatenate(cparts) if cparts else np.empty(0, dtype=np.int64)
-            mid = (
-                np.concatenate([t[0] for t in iparts])
-                if iparts else np.empty(0, dtype=np.int64)
-            )
-            inner = (
-                np.concatenate([t[1] for t in iparts])
-                if iparts else np.empty(0, dtype=np.int64)
-            )
-            o_cum = np.concatenate([[0], np.cumsum(outer, dtype=np.int64)])
-            m_cum = np.concatenate([[0], np.cumsum(mid, dtype=np.int64)])
-            i_cum = np.concatenate([[0], np.cumsum(inner, dtype=np.int64)])
+            outer = _cat(cparts)
+            mid = _cat([t[0] for t in iparts])
+            inner = _cat([t[1] for t in iparts])
+            o_cum, m_cum, i_cum = _cum(outer), _cum(mid), _cum(inner)
             vals = vals[i_cum[m_cum[o_cum[s0]]] : i_cum[m_cum[o_cum[s1]]]]
             return (
                 self._native(vals, info),
@@ -1743,32 +1707,30 @@ class RootTreeReader:
                 ),
             )
         if info.depth == 2:
-            outer = np.concatenate(cparts) if cparts else np.empty(0, dtype=np.int64)
-            inner = np.concatenate(iparts) if iparts else np.empty(0, dtype=np.int64)
-            o_cum = np.concatenate([[0], np.cumsum(outer, dtype=np.int64)])
-            i_cum = np.concatenate([[0], np.cumsum(inner, dtype=np.int64)])
+            outer, inner = _cat(cparts), _cat(iparts)
+            o_cum, i_cum = _cum(outer), _cum(inner)
             vals = vals[i_cum[o_cum[s0]] : i_cum[o_cum[s1]]]
             return (
                 self._native(vals, info),
                 outer[s0:s1],
                 inner[o_cum[s0] : o_cum[s1]],
             )
-        if cparts:  # offset-table jaggedness (STL / member-wise split)
-            cts = np.concatenate(cparts)
-            cum = np.concatenate([[0], np.cumsum(cts, dtype=np.int64)])
+        if cparts or (info.from_offsets and info.string != 1):
+            # offset-table jaggedness (STL / member-wise split)
+            cts = _cat(cparts)
+            cum = _cum(cts)
             return self._native(vals[cum[s0] : cum[s1]], info), cts[s0:s1], None
         if info.counts is not None:
-            # leaflist jagged: frame with the counts branch over the full
-            # basket span (whole entries per basket by construction)
-            span_hi = int(idx[b_hi]) if b_hi < len(idx) else int(idx[-1])
-            cts_span, _, _ = self._range_column(info.counts, B0, span_hi)
-            cts_span = cts_span.astype(np.int64)
-            cum = np.concatenate([[0], np.cumsum(cts_span, dtype=np.int64)])
-            return (
-                self._native(vals[cum[s0] : cum[s1]], info),
-                cts_span[s0:s1],
-                None,
-            )
+            # leaflist jagged: frame with the counts branch from the first
+            # basket's start (whole entries per basket by construction)
+            if spans and info.counts in spans:
+                lo, span, cum = spans[info.counts]
+            else:
+                lo, span = B0, self._range_column(info.counts, B0, e1)[0]
+                cum = _cum(span)
+            c0 = cum[B0 - lo]
+            vals = vals[cum[e0 - lo] - c0 : cum[e1 - lo] - c0]
+            return self._native(vals, info), span[e0 - lo : e1 - lo], None
         vals = vals[s0 * info.fixed_len : s1 * info.fixed_len]
         cts = (
             np.full(s1 - s0, info.fixed_len, dtype=np.int64)
@@ -1777,15 +1739,23 @@ class RootTreeReader:
         )
         return self._native(vals, info), cts, None
 
+    def counts(self, name: str) -> np.ndarray | None:
+        """Per-entry element counts of a jagged branch; None for scalar
+        and fixed-length branches."""
+        info = self.branches[name]
+        if info.counts is not None:
+            return self.array(info.counts)
+        if info.from_offsets and info.string != 1:
+            return self._range_column(name, 0, self.entries)[1]
+        return None
+
     def inner_counts(self, name: str) -> np.ndarray | tuple | None:
         """Sub-entry counts of a nested branch: depth 2 returns the
         per-inner-vector element counts; depth 3 returns the
         ``(per-middle-vector, per-inner-vector)`` count pair."""
         if self.branches[name].depth < 2:
             return None
-        if name not in self._inner_counts_cache:
-            self.array(name)
-        return self._inner_counts_cache[name]
+        return self._range_column(name, 0, self.entries)[2]
 
     def _entry_offsets(self, key: _Key, buf: bytes, border: int) -> np.ndarray:
         """Per-entry byte offsets (0-based into the content region) from
@@ -1815,140 +1785,79 @@ class RootTreeReader:
             )
         return byte_counts // itemsize
 
-    def counts(self, name: str) -> np.ndarray | None:
-        info = self.branches[name]
-        if info.counts is not None:
-            return self.array(info.counts)
-        if info.from_offsets:
-            if name not in self._counts_cache:
-                self.array(name)
-            return self._counts_cache[name]
-        return None
-
     def to_arrow(
         self,
         columns: list[str] | None = None,
         entry_start: int = 0,
         entry_stop: int | None = None,
     ):
-        """One Arrow table for the tree (or an entry range of it): scalar
-        branches as flat columns, jagged branches as list columns,
-        fixed-size arrays as ``fixed_len``-wide lists.
+        """One Arrow table for the entry range [entry_start, entry_stop)
+        of the tree (the whole tree by default): scalar branches as flat
+        columns, jagged branches as list columns, fixed-size arrays as
+        ``fixed_len``-wide lists.
 
-        With an entry range, only the baskets overlapping the range are
-        decompressed per column — peak memory is range-sized, not
-        file-sized."""
+        Only the baskets overlapping the range are decompressed, each once
+        per call: a counts branch is read once for all the members it
+        frames. The reader keeps no decoded arrays between calls, only
+        the payload of each column's basket that straddles
+        ``entry_stop``, which an adjacent next range starts in."""
         import pyarrow as pa
 
         names = columns if columns is not None else list(self.branches)
-        if entry_start != 0 or entry_stop is not None:
-            stop = self.entries if entry_stop is None else min(entry_stop, self.entries)
-            return self._to_arrow_range(names, entry_start, stop)
-        cols, fields = [], []
-        n = self.entries
+        e1 = self.entries if entry_stop is None else min(entry_stop, self.entries)
+        e0 = min(entry_start, e1)
+        lo: dict[str, int] = {}  # counts branch -> earliest member basket start
+        for name in names:
+            c = self.branches[name].counts
+            if c is not None:
+                b_lo = self._basket_span(name, e0, e1)[0]
+                lo[c] = min(lo.get(c, e0), int(self.basket_entry_index(name)[b_lo]))
+        self._edge_offs = {self._edge_off(n, e1) for n in {*names, *lo}} - {None}
+        spans = {}
+        for c, s in lo.items():
+            v = self._range_column(c, s, e1)[0]
+            spans[c] = (s, v, _cum(v))
+        arrays = []
         for name in names:
             info = self.branches[name]
-            vals = self.array(name)
+            vals, cts, inner = self._range_column(name, e0, e1, spans)
+            arr = _pa_values(vals)
             if info.depth >= 2:
-                outer = self._counts_cache[name]
-                if info.depth == 3:
-                    mid, inner = self._inner_counts_cache[name]
-                else:
-                    mid, inner = None, self._inner_counts_cache[name]
-                in_off = np.zeros(len(inner) + 1, dtype=np.int32)
-                np.cumsum(inner, out=in_off[1:])
-                arr = pa.ListArray.from_arrays(pa.array(in_off), _pa_values(vals))
-                if mid is not None:
-                    m_off = np.zeros(len(mid) + 1, dtype=np.int32)
-                    np.cumsum(mid, out=m_off[1:])
-                    arr = pa.ListArray.from_arrays(pa.array(m_off), arr)
-                out_off = np.zeros(len(outer) + 1, dtype=np.int32)
-                np.cumsum(outer, out=out_off[1:])
-                arr = pa.ListArray.from_arrays(pa.array(out_off), arr)
-                cols.append(arr)
-                fields.append(pa.field(name, arr.type))
-                continue
-            if info.string == 1:
-                arr = _pa_values(vals)
-                cols.append(arr)
-                fields.append(pa.field(name, arr.type))
-                continue
-            if info.counts is not None or info.from_offsets:
-                cts = (
-                    self._counts_cache[name]
-                    if info.from_offsets
-                    else self.array(info.counts)
-                ).astype(np.int64)
-                if cts.sum() != len(vals):
-                    raise RootFileError(
-                        f"{self.path}:{name}: counts/content mismatch "
-                        f"({cts.sum()} vs {len(vals)})"
-                    )
-                offsets = np.zeros(len(cts) + 1, dtype=np.int32)
-                np.cumsum(cts, out=offsets[1:])
-                arr = pa.ListArray.from_arrays(pa.array(offsets), _pa_values(vals))
-            elif info.fixed_len > 1:
-                offsets = np.arange(n + 1, dtype=np.int32) * info.fixed_len
-                arr = pa.ListArray.from_arrays(pa.array(offsets), _pa_values(vals))
-            else:
-                if len(vals) != n:
-                    raise RootFileError(
-                        f"{self.path}:{name}: {len(vals)} values for {n} entries"
-                    )
-                arr = _pa_values(vals)
-            cols.append(arr)
-            fields.append(pa.field(name, arr.type))
-        return pa.Table.from_arrays(cols, schema=pa.schema(fields))
-
-    def _to_arrow_range(self, names: list[str], e0: int, e1: int):
-        import pyarrow as pa
-
-        cols, fields = [], []
-        n = e1 - e0
-        for name in names:
-            info = self.branches[name]
-            vals, cts, inner = self._range_column(name, e0, e1)
-            if info.depth >= 2:
-                mid = None
-                if info.depth == 3:
-                    mid, inner = inner
-                in_off = np.zeros(len(inner) + 1, dtype=np.int64)
-                np.cumsum(inner, out=in_off[1:])
-                arr = pa.ListArray.from_arrays(
-                    pa.array(in_off, type=pa.int32()), _pa_values(vals)
-                )
-                if mid is not None:
-                    m_off = np.zeros(len(mid) + 1, dtype=np.int64)
-                    np.cumsum(mid, out=m_off[1:])
-                    arr = pa.ListArray.from_arrays(
-                        pa.array(m_off, type=pa.int32()), arr
-                    )
-                out_off = np.zeros(len(cts) + 1, dtype=np.int64)
-                np.cumsum(cts, out=out_off[1:])
-                arr = pa.ListArray.from_arrays(
-                    pa.array(out_off, type=pa.int32()), arr
-                )
+                levels = (*inner[::-1], cts) if info.depth == 3 else (inner, cts)
+                for level in levels:
+                    arr = pa.ListArray.from_arrays(pa.array(_offsets(level)), arr)
             elif cts is not None:
-                offsets = np.zeros(len(cts) + 1, dtype=np.int64)
-                np.cumsum(cts, out=offsets[1:])
-                if offsets[-1] != len(vals):
+                off = _offsets(cts)
+                if off[-1] != len(vals):
                     raise RootFileError(
                         f"{self.path}:{name}: counts/content mismatch in "
-                        f"range [{e0},{e1}) ({offsets[-1]} vs {len(vals)})"
+                        f"range [{e0},{e1}) ({off[-1]} vs {len(vals)})"
                     )
-                arr = pa.ListArray.from_arrays(
-                    pa.array(offsets, type=pa.int32()), _pa_values(vals)
+                arr = pa.ListArray.from_arrays(pa.array(off), arr)
+            elif len(vals) != e1 - e0:
+                raise RootFileError(
+                    f"{self.path}:{name}: {len(vals)} values for "
+                    f"{e1 - e0} entries in range [{e0},{e1})"
                 )
-            else:
-                if len(vals) != n:
-                    raise RootFileError(
-                        f"{self.path}:{name}: {len(vals)} values for "
-                        f"{n} entries in range [{e0},{e1})"
-                    )
-                arr = _pa_values(vals)
-            cols.append(arr)
-            fields.append(pa.field(name, arr.type))
-        return pa.Table.from_arrays(cols, schema=pa.schema(fields))
+            arrays.append(arr)
+        self._edge = {o: b for o, b in self._edge.items() if o in self._edge_offs}
+        return pa.Table.from_arrays(arrays, names=names)
+
+
+def _cat(parts: list) -> np.ndarray:
+    return np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
+
+
+def _cum(counts: np.ndarray) -> np.ndarray:
+    """Running totals of per-entry counts with a leading 0 (int64)."""
+    return np.concatenate([[0], np.cumsum(counts, dtype=np.int64)])
+
+
+def _offsets(counts: np.ndarray) -> np.ndarray:
+    """Arrow list offsets (int32) of per-entry counts."""
+    off = np.zeros(len(counts) + 1, dtype=np.int32)
+    np.cumsum(counts, out=off[1:])
+    return off
 
 
 # Process-level reader LRU: opening a tree parses the TKey directory,
@@ -1956,10 +1865,11 @@ class RootTreeReader:
 # that repeated gate/planner calls over the same small files paid again
 # and again (root_scan spent seconds of its wall here). Keyed by
 # (path, tree, size, mtime_ns) so any rewrite invalidates. Capacity is
-# small: entries hold an mmap plus the reader's payload LRU, and reuse
-# only matters for the same files hit repeatedly (driver planning,
-# reused Python workers). Not thread-safe; Spark Python workers and the
-# driver planner are single-threaded per process.
+# small: entries hold an mmap plus the payloads of the baskets that
+# straddle the end of their last read range, and reuse only matters
+# for the same files hit repeatedly (driver planning, reused Python
+# workers). Not thread-safe; Spark Python workers and the driver
+# planner are single-threaded per process.
 _TREE_CACHE: "OrderedDict[tuple, object]" = OrderedDict()
 _TREE_CACHE_MAX = 8
 
@@ -2201,7 +2111,6 @@ def read_histograms(path: str) -> dict:
     duplicate names the highest cycle wins."""
     r = RootTreeReader.__new__(RootTreeReader)
     r.path = path
-    r.payload_cache_size = 0
     r._data = _map_file(path)
     data = r._data
     if data[:4] != b"root":
@@ -2218,7 +2127,7 @@ def read_histograms(path: str) -> dict:
             off += -k.nbytes
             continue
         if k.cls in _HIST_CLASSES and cycles.get(k.name, -1) < k.cycle:
-            out[k.name] = _parse_hist(k.cls, r._payload(k))
+            out[k.name] = _parse_hist(k.cls, r._payload_raw(k))
             cycles[k.name] = k.cycle
         off += k.nbytes
     return out

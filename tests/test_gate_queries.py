@@ -152,6 +152,32 @@ def test_media_fixtures_keyed_by_corpus_path(spark, tmp_path):
     assert len(made) == 2
 
 
+def test_media_fixture_follows_corpus_rewritten_in_place(spark, tmp_path):
+    """A corpus rewritten in place at the same path with fewer documents
+    gets a new media fixture: the audio gate counts the new rows."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from coffea_spark.queries import REGISTRY, _audio_fixture
+
+    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+    d = str(tmp_path / "corpus")
+    made = set()
+    try:
+        for frame in (docs, docs.orderBy("doc_id").limit(docs.count() // 2)):
+            frame.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(d, "documents.parquet")
+            )
+            made.add(_audio_fixture(spark, d))
+            out = REGISTRY["audio_features"].fn(spark, d)
+            assert out.agg(F.sum("n_clips")).first()[0] == frame.count()
+    finally:
+        for fx in made:
+            shutil.rmtree(fx, ignore_errors=True)
+    assert len(made) == 2
+
+
 def test_fixture_without_success_marker_is_rebuilt(tmp_path):
     """A fixture dir without _SUCCESS (an interrupted build) is rebuilt
     in place, not read; one with _SUCCESS is reused as is."""

@@ -154,3 +154,51 @@ def test_read_root_is_one_python_scan(spark, tmp_path):
     plan = _executed_plan(df)
     assert "MapInPandas" not in plan and not re.search(r"\bExchange\b", plan), plan
     assert df.rdd.getNumPartitions() == len(plan_chunks(paths, None, 4)) == 7
+
+
+def test_root_read_decompresses_each_basket_once(tmp_path):
+    """``to_arrow`` over a counts branch and two jagged members it frames
+    decompresses each overlapping basket exactly once per call, for the
+    whole tree and for a mid-file range; an adjacent next range does not
+    decompress again the baskets that straddle the border."""
+    from collections import Counter
+
+    from coffea_spark.root_reader import RootTreeReader
+    from coffea_spark.root_writer import write_root_file
+    from tests.test_root_writer import _cols
+
+    path = str(tmp_path / "t.root")
+    write_root_file(
+        _cols(), path, counts_map={"Muon_pt": "nMuon", "Muon_eta": "nMuon"},
+        basket_rows=128,
+    )
+    names = ["nMuon", "Muon_pt", "Muon_eta"]
+    r = RootTreeReader(path)
+    assert min(len(r._baskets[n]) for n in names) == 4
+    seen = Counter()
+    raw = r._payload_raw
+
+    def counting(key):
+        seen[key.off] += 1
+        return raw(key)
+
+    r._payload_raw = counting
+
+    def overlapping(e0, e1):
+        out = Counter()
+        for n in names:
+            idx = r.basket_entry_index(n)
+            out.update(
+                k.off for k, a, b in zip(r._baskets[n], idx[:-1], idx[1:])
+                if a < e1 and b > e0
+            )
+        return out
+
+    for e0, e1 in [(0, 500), (200, 300)]:
+        seen.clear()
+        r.to_arrow(names, e0, e1)
+        assert seen == overlapping(e0, e1), (e0, e1)
+    seen.clear()
+    r.to_arrow(names, 300, 400)  # the baskets of [256, 384) were read for [200, 300)
+    assert seen == overlapping(300, 400) - overlapping(200, 300)
+    assert sum(seen.values()) == 3

@@ -7,8 +7,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from coffea_spark.rntuple import RNTupleReader, rntuple_to_arrow
-from coffea_spark.root_reader import RootTreeReader, open_tree, read_root
+from coffea_spark.rntuple import RNTupleReader
+from coffea_spark.root_reader import RootTreeReader, open_tree, read_root, root_to_arrow
 
 from coffea_spark.testing import SAMPLES
 
@@ -72,7 +72,7 @@ def test_open_tree_dispatch():
     assert isinstance(r, RNTupleReader)
     t = open_tree(f"{SAMPLES}/nano_dy.root")
     assert isinstance(t, RootTreeReader)
-    tbl = rntuple_to_arrow(
+    tbl = root_to_arrow(
         f"{SAMPLES}/nano_dy_rntuple.root", columns=["run", "Muon_pt"]
     )
     assert tbl.num_rows == 40

@@ -1,12 +1,13 @@
-"""Per-query isolation harness for the r13 optimization round.
+"""Per-query isolation harness.
 
 Times named registry queries on an otherwise-idle session (guide §1):
 ``--reps`` repetitions each, reporting min/median, with the timed action
 selectable between the gate's own ``.collect()`` (the bench's
 methodology) and the noop sink (``--noop``, guide §1.4 — computes every
-column, excludes result pickling). Optionally dumps
-``.explain("formatted")`` to ``plans/r13/<query>_<tag>.txt`` for the
-plan-claim evidence trail (``--plans <tag>``).
+column, excludes result pickling). ``--plans <tag>`` also dumps
+``.explain("formatted")`` to ``plans/<round>/<query>_<tag>.txt``: a
+local dump for comparing plans before and after a change, which git
+ignores and nothing reads.
 
 Usage:
   python tools/profile_query.py [--sf DIR] [--reps N] [--noop]
