@@ -2,14 +2,14 @@
 
 - exact cosine / dot as pure ``zip_with``+``aggregate`` column math
   (sequential double-precision accumulation -> bit-stable across engines)
-- brute-force top-k against a literal query vector: one scan + one tiny
-  top-k reduce. At 100 TB this is the "gold" path you run on a sample.
-- hyperplane-LSH bucketing (SimHash for vectors) as the scale path:
-  bucket id is per-row column math from seeded deterministic planes;
-  candidate search touches only matching buckets (+ optional multi-probe).
-- IVF-style variant: coarse-quantize by bucket, search the n_probe
-  nearest buckets by centroid... approximated here by Hamming-adjacent
-  buckets to stay shuffle-free (no training pass).
+- brute-force top-k against a literal query vector (:func:`topk_cosine`):
+  one scan + one tiny top-k reduce, the reference the indexes are
+  graded against.
+- every index serves a query TABLE through one shape: a local
+  candidate set per query (a per-batch matmul top-k for the exact and
+  PQ scans, a broadcast probe join for hyperplane-LSH buckets and IVF
+  lists), then one global ranked reduction per query (:func:`_top_k`).
+  The corpus is never shuffled; only candidate rows are.
 """
 
 from __future__ import annotations
@@ -105,6 +105,21 @@ def _assert_small_side(df: DataFrame, cap: int, what: str) -> None:
             "small-table path; use the LSH/IVF bucketed candidate joins "
             "(or raise the cap explicitly if you know the memory fits)"
         )
+
+
+def _top_k(df: DataFrame, part: str, order: list[Column], k: int) -> DataFrame:
+    """The first ``k`` rows of each ``part`` group of ``df`` by
+    ``order``: the one ranked reduction every search path here ends in.
+    ``df`` holds only candidate rows (per-batch winners or probe-join
+    pairs), so the window's shuffle never carries the corpus."""
+    from pyspark.sql import Window as W
+
+    w = W.partitionBy(part).orderBy(*order)
+    return (
+        df.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= k)
+        .drop("_rk")
+    )
 
 
 def topk_cosine(
@@ -238,16 +253,11 @@ def exact_topk_join(
                 }
             )
 
-    from pyspark.sql import Window as W
-
     batch_winners = corpus.select(
         F.col(id_col).cast("long").alias(id_col), vec_col
     ).mapInPandas(gen, schema=f"{qid_col} long, {id_col} long, cosine double")
-    w = W.partitionBy(qid_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        batch_winners.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select(qid_col, id_col, "cosine")
+    return _top_k(
+        batch_winners, qid_col, [F.col("cosine").desc(), F.col(id_col)], k
     )
 
 
@@ -272,35 +282,38 @@ def hyperplane_bucket(vec: Column, planes: np.ndarray) -> Column:
     return out
 
 
-def ann_topk(
-    df: DataFrame,
-    query: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    max_hamming: int = 1,
-    seed: int = 42,
+def _probe_join(
+    queries: DataFrame,
+    corpus: DataFrame,
+    probes: Column,
+    key: str,
+    k: int,
+    qid_col: str,
+    qvec_col: str,
+    id_col: str,
+    vec_col: str,
 ) -> DataFrame:
-    """Approximate top-k: restrict to vectors whose hyperplane bucket is
-    within ``max_hamming`` bits of the query's bucket, then exact cosine.
-    Candidate fraction ~ C(n_planes, <=max_hamming) / 2^n_planes; the
-    filter is pushed into the scan stage (bucket is column math)."""
-    q = np.asarray(query, dtype=float)
-    planes = hyperplane_planes(len(q), n_planes, seed)
-    qbits = 0
-    for j in range(n_planes):
-        if float(planes[j] @ q) > 0:
-            qbits |= 1 << j
-    bucket = hyperplane_bucket(F.col(vec_col), planes)
-    mask = F.bit_count(bucket.bitwiseXOR(F.lit(qbits))) <= max_hamming
-    sim = F.round(cosine(F.col(vec_col), _lit_vec(query)), 6)
-    return (
-        df.filter(mask)
-        .select(F.col(id_col), sim.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
+    """Per-query top-k over the corpus rows whose ``key`` is one of the
+    query's ``probes`` (an array column over ``queries``): each query
+    row explodes to one row per probe key, the exploded query side
+    (|Q| x probes rows, tiny) broadcasts into an equi-join on ``key``,
+    and :func:`_top_k` ranks the candidates by (rounded cosine desc,
+    id). The corpus is never shuffled and no corpus pairs are
+    enumerated.
+
+    Norms are factored OUT of the join: norm(vec)/norm(qvec) are
+    per-ROW facts recomputed per candidate PAIR if left inside
+    `cosine` (measured ~3x of the serve cost at sf1). Same expressions
+    on the same inputs in the same order -> bit-identical cosines."""
+    q = queries.withColumn("_qn", norm(F.col(qvec_col))).select(
+        qid_col, qvec_col, "_qn", F.explode(probes).alias(key)
     )
+    c = corpus.withColumn("_vn", norm(F.col(vec_col)))
+    sim = F.round(
+        dot(F.col(vec_col), F.col(qvec_col)) / (F.col("_vn") * F.col("_qn")), 6
+    )
+    pairs = F.broadcast(q).join(c, key).select(qid_col, id_col, sim.alias("cosine"))
+    return _top_k(pairs, qid_col, [F.col("cosine").desc(), F.col(id_col)], k)
 
 
 def ann_join(
@@ -317,25 +330,21 @@ def ann_join(
     dim: int | None = None,
 ) -> DataFrame:
     """Batched multi-probe hyperplane-LSH ANN: per-QUERY top-k over a
-    query TABLE, the production serving shape (single-vector
-    :func:`ann_topk` is the interactive one-off).
+    query TABLE (a one-row table is the single-vector lookup).
 
-    Multi-probe is done on the QUERY side: each query row explodes into
+    Multi-probe is done on the QUERY side: each query's probe keys are
     its own bucket plus every bucket within Hamming distance
     ``max_hamming`` (n_planes+1 probes at distance 1, plus all bit-pairs
-    at distance 2), then equi-joins the corpus on bucket. The corpus is
-    hashed/bucketed ONCE — at 100 TB the assigned corpus is written
-    partitioned by bucket so each probe is partition pruning, and the
-    exploded query side (|Q| x probes rows, tiny) broadcasts; nothing
-    ever enumerates corpus pairs. Exact cosine ranks candidates; ties
+    at distance 2), matched against the corpus bucket through
+    :func:`_probe_join`. The corpus is hashed/bucketed ONCE — at
+    100 TB the assigned corpus is written partitioned by bucket so each
+    probe is partition pruning. Exact cosine ranks candidates; ties
     broken by (rounded cosine desc, id).
     """
     if dim is None:
         raise ValueError("pass dim (embedding dimensionality)")
     if max_hamming > 2:
         raise ValueError("max_hamming <= 2 (probe count grows C(n_planes, d))")
-    from pyspark.sql import Window as W
-
     planes = hyperplane_planes(dim, n_planes, seed)
     probes = [F.col("_qb")]
     if max_hamming >= 1:
@@ -346,29 +355,10 @@ def ann_join(
             for j in range(n_planes)
             for l in range(j + 1, n_planes)
         ]
-    # norms factored OUT of the join: norm(vec)/norm(qvec) are per-ROW
-    # facts recomputed per candidate PAIR if left inside `cosine` —
-    # measured ~3x of the serve cost at sf1. Same expressions on the
-    # same inputs in the same order -> bit-identical cosines.
-    q = (
-        queries.withColumn("_qb", hyperplane_bucket(F.col(qvec_col), planes))
-        .withColumn("_qn", norm(F.col(qvec_col)))
-        .select(qid_col, qvec_col, "_qn", F.explode(F.array(*probes)).alias("_bucket"))
-    )
-    c = corpus.withColumn("_bucket", hyperplane_bucket(F.col(vec_col), planes)).withColumn(
-        "_vn", norm(F.col(vec_col))
-    )
-    sim = F.round(
-        dot(F.col(vec_col), F.col(qvec_col)) / (F.col("_vn") * F.col("_qn")), 6
-    )
-    w = W.partitionBy(qid_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        F.broadcast(q)
-        .join(c, "_bucket")
-        .select(qid_col, id_col, sim.alias("cosine"))
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select(qid_col, id_col, "cosine")
+    return _probe_join(
+        queries.withColumn("_qb", hyperplane_bucket(F.col(qvec_col), planes)),
+        corpus.withColumn("_bucket", hyperplane_bucket(F.col(vec_col), planes)),
+        F.array(*probes), "_bucket", k, qid_col, qvec_col, id_col, vec_col,
     )
 
 
@@ -384,96 +374,25 @@ def ivf_probe_join(
     vec_col: str = "embedding",
     list_col: str = "_list",
 ) -> DataFrame:
-    """Batched IVF search over a query TABLE: each query's ``n_probe``
-    nearest coarse centroids are computed as scan-stage column math
-    (argsort over literal centroid distances — no UDF, no collect),
-    exploded to (query, probe-list) rows, and equi-joined against the
-    pre-ASSIGNED corpus on list id. Against a corpus written
-    partitioned by list id (:func:`ivf_write_index`) the join key is
-    partition pruning per probe; the exploded query side broadcasts.
-    Cost ~ n_probe/n_lists of brute force per query, independent of
-    query count fan-in. Dominant-cell corpora (one list ≫ the rest —
-    the measured 1.5x serve penalty in BENCH_SKEW.md) should refine
-    the quantizer with :func:`ivf_refine_oversized` before serving;
-    this function needs no change, it just probes the finer lists."""
-    from pyspark.sql import Window as W
-
-    entries = F.array(
-        *[
-            F.struct(
-                (
-                    F.lit(float(centroids[i] @ centroids[i]))
-                    - 2.0 * dot(F.col(qvec_col), _lit_vec(centroids[i]))
-                ).alias("d"),
-                F.lit(i).alias("i"),
-            )
-            for i in range(centroids.shape[0])
-        ]
-    )
+    """Batched IVF search over a query TABLE (a one-row table is the
+    single-vector lookup): each query's ``n_probe`` nearest coarse
+    centroids are computed as scan-stage column math (array_sort over
+    the literal centroid distances of :func:`_centroid_dists` — no UDF,
+    no collect) and matched against the pre-ASSIGNED corpus
+    (:func:`ivf_assign_table`) on list id through :func:`_probe_join`.
+    Against a corpus written partitioned by list id
+    (:func:`ivf_write_index`) the join key is partition pruning per
+    probe. Cost ~ n_probe/n_lists of brute force per query, independent
+    of query count fan-in. Dominant-cell corpora (one list ≫ the rest —
+    the measured 1.5x serve penalty in BENCH_SKEW.md) should refine the
+    quantizer with :func:`ivf_refine_oversized` before serving; this
+    function needs no change, it just probes the finer lists."""
     probe_ids = F.transform(
-        F.slice(F.array_sort(entries), 1, n_probe), lambda s: s["i"]
+        F.slice(F.array_sort(_centroid_dists(F.col(qvec_col), centroids)), 1, n_probe),
+        lambda s: s["i"],
     )
-    # norms factored out of the probe join (per-row facts, not per-pair
-    # — see ann_join); bit-identical to cosine() on the same inputs
-    q = queries.withColumn("_qn", norm(F.col(qvec_col))).select(
-        qid_col, qvec_col, "_qn", F.explode(probe_ids).alias(list_col)
-    )
-    sim = F.round(
-        dot(F.col(vec_col), F.col(qvec_col)) / (F.col("_vn") * F.col("_qn")), 6
-    )
-    w = W.partitionBy(qid_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        F.broadcast(q)
-        .join(assigned.withColumn("_vn", norm(F.col(vec_col))), list_col)
-        .select(qid_col, id_col, sim.alias("cosine"))
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select(qid_col, id_col, "cosine")
-    )
-
-
-def knn_join_blocked(
-    left: DataFrame,
-    right: DataFrame,
-    k: int,
-    id_left: str,
-    id_right: str,
-    vec_col: str = "embedding",
-    n_planes: int = 10,
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate k-NN join: both sides bucketed by the same hyperplanes,
-    equi-join on bucket, per-left top-k by window. The all-pairs explosion
-    is bounded by bucket sizes (2^n_planes buckets)."""
-    from pyspark.sql import Window as W
-
-    if dim is None:
-        raise ValueError("pass dim (embedding dimensionality)")
-    planes = hyperplane_planes(dim, n_planes, seed)
-    lb = left.withColumn("_bucket", hyperplane_bucket(F.col(vec_col), planes))
-    rb = right.withColumn("_bucket", hyperplane_bucket(F.col(vec_col), planes))
-    a = lb.select(
-        "_bucket",
-        F.col(id_left).alias("_lid"),
-        F.col(vec_col).alias("_lv"),
-        norm(F.col(vec_col)).alias("_ln"),
-    )
-    b = rb.select(
-        "_bucket",
-        F.col(id_right).alias("_rid"),
-        F.col(vec_col).alias("_rv"),
-        norm(F.col(vec_col)).alias("_rn"),
-    )
-    pairs = a.join(b, "_bucket").withColumn(
-        "cosine",
-        dot(F.col("_lv"), F.col("_rv")) / (F.col("_ln") * F.col("_rn")),
-    )
-    w = W.partitionBy("_lid").orderBy(F.col("cosine").desc(), F.col("_rid"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("_lid").alias(id_left), F.col("_rid").alias(id_right), "cosine", "rank")
+    return _probe_join(
+        queries, assigned, probe_ids, list_col, k, qid_col, qvec_col, id_col, vec_col
     )
 
 
@@ -512,18 +431,19 @@ def ivf_train(
     sample = _bounded_vec_sample(df, vec_col, max_sample)
     if sample.shape[0] < n_lists:
         raise ValueError(f"need >= {n_lists} vectors to train, got {sample.shape[0]}")
-    return _kmeans_blas(sample, n_lists, seed, max_iter)
+    return _kmeans(sample, n_lists, seed, max_iter)
 
 
-def _kmeans_blas(sample: np.ndarray, k: int, seed: int, max_iter: int = 20) -> np.ndarray:
+def _kmeans(sample: np.ndarray, k: int, seed: int, max_iter: int = 20) -> np.ndarray:
     """Deterministic Lloyd's k-means on an in-memory sample in matmul
-    (BLAS) form — :func:`ivf_train`'s quantizer trainer. The input is
-    sorted before seeded init, so the result is a pure function of the
-    sample MULTISET.
+    (BLAS) form — the trainer of :func:`ivf_train`'s quantizer and of
+    :func:`pq_train`'s per-subvector codebooks. The input is sorted
+    before seeded init, so the result is a pure function of the sample
+    MULTISET.
     Memory is O(S·k): the naive ``(sample[:,None,:]-cents)``
-    broadcasting (see `_kmeans_fixed`) materializes S×k×dim — 1 TB at
-    a 65536-point sample with 256 lists — and caps k at toy sizes; the
-    production quantizer scales n_lists ~ sqrt(corpus)."""
+    broadcasting materializes S×k×dim — 1 TB at a 65536-point sample
+    with 256 lists — and caps k at toy sizes; the production quantizer
+    scales n_lists ~ sqrt(corpus)."""
     sample = sample[np.lexsort(sample.T[::-1])]  # order-independence
     rng = np.random.default_rng(seed)
     sn = (sample * sample).sum(axis=1)
@@ -597,8 +517,6 @@ def ivf_refine_oversized(
     centroids: np.ndarray,
     max_list_size: int,
     vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 20,
     max_sample: int = 65536,
     rounds: int = 4,
     assigned: DataFrame | None = None,
@@ -641,9 +559,7 @@ def ivf_refine_oversized(
     next round bisects just that cell. An in-cap corpus exits after
     the first size check, so the default rounds cost nothing when
     inert; each firing round costs one assignment scan + the tiny
-    size agg. ``seed``/``max_iter`` are DEPRECATED no-ops kept only
-    for signature stability — the bisection is RNG-free and
-    non-iterative.
+    size agg.
 
     Deterministic: sub-samples are hash-ordered (_bounded_vec_sample),
     each sub-split is a pure function of its list's content-sorted
@@ -701,15 +617,12 @@ def ivf_refine_oversized(
     return cents
 
 
-def ivf_assign(vec: Column, centroids: np.ndarray) -> Column:
-    """List id = argmin_c ||v - c||^2 = argmin_c (|c|^2 - 2 v.c) — pure
-    column math against literal centroid arrays (no UDF, no shuffle).
-
-    The argmin is array_min over (distance, id) structs — NOT a chained
-    when/otherwise fold, which references the running best twice per
-    level and doubles the expression tree each centroid (2^n_lists
-    nodes stalls the analyzer)."""
-    entries = F.array(
+def _centroid_dists(vec: Column, centroids: np.ndarray) -> Column:
+    """array<struct<d, i>>: per centroid ``i`` the distance key
+    ``d = |c_i|^2 - 2 v.c_i`` (||v - c_i||^2 less the per-row |v|^2),
+    pure column math against literal centroid arrays. Ordering its
+    structs orders the centroids by distance, ties to the smaller id."""
+    return F.array(
         *[
             F.struct(
                 (F.lit(float(centroids[i] @ centroids[i])) - 2.0 * dot(vec, _lit_vec(centroids[i]))).alias("d"),
@@ -718,17 +631,41 @@ def ivf_assign(vec: Column, centroids: np.ndarray) -> Column:
             for i in range(centroids.shape[0])
         ]
     )
-    return F.array_min(entries)["i"]
 
 
-def ivf_assign_batched(vec_col: str, centroids: np.ndarray) -> Column:
-    """List assignment as an Arrow-batched pandas UDF: per batch one
-    ``argmin(|c|^2 - 2 X C^T)`` matmul. For dense linear algebra over
-    many centroids this beats the literal-array column-math form
-    (:func:`ivf_assign`) — the HOF expression is O(n_lists x dim) codegen
-    per row while the matmul is one vectorized BLAS call per Arrow
-    batch; same float64 arithmetic, same argmin tie-break (first
-    minimum). Centroids ride the closure (KBs)."""
+def ivf_assign(vec: Column, centroids: np.ndarray) -> Column:
+    """List id = argmin_c ||v - c||^2 = argmin_c (|c|^2 - 2 v.c) — pure
+    column math against literal centroid arrays (no UDF, no shuffle).
+    Its sequential double sums are the spelling the ``semdedup`` gate's
+    DuckDB oracle reproduces exactly; :func:`ivf_assign_table` is the
+    matmul form for serving.
+
+    The argmin is array_min over (distance, id) structs — NOT a chained
+    when/otherwise fold, which references the running best twice per
+    level and doubles the expression tree each centroid (2^n_lists
+    nodes stalls the analyzer)."""
+    return F.array_min(_centroid_dists(vec, centroids))["i"]
+
+
+def ivf_assign_table(
+    df: DataFrame,
+    centroids: np.ndarray,
+    vec_col: str = "embedding",
+    list_col: str = "_list",
+) -> DataFrame:
+    """Materializable list assignment: the precompute step of the IVF
+    index. Assign ONCE (cache, or better: write), then serve every
+    query from the assigned table — k-means inference must not hide
+    inside each lookup. See :func:`ivf_write_index` for the persisted
+    form.
+
+    An Arrow-batched pandas UDF: per batch one ``argmin(|c|^2 - 2 X
+    C^T)`` matmul. For dense linear algebra over many centroids this
+    beats the literal-array column-math form (:func:`ivf_assign`) — the
+    HOF expression is O(n_lists x dim) codegen per row while the matmul
+    is one vectorized BLAS call per Arrow batch; same float64
+    arithmetic, same argmin tie-break (first minimum). Centroids ride
+    the closure (KBs)."""
     c = np.ascontiguousarray(centroids, dtype=float)
     c2 = (c * c).sum(axis=1)
 
@@ -740,21 +677,7 @@ def ivf_assign_batched(vec_col: str, centroids: np.ndarray) -> Column:
         d = c2[None, :] - 2.0 * (x @ c.T)
         return pd.Series(d.argmin(axis=1).astype("int32"))
 
-    return assign(vec_col)
-
-
-def ivf_assign_table(
-    df: DataFrame,
-    centroids: np.ndarray,
-    vec_col: str = "embedding",
-    list_col: str = "_list",
-) -> DataFrame:
-    """Materializable list assignment: the precompute step of the IVF
-    index, through the Arrow matmul path (:func:`ivf_assign_batched`).
-    Assign ONCE (cache, or better: write), then serve every query from
-    the assigned table — k-means inference must not hide inside each
-    lookup. See :func:`ivf_write_index` for the persisted form."""
-    return df.withColumn(list_col, ivf_assign_batched(vec_col, centroids))
+    return df.withColumn(list_col, assign(vec_col))
 
 
 def ivf_write_index(
@@ -788,40 +711,6 @@ def ivf_read_index(spark, path: str):
     return spark.read.parquet(os.path.join(path, "lists")), centroids
 
 
-def ivf_topk(
-    df: DataFrame,
-    query: list[float],
-    centroids: np.ndarray,
-    k: int = 10,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    list_col: str = "_list",
-) -> DataFrame:
-    """IVF search: probe the ``n_probe`` lists whose centroids are
-    nearest the query, exact cosine inside them.
-
-    When ``df`` already carries ``list_col`` (from
-    :func:`ivf_assign_table` / :func:`ivf_read_index`) the filter uses
-    it directly — against a partitioned index that is partition pruning,
-    against a cached assignment it skips re-running the quantizer.
-    Otherwise assignment is computed inline (sample/one-off use only;
-    the filter is still scan-stage column math). Recall is tuned by
-    n_probe; cost ~ n_probe/n_lists of brute force."""
-    q = np.asarray(query, dtype=float)
-    d2 = ((centroids - q) ** 2).sum(axis=1)
-    probe = [int(i) for i in np.argsort(d2)[:n_probe]]
-    if list_col not in df.columns:
-        df = ivf_assign_table(df, centroids, vec_col, list_col)
-    sim = F.round(cosine(F.col(vec_col), _lit_vec(query)), 6)
-    return (
-        df.filter(F.col(list_col).isin(probe))
-        .select(F.col(id_col), sim.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
 def knn_classify(
     train: DataFrame,
     test: DataFrame,
@@ -846,9 +735,7 @@ def knn_classify(
     Scale shape: the train side broadcasts when it's a labeled seed set
     (the usual case — labels are scarce), so scoring is a map-side
     cross product over the test scan; ranking is a per-test-row window
-    over k·|test| candidate rows. For train sets too big to broadcast,
-    route through the LSH/IVF bucketed joins first (knn_join_blocked)
-    and apply the same vote — the vote logic below is join-agnostic.
+    over the scored pairs, then a vote window over k·|test| rows.
     """
     from pyspark.sql import Window
 
@@ -874,10 +761,7 @@ def knn_classify(
         ).alias("_cos"),
         "_tid",
     )
-    w = Window.partitionBy("test_id").orderBy(
-        F.col("_cos").desc(), F.col("_tid").asc()
-    )
-    top = scored.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= k)
+    top = _top_k(scored, "test_id", [F.col("_cos").desc(), F.col("_tid").asc()], k)
     votes = top.groupBy("test_id", "true_label", "_tl").agg(
         F.count(F.lit(1)).alias("votes")
     )
@@ -901,34 +785,6 @@ def knn_classify(
 # compressed-vector search for the 100 TB embedding store: 64-dim float32
 # (256 B) -> m bytes per vector, scored by table lookups
 # ---------------------------------------------------------------------------
-
-def _kmeans_fixed(sample: np.ndarray, k: int, seed: int, max_iter: int = 20) -> np.ndarray:
-    """Deterministic Lloyd's k-means on an in-memory sample (pq_train's
-    per-subvector trainer; sorted input => order-independent). Uses the
-    naive S x k x dim broadcasting — fine for PQ's small subvector
-    samples; anything quantizer-sized goes through :func:`_kmeans_blas`."""
-    sample = sample[np.lexsort(sample.T[::-1])]
-    rng = np.random.default_rng(seed)
-    cents = [sample[rng.integers(sample.shape[0])]]
-    for _ in range(1, k):
-        d2 = np.min(
-            ((sample[:, None, :] - np.asarray(cents)[None, :, :]) ** 2).sum(-1), axis=1
-        )
-        p = d2 / d2.sum() if d2.sum() > 0 else None
-        cents.append(sample[rng.choice(sample.shape[0], p=p)])
-    cents = np.asarray(cents, dtype=float)
-    for _ in range(max_iter):
-        d2 = ((sample[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-        lab = d2.argmin(axis=1)
-        new = np.empty_like(cents)
-        for i in range(k):
-            m = lab == i
-            new[i] = sample[m].mean(axis=0) if m.any() else sample[d2.min(axis=1).argmax()]
-        if np.allclose(new, cents):
-            break
-        cents = new
-    return cents
-
 
 def pq_train(
     df: DataFrame,
@@ -959,7 +815,7 @@ def pq_train(
     sub = dim // m
     return np.stack(
         [
-            _kmeans_fixed(sample[:, j * sub : (j + 1) * sub], n_codes, seed + j)
+            _kmeans(sample[:, j * sub : (j + 1) * sub], n_codes, seed + j)
             for j in range(m)
         ]
     )
@@ -1068,17 +924,13 @@ def pq_adc_topk(
         ],
         axis=1,
     )
-    books_k = k
     if rerank and vec_col not in encoded.columns:
         raise ValueError(
             f"rerank needs the raw vectors: encode with pq_encode(..., "
             f"keep_cols=('{vec_col}',)) so '{vec_col}' rides the encoded table"
         )
-    qn = Q / np.where(
-        np.linalg.norm(Q, axis=1, keepdims=True) == 0,
-        1.0,
-        np.linalg.norm(Q, axis=1, keepdims=True),
-    )
+    qnrm = np.linalg.norm(Q, axis=1, keepdims=True)
+    qn = Q / np.where(qnrm == 0, 1.0, qnrm)
 
     def score(batches):
         for pdf in batches:
@@ -1096,7 +948,7 @@ def pq_adc_topk(
                 vn = np.linalg.norm(v, axis=1)
                 vn = np.where(vn == 0, 1.0, vn)
                 short = min(rerank, S.shape[0])
-                kk = min(books_k, short)
+                kk = min(k, short)
                 out = {"qid": [], id_col: [], "cosine": []}
                 for qi in range(len(qids)):
                     cand = np.argpartition(S[:, qi], short - 1)[:short]
@@ -1112,7 +964,7 @@ def pq_adc_topk(
                 yield pd.DataFrame(out)
                 continue
             out = {"qid": [], id_col: [], "adc": []}
-            top = min(books_k, S.shape[0])
+            top = min(k, S.shape[0])
             for qi in range(len(qids)):
                 part = np.argpartition(S[:, qi], top - 1)[:top]
                 out["qid"].extend([qids[qi]] * len(part))
@@ -1120,29 +972,16 @@ def pq_adc_topk(
                 out["adc"].extend(S[part, qi])
             yield pd.DataFrame(out)
 
-    import pyspark.sql.types as TT
-
     # id types follow the INPUT frames (string doc keys work too)
     local = encoded.mapInPandas(
         score,
-        schema=TT.StructType(
+        schema=T.StructType(
             [
-                TT.StructField("qid", queries.schema[qid_col].dataType),
-                TT.StructField(id_col, encoded.schema[id_col].dataType),
-                TT.StructField(
-                    "cosine" if rerank else "adc", TT.DoubleType()
-                ),
+                T.StructField("qid", queries.schema[qid_col].dataType),
+                T.StructField(id_col, encoded.schema[id_col].dataType),
+                T.StructField("cosine" if rerank else "adc", T.DoubleType()),
             ]
         ),
     )
-    from pyspark.sql import Window as W
-
-    if rerank:
-        w = W.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-    else:
-        w = W.partitionBy("qid").orderBy(F.col("adc").asc(), F.col(id_col).asc())
-    return (
-        local.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
+    order = F.col("cosine").desc() if rerank else F.col("adc").asc()
+    return _top_k(local, "qid", [order, F.col(id_col).asc()], k)

@@ -36,7 +36,6 @@ def ttree_to_parquet(
     out_path: str,
     tree: str = "Events",
     branches: Iterable[str] | None = None,
-    step_size: str = "100 MB",
 ) -> None:
     """Convert one ROOT TTree to Parquet, preserving jaggedness as LIST
     columns. For a whole dataset use

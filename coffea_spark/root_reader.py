@@ -2160,14 +2160,10 @@ def read_events(spark, paths, tree: str | None = None, columns=None):
     TreeMaker, EDM4HEP/FCC, ProtoDUNE) — the schema variant is detected
     from the branch names and the matching rewriter applied (the
     reference's per-format factory entry points + schemas/auto.py,
-    collapsed into one call)."""
-    from coffea_spark.schema import NanoAODSchemaSpec, zip_collections
-    from coffea_spark.schemas_variants import SCHEMA_SPECS, detect_schema
+    collapsed into one call). The variant dispatch is
+    :meth:`NanoEvents.from_variant`'s, NanoAOD event-id contract
+    included."""
+    from coffea_spark.nanoevents import NanoEvents
 
     df = read_root(spark, paths, tree=tree, columns=columns)
-    variant = detect_schema(df)
-    if variant == "nanoaod":
-        return NanoAODSchemaSpec.apply(df)
-    if variant == "auto":
-        return zip_collections(df)
-    return SCHEMA_SPECS[variant].apply(df)
+    return NanoEvents.from_variant(df).df

@@ -9,7 +9,7 @@ Spark-first the runtime shrinks to a facade: Spark owns chunking, task
 retries, speculation and locality, so a "fileset" is just
 {dataset: [parquet paths]}, the "processor" is a function
 DataFrame -> result dict, and the merge is accumulator.accumulate.
-Checkpointing = optional intermediate parquet per dataset.
+Checkpointing = one pickled result per completed dataset.
 """
 
 from __future__ import annotations
@@ -75,10 +75,6 @@ def run(
             df = spark.read.parquet(*paths)
             if with_dataset_column:
                 df = df.withColumn("dataset", F.lit(dataset))
-            if checkpoint_dir is not None:
-                ckpt = os.path.join(checkpoint_dir, dataset)
-                df.write.mode("overwrite").parquet(ckpt)
-                df = spark.read.parquet(ckpt)
             results[dataset] = pipeline(df)
         except Exception as exc:  # noqa: BLE001 - partial-result contract
             if on_error == "raise":

@@ -160,7 +160,10 @@ def test_ann_recall(spark):
         vecs[j] = vecs[0] + rng.standard_normal(16).astype(np.float32) * 0.01
     rows = [{"vec_id": i, "embedding": [float(x) for x in vecs[i]]} for i in range(300)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = similarity.ann_topk(df, [float(x) for x in vecs[0]], k=4, n_planes=10, max_hamming=1)
+    query = spark.createDataFrame(
+        [(0, [float(x) for x in vecs[0]])], "qid long, qvec array<double>"
+    )
+    got = similarity.ann_join(query, df, k=4, n_planes=10, max_hamming=1, dim=16)
     ids = {r.vec_id for r in got.collect()}
     # near-identical vectors share the bucket -> found
     assert {0, 1, 2, 3} <= ids
@@ -341,15 +344,24 @@ def test_image_features_real_decoder(spark):
         assert abs(got[i].img_std - a.std()) < 1e-9
 
 
-def test_ivf_topk_recall(spark):
+def _ranked(df):
+    """(vec_id, cosine) rows in the (cosine desc, id) ranking order."""
+    return sorted(((r.vec_id, r.cosine) for r in df.collect()), key=lambda t: (-t[1], t[0]))
+
+
+def _vec0_query(emb):
+    """One-row query table holding the vec_id=0 embedding."""
+    return emb.filter(F.col("vec_id") == 0).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").cast("array<double>").alias("qvec")
+    )
+
+
+def test_ivf_probe_join_recall(spark):
     """IVF: assignments partition the corpus; full-probe search == brute
     force exactly; low-probe search keeps high recall at a fraction of
     the candidates."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
     from coffea_spark.llmdata.similarity import (
-        ivf_assign, ivf_topk, ivf_train, topk_cosine,
+        ivf_assign, ivf_assign_table, ivf_probe_join, ivf_train, topk_cosine,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -357,16 +369,16 @@ def test_ivf_topk_recall(spark):
     assert cents.shape[0] == 4
     query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first().embedding]
 
-    # partition property: every vector gets exactly one list in [0, 8)
+    # partition property: every vector gets exactly one list in [0, 4)
     lists = emb.select(ivf_assign(F.col("embedding"), cents).alias("l")).collect()
     assert all(0 <= r.l < 4 for r in lists)
 
+    assigned, q = ivf_assign_table(emb, cents), _vec0_query(emb)
     brute = [(r.vec_id, r.cosine) for r in topk_cosine(emb, query, k=10).collect()]
-    full = [(r.vec_id, r.cosine)
-            for r in ivf_topk(emb, query, cents, k=10, n_probe=4).collect()]
+    full = _ranked(ivf_probe_join(q, assigned, cents, k=10, n_probe=4))
     assert brute == full  # probing every list == exact
 
-    part = [r.vec_id for r in ivf_topk(emb, query, cents, k=10, n_probe=1).collect()]
+    part = [v for v, _ in _ranked(ivf_probe_join(q, assigned, cents, k=10, n_probe=1))]
     recall = len(set(part) & {v for v, _ in brute}) / 10.0
     assert recall >= 0.3, recall  # deterministic given fixed seed/data
 
@@ -402,32 +414,28 @@ def test_ivf_train_production_list_count(spark):
 
 
 def test_ivf_precompute_and_persisted_index(spark, tmp_path):
-    """The precompute path serves identical results: pre-assigned table
-    (no quantizer re-run) and the partitioned on-disk index both match
-    inline assignment; the index read prunes to the probed lists."""
-    from pyspark.sql import functions as F
-
+    """The precompute path serves identical results: the pre-assigned
+    table and the partitioned on-disk index give the same rows; the
+    index is written one directory per list."""
     from coffea_spark.llmdata.similarity import (
-        ivf_assign_table, ivf_read_index, ivf_topk, ivf_train, ivf_write_index,
+        ivf_assign_table, ivf_probe_join, ivf_read_index, ivf_train, ivf_write_index,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = ivf_train(emb.sample(0.5, seed=1), n_lists=4, seed=42, max_iter=5)
-    query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first().embedding]
-
-    inline = [(r.vec_id, r.cosine) for r in ivf_topk(emb, query, cents, k=8, n_probe=2).collect()]
+    query = _vec0_query(emb)
 
     assigned = ivf_assign_table(emb, cents)
-    pre = [(r.vec_id, r.cosine) for r in ivf_topk(assigned, query, cents, k=8, n_probe=2).collect()]
-    assert pre == inline
+    pre = _ranked(ivf_probe_join(query, assigned, cents, k=8, n_probe=2))
+    assert len(pre) == 8
 
     path = str(tmp_path / "ivf_index")
     ivf_write_index(emb, cents, path)
     loaded, cents2 = ivf_read_index(spark, path)
     assert (cents2 == cents).all()
-    disk = [(r.vec_id, r.cosine) for r in ivf_topk(loaded, query, cents2, k=8, n_probe=2).collect()]
-    assert disk == inline
-    # partition pruning: the probed filter reads only matching list dirs
+    disk = _ranked(ivf_probe_join(query, loaded, cents2, k=8, n_probe=2))
+    assert disk == pre
+    # one dir per list: a probe's join key prunes to the probed dirs
     import os
 
     assert any(d.startswith("_list=") for d in os.listdir(os.path.join(path, "lists")))

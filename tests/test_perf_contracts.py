@@ -202,3 +202,38 @@ def test_root_read_decompresses_each_basket_once(tmp_path):
     r.to_arrow(names, 300, 400)  # the baskets of [256, 384) were read for [200, 300)
     assert seen == overlapping(300, 400) - overlapping(200, 300)
     assert sum(seen.values()) == 3
+
+
+def test_similarity_search_never_shuffles_the_corpus(spark):
+    """Every index serves through one shape: local candidates, then one
+    per-query ranked window. The window's hash exchange on the query id
+    is the only shuffle of each search; the probe joins broadcast the
+    query side, and the corpus is never repartitioned."""
+    from coffea_spark.llmdata import similarity as S
+
+    vecs = np.random.default_rng(3).standard_normal((120, 8))
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>",
+    )
+    queries = spark.createDataFrame(
+        [(i, [float(x) * 1.001 for x in vecs[i]]) for i in (5, 50)],
+        "qid long, qvec array<double>",
+    )
+    cents = S.ivf_train(corpus, n_lists=4, seed=42, max_iter=5)
+    books = S.pq_train(corpus, m=2, n_codes=8, seed=42)
+    encoded = S.pq_encode(corpus, books, keep_cols=("embedding",))
+    searches = {
+        "exact_topk_join": S.exact_topk_join(queries, corpus, k=3),
+        "ann_join": S.ann_join(queries, corpus, k=3, n_planes=4, dim=8),
+        "ivf_probe_join": S.ivf_probe_join(
+            queries, S.ivf_assign_table(corpus, cents), cents, k=3, n_probe=2
+        ),
+        "pq_adc_topk": S.pq_adc_topk(queries, encoded, books, k=3),
+        "pq_adc_topk_rerank": S.pq_adc_topk(queries, encoded, books, k=3, rerank=10),
+    }
+    for name, df in searches.items():
+        plan = _executed_plan(df)
+        shuffles = re.findall(r"\bExchange\b.*", plan)
+        assert len(shuffles) == 1, (name, plan)
+        assert shuffles[0].startswith("Exchange hashpartitioning(qid#"), (name, plan)

@@ -392,3 +392,26 @@ def test_root_datasource_writer_roundtrip(spark, tmp_path):
         ),
     ).collect()[0]
     assert tuple(got) == tuple(want)
+
+
+def test_read_events_enforces_nanoaod_event_ids(spark, tmp_path):
+    """read_events applies the NanoAOD event-id contract of
+    NanoEvents.from_variant: a flat NanoAOD-style file without
+    luminosityBlock raises, and a complete one zips its Muon collection."""
+    from coffea_spark.root_reader import read_events
+
+    cols = {
+        "run": np.full(2, 1, dtype=np.int32),
+        "event": np.arange(2, dtype=np.int64),
+        "Muon_pt": [np.array([30.0, 12.5], dtype=np.float32), np.array([], dtype=np.float32)],
+    }
+    counts = {"Muon_pt": "nMuon"}
+    missing = write_root_file(cols, str(tmp_path / "nolumi.root"), counts_map=counts)
+    with pytest.raises(RuntimeError, match="Missing event_ids"):
+        read_events(spark, [missing])
+    cols["luminosityBlock"] = np.full(2, 3, dtype=np.int32)
+    cols["Muon_eta"] = [np.array([0.5, -1.0], dtype=np.float32), np.array([], dtype=np.float32)]
+    counts["Muon_eta"] = "nMuon"
+    full = write_root_file(cols, str(tmp_path / "nano.root"), counts_map=counts)
+    ev = read_events(spark, [full]).orderBy("event")
+    assert [r[0] for r in ev.select("Muon.pt").collect()] == [[30.0, 12.5], []]

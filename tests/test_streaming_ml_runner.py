@@ -360,6 +360,8 @@ def test_runner_checkpoint_recovery(spark, tmp_path):
     assert out["__failed__"] == {"dsB": "RuntimeError('simulated mid-fileset failure')"}
     assert out["dsA"]["n"] == 10 and out["dsC"]["n"] == 30
     assert out["__total__"]["n"] == 40  # successes only
+    # the recovery unit is the pickled result: no copy of the inputs
+    assert sorted(os.listdir(ckpt)) == ["dsA.result.pkl", "dsC.result.pkl"]
 
     # resume: dsA/dsC load from checkpoint (pipeline NOT re-invoked),
     # dsB recomputes; merged output matches a clean full run
